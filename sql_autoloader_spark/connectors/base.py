@@ -436,7 +436,6 @@ class BaseConnector(ABC):
         _deduped: bool = False,
         _missing_first: bool = False,
         _fast: bool = False,
-        _small: bool = False,
         _on_mismatch=None,
     ) -> None:
         """Validate loaded data by reconstructing the flat frame in SQL.
@@ -511,7 +510,6 @@ class BaseConnector(ABC):
             missing_first=_missing_first,
             keep_grouped=self.expose_reconstruction,
             fast=_fast,
-            small=_small,
             on_mismatch=_on_mismatch,
         )
         if not self.expose_reconstruction:
@@ -685,10 +683,6 @@ class BaseConnector(ABC):
                     _deduped=True,
                     _missing_first=delegated,
                     _fast=fast_compare,
-                    _small=(
-                        running is not None
-                        and running <= ops.SMALL_COMPARE_ROWS
-                    ),
                     _on_mismatch=_run_deferred_checks if deferred else None,
                 )
             except CompareMissingRowsError as e:

@@ -523,7 +523,7 @@ class PostgresConnector(BaseConnector):
     # verification of a TimestampType→timestamp load mismatches.  The
     # conf lock is held across the wrapped call (including its actions);
     # concurrent OTHER-thread conf toggles on the same session serialize
-    # behind it — the documented trade, as in ``ops._aqe_disabled``.
+    # behind it — the documented trade of ``ops.utc_session``.
 
     def insert(self, data: DataFrame, **kwargs) -> None:  # noqa: ANN003
         with ops.utc_session(self.spark):

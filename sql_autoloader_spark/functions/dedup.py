@@ -26,6 +26,8 @@ Design rules for 100 TB:
 
 from __future__ import annotations
 
+import threading
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -62,18 +64,26 @@ _MERSENNE31 = (1 << 31) - 1
 # composed plan (statically checked in r16).
 
 _PIN_REGISTRY: dict[str, list[DataFrame]] = {}
+#: guards the registry's dict pop/insert only; unpersist runs outside it
+_PIN_LOCK = threading.Lock()
+
+
+def _unpersist_all(frames: list[DataFrame]) -> None:
+    for f in frames:
+        try:
+            f.unpersist()
+        except Exception:  # noqa: BLE001, S110 — session may be gone
+            pass
 
 
 def _fresh_pins(op: str) -> list[DataFrame]:
     """Release the previous invocation's pins for *op*; return (and
     register) the list the new invocation should append its pins to."""
-    for f in _PIN_REGISTRY.pop(op, []):
-        try:
-            f.unpersist()
-        except Exception:  # noqa: BLE001, S110 — session may be gone
-            pass
     pins: list[DataFrame] = []
-    _PIN_REGISTRY[op] = pins
+    with _PIN_LOCK:
+        old = _PIN_REGISTRY.pop(op, [])
+        _PIN_REGISTRY[op] = pins
+    _unpersist_all(old)
     return pins
 
 
@@ -81,12 +91,11 @@ def release_pins() -> None:
     """Release every internal persist() pin the fuzzy builders (here and
     in :mod:`similarity`) have recorded.  Safe at any time: downstream
     frames recompute from lineage if re-executed after release."""
-    for op in list(_PIN_REGISTRY):
-        for f in _PIN_REGISTRY.pop(op, []):
-            try:
-                f.unpersist()
-            except Exception:  # noqa: BLE001, S110 — session may be gone
-                pass
+    with _PIN_LOCK:
+        old = list(_PIN_REGISTRY.values())
+        _PIN_REGISTRY.clear()
+    for pins in old:
+        _unpersist_all(pins)
 
 
 def spread_for_compute(df: DataFrame, *, barrier: bool = True) -> DataFrame:
@@ -517,29 +526,6 @@ def span_leakage(
                 F.col("leaked_grams") / F.col("n_grams").cast("double"), 6
             ).alias("leaked_frac"),
         )
-    )
-
-
-def minhash_signature(
-    shingles: Column, *, num_hashes: int, seed: int = 42
-) -> Column:
-    """MinHash signature (array<bigint>, length *num_hashes*).
-
-    Universal-hash permutations ``(a_i * h + b_i) mod p`` over the
-    xxhash64 of each shingle, folded into ``[0, p)`` first so the modular
-    products stay positive.  Entirely ``transform``/``aggregate`` — JVM
-    expression tree, no UDF, no shuffle.
-    """
-    base = F.transform(
-        shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE31))
-    )
-    # bind the folded hash array once — every permutation's transform
-    # references it, and interpreted HOFs re-evaluate per reference
-    return bind_once(
-        base,
-        lambda h: minhash_signature_from_hashes(
-            h, num_hashes=num_hashes, seed=seed
-        ),
     )
 
 
@@ -1279,8 +1265,8 @@ def _local_components(edges: DataFrame) -> DataFrame | None:
 
     Returns ``None`` for inputs the vectorized path does not cover —
     non-fixed-width ids (string/binary/decimal: the edge-count bound
-    would no longer bound the collected BYTES) and NULL ids — letting
-    the caller fall through to the distributed loop.
+    would no longer bound the collected BYTES), NULL ids and NaN float
+    ids — letting the caller fall through to the distributed loop.
     """
     from pyspark.sql.types import (
         ByteType,
@@ -1294,10 +1280,10 @@ def _local_components(edges: DataFrame) -> DataFrame | None:
         TimestampType,
     )
 
-    from sql_autoloader_spark.ops.dataframe_ops import (
-        arrow_driver_transfer,
-        local_frame,
-    )
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from sql_autoloader_spark.ops.dataframe_ops import local_frame
 
     spark = edges.sparkSession
     id_dt = edges.schema["a"].dataType
@@ -1318,17 +1304,26 @@ def _local_components(edges: DataFrame) -> DataFrame | None:
         return None  # wide ids: keep the ≤16 MB collect contract
     id_type = id_dt.simpleString()
     schema = f"id {id_type}, component {id_type}"
-    with arrow_driver_transfer(spark):
-        pdf = edges.toPandas()
-    if len(pdf) == 0:
-        return local_frame(spark, pdf, schema)
-    if pdf["a"].isna().any() or pdf["b"].isna().any():
-        return None
-    nodes = np.sort(pdf["a"].drop_duplicates().to_numpy())
+    # toArrow keeps every id in its Spark type (a TimestampType id is a
+    # UTC instant, never a session-local wall clock) and needs no Arrow
+    # session conf; the labels below only reorder those same values
+    table = edges.toArrow()
+    if table.num_rows == 0:
+        return local_frame(spark, table, schema)
     # the edge list is symmetric, so column a alone covers every node
-    a = np.searchsorted(nodes, pdf["a"].to_numpy())
-    b = np.searchsorted(nodes, pdf["b"].to_numpy())
-    labels = np.arange(len(nodes))
+    ids = table.column("a")
+    if ids.null_count:
+        return None
+    if isinstance(id_dt, (FloatType, DoubleType)) and pc.any(
+        pc.is_nan(ids)
+    ).as_py():
+        return None  # NaN ids take the distributed loop, like NULLs
+    nodes = pc.unique(ids)
+    nodes = nodes.take(pc.sort_indices(nodes))
+    keys = nodes.to_numpy(zero_copy_only=False)
+    a = np.searchsorted(keys, ids.to_numpy())
+    b = np.searchsorted(keys, table.column("b").to_numpy())
+    labels = np.arange(len(keys))
     while True:
         before = labels
         relaxed = labels.copy()
@@ -1343,7 +1338,7 @@ def _local_components(edges: DataFrame) -> DataFrame | None:
             labels = jumped
         if np.array_equal(labels, before):
             break
-    out = pd.DataFrame({"id": nodes, "component": nodes[labels]})
+    out = pa.table({"id": nodes, "component": nodes.take(pa.array(labels))})
     return local_frame(spark, out, schema)
 
 

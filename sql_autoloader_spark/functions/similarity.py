@@ -16,6 +16,7 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, FloatType
 from pyspark.sql.window import Window
 
 from sql_autoloader_spark.functions.text import bind_once
@@ -68,94 +69,6 @@ def _flatten_list_array(arr: pa.Array):
     else:
         row_elem_nulls = np.zeros(len(arr), dtype=np.int64)
     return row_null, lengths, flat, starts, row_elem_nulls
-
-
-def _seq_dot_arrow_fn():
-    """Build the Arrow-native sequential-dot UDF (cached per process).
-
-    Bit-identical to :func:`dot`: per row the products are accumulated
-    LEFT TO RIGHT in double precision starting from 0.0 — numpy's
-    element-wise ``multiply`` then ``add`` are the same single IEEE-754
-    operations the interpreted ``zip_with``/``aggregate`` fold performs
-    (neither fuses into FMA), and float→double widening is exact, so
-    every intermediate is the same 64-bit value.  NULL semantics mirror
-    the JVM expression exactly (pyarrow keeps the validity bitmaps the
-    pandas path would collapse into NaN): NULL array on either side,
-    mismatched lengths (zip_with pads with NULL), or any NULL element →
-    NULL; two empty arrays → 0.0.
-    """
-    global _SEQ_DOT_ARROW
-    if _SEQ_DOT_ARROW is not None:
-        return _SEQ_DOT_ARROW
-    from pyspark.sql.functions import arrow_udf
-
-    _flatten = _flatten_list_array
-
-    @arrow_udf("double")
-    def seq_dot(a: pa.Array, b: pa.Array) -> pa.Array:
-        n = len(a)
-        if n == 0:
-            return pa.array([], type=pa.float64())
-        a_null, la, fa, sa, ea = _flatten(a)
-        b_null, lb, fb, sb, eb = _flatten(b)
-        # NULL iff: either side NULL, lengths differ, or a NULL element
-        invalid = a_null | b_null | (la != lb) | (ea > 0) | (eb > 0)
-        out = np.zeros(n, dtype=np.float64)
-        valid_idx = np.flatnonzero(~invalid)
-        if valid_idx.size:
-            vl = la[valid_idx]
-            for d in np.unique(vl):
-                if d == 0:
-                    continue  # empty arrays: fold over nothing = 0.0
-                rows = valid_idx[vl == d]
-                cols = np.arange(d, dtype=np.int64)
-                av = fa[sa[rows][:, None] + cols[None, :]]
-                bv = fb[sb[rows][:, None] + cols[None, :]]
-                acc = np.zeros(len(rows), dtype=np.float64)
-                with np.errstate(invalid="ignore", over="ignore"):
-                    for i in range(int(d)):
-                        # one IEEE multiply + one IEEE add per element,
-                        # in index order — the exact fold the JVM runs
-                        acc += av[:, i] * bv[:, i]
-                out[rows] = acc
-        return pa.array(out, type=pa.float64(), mask=invalid)
-
-    _SEQ_DOT_ARROW = seq_dot
-    return seq_dot
-
-
-_SEQ_DOT_ARROW = None
-
-
-def dot_arrow(a: Column, b: Column) -> Column:
-    """Arrow-vectorized twin of :func:`dot` — bit-identical results.
-
-    The interpreted ``zip_with``/``aggregate`` fold costs ~1 µs per
-    element (higher-order-function lambdas never codegen), which makes
-    the dot product the dominant cost of every candidate-scoring join.
-    This form moves whole Arrow batches to numpy and accumulates the
-    same left-to-right double-precision sum (see
-    :func:`_seq_dot_arrow_fn` for the bit-parity argument) — the guide
-    §4.2 shape: Spark does distribution and joins, vectorized native
-    code does the math.
-    """
-    return _seq_dot_arrow_fn()(a, b)
-
-
-_SEQ_DOT_ARROW_ND = None
-
-
-def dot_arrow_nd(a: Column, b: Column) -> Column:
-    """:func:`dot_arrow` marked non-deterministic — same values (the
-    function IS deterministic); the marker stops the optimizer pushing a
-    threshold filter below the projection and EVALUATING THE UDF TWICE
-    per surviving row (guide §4.4).  Use only where the score feeds a
-    filter directly; the marker also blocks legitimate pushdown of other
-    filters past it."""
-    global _SEQ_DOT_ARROW_ND
-    if _SEQ_DOT_ARROW_ND is None:
-        _SEQ_DOT_ARROW_ND = _seq_dot_arrow_fn().asNondeterministic()
-    return _SEQ_DOT_ARROW_ND(a, b)
 
 
 def _seq_cosine_arrow_fn():
@@ -224,13 +137,6 @@ _SEQ_COSINE_ARROW = None
 _SEQ_COSINE_ARROW_ND = None
 
 
-def norm_arrow(a: Column) -> Column:
-    """Arrow-vectorized twin of :func:`norm` (same float, see
-    :func:`dot_arrow`; ``sqrt`` is a single correctly-rounded IEEE op in
-    both engines)."""
-    return F.sqrt(dot_arrow(a, a))
-
-
 def cosine_arrow(
     a: Column, b: Column, *, filterable: bool = False
 ) -> Column:
@@ -293,7 +199,8 @@ def exact_cosine_pairs(
     row pair with distinct non-NULL ids, oriented ``id_a < id_b`` — the
     blocked form of ``a.join(b, id_a < id_b).select(cosine_arrow(va,
     vb))``, bit-identical values, ~B×fewer bytes across the Python
-    boundary.
+    boundary.  NaN float ids never pair, like NULL ids (numpy's NaN
+    compares would otherwise pair and orient them unlike Spark's).
 
     Why (guide §8 / §4.1): the join form ships BOTH vectors once per
     PAIR into the Arrow node — O(N·dim) bytes per vector — and measured
@@ -355,7 +262,11 @@ def exact_cosine_pairs(
         # an empty tag table would silently drop every row in the join
         msg = f"blocks must be >= 1, got {blocks}"
         raise ValueError(msg)
-    id_type = emb.schema[id_col].dataType.simpleString()
+    id_dt = emb.schema[id_col].dataType
+    id_type = id_dt.simpleString()
+    valid_id = F.col(id_col).isNotNull()
+    if isinstance(id_dt, (FloatType, DoubleType)):
+        valid_id &= ~F.isnan(F.col(id_col))
 
     tag_rows = []
     for i in range(blocks):
@@ -369,7 +280,7 @@ def exact_cosine_pairs(
     tags = local_frame(spark, pd.DataFrame(tag_rows), "blk int, bp int, side int")
 
     tagged = (
-        emb.where(F.col(id_col).isNotNull())
+        emb.where(valid_id)
         .select(
             F.col(id_col).alias("__id"),
             F.col(vec_col).alias("__vec"),
@@ -575,39 +486,6 @@ def brute_force_topk(
     )
 
 
-def hyperplane_signature(
-    vec: Column, *, dim: int, planes: int, seed: int = 42
-) -> Column:
-    """Random-hyperplane LSH signature as a *planes*-bit integer.
-
-    Hyperplane components are deterministic pseudo-random ±1 (driver-side
-    seeded), folded into a sign-pattern integer: bit_i = [v · h_i > 0].
-    P(bit match) = 1 - angle/π, so bucket collision concentrates
-    high-cosine pairs.
-    """
-    signs = _hyperplane_matrix(dim, planes, seed)
-    bits = []
-    for i, plane in enumerate(signs):
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(s) for s in plane]),
-                lambda x, s: x.cast("double") * s,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bits.append(
-            F.when(proj > 0, F.shiftleft(F.lit(1).cast("bigint"), i)).otherwise(
-                F.lit(0).cast("bigint")
-            )
-        )
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out
-
-
 def _hyperplane_matrix(dim: int, planes: int, seed: int) -> list[list[float]]:
     import random
 
@@ -623,12 +501,13 @@ def hyperplane_signatures_vectorized(
 ) -> Column:
     """All *tables* hyperplane signatures in one Arrow-vectorized pass.
 
-    The JVM expression form costs ``tables × planes`` interpreted
+    A JVM expression form would cost ``tables × planes`` interpreted
     dim-length folds per row (higher-order functions don't codegen);
     here a single numpy matmul computes every projection at once.
-    Uses the same ±1 hyperplanes as :func:`hyperplane_signature` (same
-    seeded draws), so bucket assignments agree up to float-summation
-    order on projections within ~1e-13 of zero.
+    The ±1 hyperplanes are seeded draws (:func:`_hyperplane_matrix`,
+    one seed per table), bit *i* of a signature is
+    ``[v · h_i > 0]``, and P(bit match) = 1 - angle/π, so bucket
+    collisions concentrate high-cosine pairs.
     """
     from pyspark.sql.functions import pandas_udf
 

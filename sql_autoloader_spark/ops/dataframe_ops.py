@@ -87,28 +87,32 @@ def local_frame(spark, rows, schema: str) -> DataFrame:  # noqa: ANN001
     ``spark.createDataFrame(list, schema)`` pickles the rows into a
     Python RDD: every later scan of the frame (including broadcast
     builds) round-trips through a Python worker, and the optimizer
-    treats the size as unknown.  Routing the same rows through the
-    Arrow ``createDataFrame`` path instead lands them as a
+    treats the size as unknown.  A ``pyarrow.Table`` instead lands as a
     ``LocalRelation`` — JVM-resident, statically sized, and free to
     broadcast without ever spawning a Python task (measured 0.51 s →
-    0.20 s on the media-fixture broadcast join).  Spark's built-in
-    non-Arrow fallback keeps semantics identical if the conversion
-    cannot handle a type.  Callers pass simple exactly-typed rows
-    (longs / binary) or an already-built pandas DataFrame; driver-side
-    readbacks with richer types keep the classic path deliberately.
+    0.20 s on the media-fixture broadcast join) — and needs no session
+    conf: ``createDataFrame`` takes the Arrow path for a table
+    whatever ``spark.sql.execution.arrow.pyspark.enabled`` says.
+    Callers pass simple exactly-typed rows (longs / binary), an
+    already-built pandas DataFrame, or a ``pyarrow.Table``; columns are
+    matched to *schema* by position and cast to its types.
     """
     import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.types import StructType
 
-    if isinstance(rows, pd.DataFrame):
-        if rows.empty:
-            return empty_frame(spark, schema)
-        pdf = rows
-    elif not rows:
-        return empty_frame(spark, schema)
+    if isinstance(rows, pa.Table):
+        table = rows
+    elif isinstance(rows, pd.DataFrame):
+        table = pa.Table.from_pandas(rows, preserve_index=False)
+    elif rows:
+        table = pa.Table.from_pandas(pd.DataFrame(rows), preserve_index=False)
     else:
-        pdf = pd.DataFrame(rows)
-    with arrow_driver_transfer(spark):
-        return spark.createDataFrame(pdf, schema)
+        table = None
+    if table is None or table.num_rows == 0:
+        return empty_frame(spark, schema)
+    struct = StructType.fromDDL(schema)
+    return spark.createDataFrame(table.rename_columns(struct.names), struct)
 
 
 def preprocess(
@@ -494,67 +498,13 @@ def _row_hash_channels(frame: DataFrame, cols: list[str]) -> tuple[Column, Colum
     return h1, h2
 
 
-#: inputs at or below this bound run the checksum aggregate with AQE
-#: off: the data work is trivial there, and AQE otherwise splits the
-#: single action into one sequential driver-scheduled job per query
-#: stage (measured 5 jobs ≈ 0.5 s of pure scheduling at sf0.1 — larger
-#: than the aggregate itself).  Above the bound AQE stays on: runtime
-#: join re-selection and skew handling matter at fact scale, and the
-#: per-stage jobs amortize over real work.  Bounded tight (10k): at
-#: 100k+ rows AQE's runtime SMJ→SHJ conversion of the dim-preserving
-#: reconstruction join is already worth more than the saved job
-#: scheduling (measured at sf0.1).
-SMALL_COMPARE_ROWS = 10_000
-
-
 #: serializes session-conf toggles: the conf is SESSION-global, so two
 #: threads toggling concurrently (multi-threaded connectors on one
 #: session are supported) could restore each other's transient value
-#: and leave AQE off / 4 shuffle partitions for unrelated queries.
-#: Only tiny-input actions ever hold this across execution.
+#: and leave AQE off (the connector's small-append pin) or a UTC
+#: timezone in place for unrelated queries.  Only small bounded actions
+#: ever hold this across execution.
 _CONF_LOCK = threading.RLock()
-
-
-@contextmanager
-def _aqe_disabled(spark):  # noqa: ANN001, ANN202
-    """AQE off + few shuffle partitions, for one small-input action.
-
-    Without AQE nothing coalesces the aggregate's exchange at runtime,
-    so also drop ``shuffle.partitions`` to a handful — the input is
-    bounded small by the caller, and 4 reduce tasks beat scheduling the
-    session default on near-empty partitions.
-    """
-    conf = spark.conf
-    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-    with _CONF_LOCK:
-        prev = [conf.get(k) for k in keys]
-        conf.set(keys[0], "false")
-        conf.set(keys[1], "4")
-        try:
-            yield
-        finally:
-            for k, p in zip(keys, prev):
-                conf.set(k, p)
-
-
-@contextmanager
-def arrow_driver_transfer(spark):  # noqa: ANN001, ANN202
-    """``spark.sql.execution.arrow.pyspark.enabled=true`` for one
-    bounded driver transfer (``createDataFrame(pandas)`` / ``toPandas``
-    — guide §6: orders of magnitude faster than the pickled-row path).
-    Shared by :func:`local_frame` and the dedup driver fast path so the
-    toggle/restore logic lives once; serialized on the session-conf
-    lock like every other toggle.
-    """
-    conf = spark.conf
-    key = "spark.sql.execution.arrow.pyspark.enabled"
-    with _CONF_LOCK:
-        prev = conf.get(key)
-        conf.set(key, "true")
-        try:
-            yield
-        finally:
-            conf.set(key, prev)
 
 
 @contextmanager
@@ -582,9 +532,7 @@ def utc_session(spark):  # noqa: ANN001, ANN202
             conf.set(key, prev)
 
 
-def fast_set_equal(
-    data: DataFrame, db_aligned: DataFrame, *, small: bool = False
-) -> bool:
+def fast_set_equal(data: DataFrame, db_aligned: DataFrame) -> bool:
     """Multiset-checksum equality of two aligned frames in ONE aggregate.
 
     The scale-critical validation primitive: both sides stream into a
@@ -640,14 +588,7 @@ def fast_set_equal(
         *quarters(F.col("__h2"), "s2"),
         F.bit_xor(F.col("__h2")).alias("__x2"),
     )
-    if small:
-        # plan AND run the one action with AQE off (a single job
-        # instead of one per query stage; see SMALL_COMPARE_ROWS)
-        with _aqe_disabled(data.sparkSession):
-            rows = agg.collect()
-    else:
-        rows = agg.collect()
-    by_side = {r["__side"]: r for r in rows}
+    by_side = {r["__side"]: r for r in agg.collect()}
     row_d, row_b = by_side.get(1), by_side.get(0)
     if row_b is None:  # empty db side (an empty side groups to no row)
         return False
@@ -668,7 +609,6 @@ def validate_load_compare(
     missing_first: bool = False,
     keep_grouped: bool = False,
     fast: bool = False,
-    small: bool = False,
     on_mismatch=None,
 ) -> DataFrame | None | object:
     """The full post-load validation in ONE aggregate job.
@@ -717,7 +657,7 @@ def validate_load_compare(
     aligned = match_dtypes(db_data, data)
     db_aligned = aligned.select([_col(aligned, c) for c in data.columns])
     if fast and exact:
-        if fast_set_equal(data, db_aligned, small=small):
+        if fast_set_equal(data, db_aligned):
             return FAST_VERIFIED
         if on_mismatch is not None:
             on_mismatch()

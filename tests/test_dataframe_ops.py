@@ -251,3 +251,35 @@ def test_validate_load_compare_subset_ignores_null_rows(
     )
     with pytest.raises(CompareMissingRowsError):
         ops.validate_load_compare(bad, db, exact=False)
+
+
+# --- local_frame (driver rows as a JVM LocalRelation) ------------------------
+
+
+def test_local_frame_is_local_relation_and_writes_no_conf(
+    spark: SparkSession, conf_writes: list
+) -> None:
+    """List and pandas inputs both land as a ``LocalRelation`` cast to the
+    declared schema, without touching the session conf."""
+    import pandas as pd
+
+    schema = "k bigint, payload binary, small int"
+    rows = [(1, b"\x00\x01", 7), (2, b"", 8)]
+    conf_writes.clear()
+    frames = [
+        ops.local_frame(spark, rows, schema),
+        ops.local_frame(spark, pd.DataFrame(rows), schema),
+    ]
+    assert conf_writes == []
+    for frame in frames:
+        assert frame.schema.simpleString() == (
+            "struct<k:bigint,payload:binary,small:int>"
+        )
+        plan = frame._jdf.queryExecution().analyzed().toString()
+        assert "LocalRelation" in plan
+        assert sorted(tuple(r) for r in frame.collect()) == [
+            (1, bytearray(b"\x00\x01"), 7),
+            (2, bytearray(b""), 8),
+        ]
+    assert ops.local_frame(spark, [], schema).count() == 0
+    assert ops.local_frame(spark, pd.DataFrame(), schema).count() == 0

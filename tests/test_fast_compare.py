@@ -110,6 +110,44 @@ def test_load_happy_path_uses_fast_compare(
     assert calls == [True]
 
 
+def test_fast_compare_writes_no_session_conf(
+    spark: SparkSession,
+    monkeypatch: pytest.MonkeyPatch,
+    conf_writes: list,
+) -> None:
+    """The fast exact compare of a small frame (≤ 10k rows) leaves the
+    session conf alone, whether called directly or by ``load``."""
+    data = _df(spark, [(str(i), str(i % 7)) for i in range(200)])
+    conf_writes.clear()
+    assert (
+        ops.validate_load_compare(data, data, fast=True, exact=True)
+        is ops.FAST_VERIFIED
+    )
+    assert conf_writes == []
+
+    during: list[list] = []
+    orig = ops.validate_load_compare
+
+    def spy(data, db_data, **kw):  # noqa: ANN001, ANN202
+        assert kw["fast"] and kw["exact"]
+        start = len(conf_writes)
+        result = orig(data, db_data, **kw)
+        during.append(conf_writes[start:])
+        return result
+
+    monkeypatch.setattr(ops, "validate_load_compare", spy)
+    db = SparkConnector(spark)
+    db.execute_ddl(
+        """
+        CREATE TABLE fc3_dim (id INTEGER PRIMARY KEY, name TEXT UNIQUE);
+        CREATE TABLE fc3_fact (dim_id INTEGER REFERENCES fc3_dim (id), v BIGINT);
+        """
+    )
+    with db:
+        db.load(_df(spark, [("a", 1), ("b", 2)], "name string, v bigint"))
+    assert during == [[]]
+
+
 def test_load_conflict_error_identity_under_deferral(
     spark: SparkSession,
 ) -> None:

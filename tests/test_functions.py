@@ -1212,7 +1212,8 @@ def test_exact_cosine_pairs_matches_join_form(spark) -> None:
     both ways, raw unrounded sims) to the join + cosine_arrow form on a
     fixture covering the edge cases: NULL vector, NULL-element vector,
     mismatched dims, zero vector, all-NaN vector, duplicate ids with
-    different payloads, and a NULL id (which never pairs)."""
+    different payloads, a NULL id and NaN double ids (which never
+    pair)."""
     import random
 
     from pyspark.sql import functions as F
@@ -1233,25 +1234,45 @@ def test_exact_cosine_pairs_matches_join_form(spark) -> None:
         (5, [9.9] * 8),  # duplicate id, different payload
         (None, [1.0] * 8),  # NULL id: never appears in any pair
     ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    a = emb.select(
-        F.col("vec_id").alias("id_a"), F.col("embedding").alias("va")
+    emb_long = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>"
     )
-    b = emb.select(
-        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb")
-    )
-    old = a.join(b, F.col("id_a") < F.col("id_b")).select(
-        "id_a",
-        "id_b",
-        similarity.cosine_arrow(F.col("va"), F.col("vb")).alias("sim"),
-    )
-    for blocks in (None, 3):
-        new = similarity.exact_cosine_pairs(
-            emb, id_col="vec_id", vec_col="embedding", blocks=blocks
+    # double ids add two NaN ids, which never pair either (the join
+    # form would pair a NaN id with every smaller id)
+    emb_double = emb_long.withColumn(
+        "vec_id", F.col("vec_id").cast("double")
+    ).unionByName(
+        spark.createDataFrame(
+            [(float("nan"), [0.5] * 8), (float("nan"), [0.25] * 8)],
+            "vec_id double, embedding array<float>",
         )
-        assert new.count() == old.count(), f"blocks={blocks}"
-        assert old.exceptAll(new).isEmpty(), f"blocks={blocks}"
-        assert new.exceptAll(old).isEmpty(), f"blocks={blocks}"
+    )
+    for id_type, emb in (("long", emb_long), ("double", emb_double)):
+        ref = emb.where(~F.isnan("vec_id"))
+        a = ref.select(
+            F.col("vec_id").alias("id_a"), F.col("embedding").alias("va")
+        )
+        b = ref.select(
+            F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb")
+        )
+        # materialized once each: the asserts below re-read them
+        old = (
+            a.join(b, F.col("id_a") < F.col("id_b"))
+            .select(
+                "id_a",
+                "id_b",
+                similarity.cosine_arrow(F.col("va"), F.col("vb")).alias("sim"),
+            )
+            .localCheckpoint()
+        )
+        for blocks in (None, 3):
+            new = similarity.exact_cosine_pairs(
+                emb, id_col="vec_id", vec_col="embedding", blocks=blocks
+            ).localCheckpoint()
+            tag = f"{id_type} blocks={blocks}"
+            assert new.count() == old.count(), tag
+            assert old.exceptAll(new).isEmpty(), tag
+            assert new.exceptAll(old).isEmpty(), tag
 
     # min_sim prunes the return stream as a SUPERSET of the caller's
     # exact round+filter: the filtered results must be identical
@@ -1271,12 +1292,16 @@ def test_exact_cosine_pairs_matches_join_form(spark) -> None:
     assert got_f.count() == want_f.count() > 0
 
 
-def test_local_components_fast_path_and_parity(spark, monkeypatch) -> None:
+def test_local_components_fast_path_and_parity(
+    spark, monkeypatch, conf_writes
+) -> None:
     """At or below LOCAL_EDGE_THRESHOLD symmetric edges, algorithm='auto'
     solves the labeling on the driver (one collect, zero distributed
-    rounds); labels are identical to the distributed label path; above
-    the bound the distributed loop still runs; NULL ids fall through to
-    the distributed loop rather than the vectorized path."""
+    rounds) without writing the session conf; labels are identical to
+    the distributed label path; above the bound the distributed loop
+    still runs; NULL ids fall through to the distributed loop rather
+    than the vectorized path; timestamp ids keep their instants under a
+    non-UTC session timezone."""
     from sql_autoloader_spark.functions import dedup
 
     calls: list[str] = []
@@ -1301,11 +1326,13 @@ def test_local_components_fast_path_and_parity(spark, monkeypatch) -> None:
         ).collect()
     }
     calls.clear()  # the explicit-label run above must not have used it
+    conf_writes.clear()
     got = {
         (r["id"], r["component"])
         for r in dedup.connected_components(pairs).collect()
     }
     assert calls == ["local"]
+    assert conf_writes == []
     assert got == want
     assert (200, 200) in got  # self-loop keeps its own component
 
@@ -1338,6 +1365,33 @@ def test_local_components_fast_path_and_parity(spark, monkeypatch) -> None:
         ).collect()
     }
     assert got3 == want3
+
+    # timestamp ids under a non-UTC session: 05:30 and 06:30 UTC on
+    # 2021-11-07 are both 01:30 New York wall-clock time (the DST
+    # fall-back hour), so a session-local naive round trip would merge
+    # them; the labels must equal the all-JVM star algorithm's
+    from datetime import datetime, timedelta, timezone
+
+    t0 = datetime(2021, 11, 7, 5, 30, tzinfo=timezone.utc)
+    ts = [t0 + timedelta(hours=h) for h in (0, 1, 2, 30)]
+    tz_pairs = spark.createDataFrame(
+        [(ts[0], ts[2]), (ts[1], ts[3])], "id_a timestamp, id_b timestamp"
+    )
+    prev_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        calls.clear()
+        conf_writes.clear()
+        got4 = dedup.connected_components(tz_pairs)
+        assert calls == ["local"]
+        assert conf_writes == []
+        want4 = dedup.connected_components(tz_pairs, algorithm="star")
+        assert got4.exceptAll(want4).isEmpty()
+        assert want4.exceptAll(got4).isEmpty()
+        assert got4.count() == 4
+        assert got4.select("component").distinct().count() == 2
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev_tz)
 
 
 def test_pil_decode_path_with_fake_codec(monkeypatch) -> None:
@@ -2519,6 +2573,46 @@ def test_fuzzy_builder_pins_release_per_generation(
     # released pins only drop the cache — the frame still recomputes
     assert out2.count() == out2.count()
     dedup.release_pins()
+
+
+def test_pin_registry_rotation_under_threads(monkeypatch) -> None:
+    """Threads rotating and releasing the pin registry at once hand every
+    registered generation to unpersist exactly once: a lost update of
+    the registry would leak a generation, a double pop release it twice."""
+    import sys
+    import threading
+    from collections import Counter
+
+    registry: dict = {}
+    monkeypatch.setattr(dedup, "_PIN_REGISTRY", registry)
+    # both lists keep every generation alive, so ids stay unique
+    released: list[list] = []
+    monkeypatch.setattr(dedup, "_unpersist_all", released.append)
+    made: list[list] = []
+
+    def worker(i: int) -> None:
+        for n in range(300):
+            made.append(dedup._fresh_pins(f"op{(i + n) % 3}"))
+            if n % 100 == 99:
+                dedup.release_pins()
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=worker, args=(i,)) for i in range(8)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(prev)
+    dedup.release_pins()
+    assert not registry
+    counts = Counter(id(pins) for pins in released)
+    assert all(counts[id(pins)] == 1 for pins in made)
 
 
 def test_embedding_neardup_pins_release(spark: SparkSession) -> None:
