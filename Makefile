@@ -3,7 +3,7 @@
 # at driver scale + the whole test suite) — run before every
 # end-of-round snapshot.
 
-.PHONY: test oracle-smoke oracle-full bench plans check verify
+.PHONY: test oracle-smoke oracle-full bench ab plans check verify
 
 test:
 	python -m pytest tests/ -q
@@ -20,6 +20,14 @@ oracle-full:
 
 bench:
 	python bench.py
+
+# alternating parent/change pairs of the repository benchmark (perfbench)
+# for one workload: medians, quartiles, wins and BENCHMARK.json bounds
+PARENT ?= HEAD~1
+W ?= corpus_dedup
+SEEDS ?= 31-36,41-44
+ab:
+	python3 tools/ab_pairs.py --parent $(PARENT) --workload $(W) --seeds $(SEEDS)
 
 # regenerate PLANS.md (static + final-AQE plan audit)
 plans:

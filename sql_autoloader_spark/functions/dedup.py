@@ -26,6 +26,7 @@ Design rules for 100 TB:
 
 from __future__ import annotations
 
+import logging
 import threading
 
 import numpy as np
@@ -1100,17 +1101,46 @@ def simhash_pairs(
 #: shuffle per round.
 STAR_EDGE_THRESHOLD = 50_000_000
 
-#: ``algorithm="auto"`` solves the labeling on the driver at or below
-#: this many (symmetric) edges.  Every distributed round costs 2 driver
-#: jobs + a keyed shuffle regardless of size — on the small edge lists
-#: near-dup dedup actually produces (pairs ≪ corpus), the whole loop is
-#: scheduling floor, measured 2.2–2.8 s / ~43 jobs on a 144-pair graph.
-#: Below the bound the edge list is collected ONCE (same contract as a
-#: broadcast-join build side: ≤ ~16 MB at the bound vs Spark's own 8 GB
-#: broadcast cap), labeled with vectorized numpy min-relax + pointer
-#: jumping, and returned as a JVM ``LocalRelation`` — one job, zero
-#: shuffles, exact same labels.  Above the bound nothing changes.
+#: ``algorithm="auto"`` solves the labeling on the driver when the
+#: symmetric edge list it would build has at most this many rows, i.e.
+#: when 2 × (caller's pair rows) is at or below it.  The bound is taken
+#: on pair ROWS, before any de-duplication, so it needs no distributed
+#: union/distinct/count — but a pair list of more than 500k rows whose
+#: distinct symmetric edges would still fit (many duplicate or reversed
+#: pairs) now takes the distributed label path.  Every distributed round
+#: costs 2 driver jobs + a keyed shuffle regardless of size — on the
+#: small pair lists near-dup dedup actually produces (pairs ≪ corpus),
+#: the whole loop is scheduling floor, measured 2.2–2.8 s / ~43 jobs on a
+#: 144-pair graph.  Below the bound the checkpointed pair list is
+#: collected ONCE (same contract as a broadcast-join build side: ≤ ~8 MB
+#: at the bound vs Spark's own 8 GB broadcast cap), symmetrized and
+#: labeled with vectorized numpy min-relax + pointer jumping, and
+#: returned as a JVM ``LocalRelation`` — zero shuffles, exact same
+#: labels.  Above the bound nothing changes.
 LOCAL_EDGE_THRESHOLD = 1_000_000
+
+_log = logging.getLogger("sql_autoloader_spark")
+
+
+def _log_cc_path(
+    path: str, n_pairs: int | None = None, n_edges: int | None = None
+) -> None:
+    """Emit the one decision record of a :func:`connected_components`
+    call: *path* is ``local``, ``label``, ``star`` or ``label→star``;
+    the counts are those the call already took (``None`` otherwise —
+    never counted just for the log)."""
+    _log.info(
+        "connected_components path=%s n_pairs=%s n_edges=%s",
+        path,
+        n_pairs,
+        n_edges,
+        extra={
+            "op": "connected_components",
+            "decision": path,
+            "n_pairs": n_pairs,
+            "n_edges": n_edges,
+        },
+    )
 
 
 def connected_components(
@@ -1145,27 +1175,33 @@ def connected_components(
       minimum, collapsing components into stars in O(log²)
       rounds **independent of graph diameter** — the scale path for
       adversarial chains.
-    - ``"auto"`` (default) — picks by edge count: above
-      :data:`STAR_EDGE_THRESHOLD` edges, the star algorithm from the
-      start — at corpus scale an undetected deep chain would waste
-      ``max_iterations`` full edge-list shuffles before the fallback
-      kicks in, and the star rounds are diameter-independent (the
-      count is free: the edge list was just eagerly checkpointed).  At
-      or below :data:`LOCAL_EDGE_THRESHOLD` edges, the labeling is
-      solved on the driver instead (:func:`_local_components`): every
-      distributed round is 2 driver jobs + a keyed shuffle whatever
-      the size, so on the small pair graphs dedup produces the loop is
-      pure scheduling floor — the bounded edge list is collected once
-      (broadcast-build-sized by contract) and labeled in vectorized
-      numpy, exactly.  Between the bounds, label propagation (cheapest
-      on shallow graphs), falling back to the star algorithm if the
-      cap is hit instead of raising.
+    - ``"auto"`` (default) — picks by size.  When 2 × the pair rows is
+      at or below :data:`LOCAL_EDGE_THRESHOLD`, the labeling is solved
+      on the driver (:func:`_local_components`): every distributed
+      round is 2 driver jobs + a keyed shuffle whatever the size, so on
+      the small pair graphs dedup produces the loop is pure scheduling
+      floor — the bounded pair list is collected once
+      (broadcast-build-sized by contract), symmetrized and labeled in
+      vectorized numpy, exactly.  Otherwise the symmetric edge list is
+      built and counted: above :data:`STAR_EDGE_THRESHOLD` edges, the
+      star algorithm from the start — at corpus scale an undetected
+      deep chain would waste ``max_iterations`` full edge-list shuffles
+      before the fallback kicks in, and the star rounds are
+      diameter-independent.  Between the bounds, label propagation
+      (cheapest on shallow graphs), falling back to the star algorithm
+      if the cap is hit instead of raising.
 
-    Each round's state is pinned with ``localCheckpoint`` to keep the
-    plan flat (iterative lineage otherwise grows exponentially;
-    checkpoint storage is released with the session — on a long-lived
-    cluster session, checkpoint to a reaper-managed dir instead if
-    rounds × edge size matters).
+    The caller's *pairs* lineage executes exactly once: its ``(a, b)``
+    projection is ``localCheckpoint``-ed eagerly up front and every
+    path reads that checkpoint.  Each round's state is pinned the same
+    way to keep the plan flat (iterative lineage otherwise grows
+    exponentially; checkpoint storage is released with the session — on
+    a long-lived cluster session, checkpoint to a reaper-managed dir
+    instead if rounds × edge size matters).
+
+    Emits one INFO record per call on the ``sql_autoloader_spark``
+    logger naming the path taken (``local``, ``label``, ``star`` or
+    ``label→star``) with the pair/edge counts already taken.
 
     Returns ``(id, component)`` for every node in *pairs*, where
     ``component`` is the smallest node id in the cluster.
@@ -1173,22 +1209,31 @@ def connected_components(
     if algorithm not in ("auto", "label", "star"):
         msg = f"unknown connected-components algorithm: {algorithm!r}"
         raise ValueError(msg)
+    # the only execution of the caller's lineage
+    canon = pairs.select(
+        F.col(src).alias("a"), F.col(dst).alias("b")
+    ).localCheckpoint(eager=True)
+    n_pairs = None
+    if algorithm == "auto":
+        n_pairs = canon.count()
+        # 2 × pairs bounds the symmetric edge count from above, so a
+        # graph that passes here can never be over the star bound either
+        if 2 * n_pairs <= min(LOCAL_EDGE_THRESHOLD, STAR_EDGE_THRESHOLD):
+            local = _local_components(canon)
+            if local is not None:
+                _log_cc_path("local", n_pairs=n_pairs)
+                return local
     edges = (
-        pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(pairs.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        canon.union(canon.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if algorithm == "star":
+    n_edges = edges.count() if algorithm == "auto" else None
+    if algorithm == "star" or (
+        algorithm == "auto" and n_edges > STAR_EDGE_THRESHOLD
+    ):
+        _log_cc_path("star", n_pairs=n_pairs, n_edges=n_edges)
         return _star_components(edges, max_iterations=max_iterations)
-    if algorithm == "auto":
-        n_edges = edges.count()
-        if n_edges > STAR_EDGE_THRESHOLD:
-            return _star_components(edges, max_iterations=max_iterations)
-        if n_edges <= LOCAL_EDGE_THRESHOLD:
-            local = _local_components(edges)
-            if local is not None:
-                return local
     labels = (
         edges.select("a")
         .distinct()
@@ -1232,6 +1277,7 @@ def connected_components(
         if algorithm == "auto":
             # deeper than label propagation's round budget — switch to
             # the diameter-independent algorithm
+            _log_cc_path("label→star", n_pairs=n_pairs, n_edges=n_edges)
             return _star_components(edges, max_iterations=max_iterations)
         msg = (
             f"connected_components did not converge in {max_iterations} "
@@ -1241,32 +1287,39 @@ def connected_components(
             "O(log²) regardless of diameter)."
         )
         raise RuntimeError(msg)
+    _log_cc_path("label", n_pairs=n_pairs, n_edges=n_edges)
     return labels.select("id", F.col("comp").alias("component"))
 
 
-def _local_components(edges: DataFrame) -> DataFrame | None:
-    """Exact min-id components of a bounded symmetric edge list, solved
-    on the driver (``algorithm="auto"`` at or below
-    :data:`LOCAL_EDGE_THRESHOLD` — see that constant for the economics).
+def _local_components(canon: DataFrame) -> DataFrame | None:
+    """Exact min-id components of a bounded canonical pair list
+    ``(a, b)``, solved on the driver (``algorithm="auto"`` when
+    2 × its rows is at or below :data:`LOCAL_EDGE_THRESHOLD` — see that
+    constant for the economics).
 
     The caller has already materialized (``localCheckpoint``) and
-    counted *edges*, proving the collect below is bounded the way a
-    broadcast-join build side is; the result rows (≤ node count ≤ edge
-    count) return as a JVM ``LocalRelation`` via :func:`local_frame`.
+    counted *canon*, proving the collect below is bounded the way a
+    broadcast-join build side is; the pairs may repeat, appear in both
+    orientations or be self-pairs — they are symmetrized here, in
+    numpy.  The result rows (≤ node count ≤ 2 × pair count) return as a
+    JVM ``LocalRelation`` via :func:`local_frame`.
 
     Labeling is vectorized numpy.  Ids map to dense ranks over the
     SORTED node vector (rank order == id order, so the min rank per
     component is the min id), then edge min-relaxation alternates with
     pointer jumping until fixpoint.  Every step only lowers a label and
     keeps it inside its own component, so at the fixpoint each edge has
-    equal labels on both ends (the edge list is symmetric), labels are
-    constant per component, and the shared value is the component
-    minimum — identical to the distributed propagation's answer.
+    equal labels on both ends (the edges are relaxed in both
+    directions), labels are constant per component, and the shared
+    value is the component minimum — identical to the distributed
+    propagation's answer.
 
     Returns ``None`` for inputs the vectorized path does not cover —
-    non-fixed-width ids (string/binary/decimal: the edge-count bound
-    would no longer bound the collected BYTES), NULL ids and NaN float
-    ids — letting the caller fall through to the distributed loop.
+    non-fixed-width ids (string/binary/decimal: the row-count bound
+    would no longer bound the collected BYTES), ``a``/``b`` of different
+    types (the distributed union widens them), NULL ids and NaN float
+    ids in either column — letting the caller fall through to the
+    distributed loop.
     """
     from pyspark.sql.types import (
         ByteType,
@@ -1285,8 +1338,10 @@ def _local_components(edges: DataFrame) -> DataFrame | None:
 
     from sql_autoloader_spark.ops.dataframe_ops import local_frame
 
-    spark = edges.sparkSession
-    id_dt = edges.schema["a"].dataType
+    spark = canon.sparkSession
+    id_dt = canon.schema["a"].dataType
+    if id_dt != canon.schema["b"].dataType:
+        return None
     if not isinstance(
         id_dt,
         (
@@ -1301,35 +1356,36 @@ def _local_components(edges: DataFrame) -> DataFrame | None:
             TimestampNTZType,
         ),
     ):
-        return None  # wide ids: keep the ≤16 MB collect contract
+        return None  # wide ids: keep the ≤8 MB collect contract
     id_type = id_dt.simpleString()
     schema = f"id {id_type}, component {id_type}"
     # toArrow keeps every id in its Spark type (a TimestampType id is a
     # UTC instant, never a session-local wall clock) and needs no Arrow
     # session conf; the labels below only reorder those same values
-    table = edges.toArrow()
+    table = canon.toArrow()
     if table.num_rows == 0:
         return local_frame(spark, table, schema)
-    # the edge list is symmetric, so column a alone covers every node
-    ids = table.column("a")
-    if ids.null_count:
-        return None
-    if isinstance(id_dt, (FloatType, DoubleType)) and pc.any(
-        pc.is_nan(ids)
-    ).as_py():
-        return None  # NaN ids take the distributed loop, like NULLs
-    nodes = pc.unique(ids)
+    ends = [table.column("a"), table.column("b")]
+    for ids in ends:
+        if ids.null_count:
+            return None
+        if isinstance(id_dt, (FloatType, DoubleType)) and pc.any(
+            pc.is_nan(ids)
+        ).as_py():
+            return None  # NaN ids take the distributed loop, like NULLs
+    nodes = pc.unique(pa.chunked_array(ends[0].chunks + ends[1].chunks))
     nodes = nodes.take(pc.sort_indices(nodes))
     keys = nodes.to_numpy(zero_copy_only=False)
-    a = np.searchsorted(keys, ids.to_numpy())
-    b = np.searchsorted(keys, table.column("b").to_numpy())
+    a, b = (np.searchsorted(keys, ids.to_numpy()) for ids in ends)
+    # symmetrize: relax every pair in both directions
+    src, dst = np.concatenate([a, b]), np.concatenate([b, a])
     labels = np.arange(len(keys))
     while True:
         before = labels
         relaxed = labels.copy()
-        # unbuffered min: duplicate a-ranks each apply (SPARK's groupBy
-        # min equivalent); symmetric edges make one direction enough
-        np.minimum.at(relaxed, a, labels[b])
+        # unbuffered min: duplicate src-ranks each apply (SPARK's
+        # groupBy min equivalent)
+        np.minimum.at(relaxed, src, labels[dst])
         labels = relaxed
         while True:  # full path compression
             jumped = labels[labels]

@@ -48,6 +48,11 @@ ROCKSDB_PROVIDER = (
 #: outer's provider), and a plain Lock would self-deadlock there.
 _STATE_CONF_LOCK = threading.RLock()
 
+#: :func:`fuzzy_dedup_stream` broadcasts a micro-batch's band keys (and
+#: its dropped-id set) into its joins only at or below this many keys;
+#: above it the joins are left to AQE (see the admitter's probe comment)
+PROBE_BROADCAST_MAX_KEYS = 4_000_000
+
 
 @contextlib.contextmanager
 def rocksdb_state(spark: "SparkSession"):  # noqa: ANN201
@@ -534,22 +539,24 @@ def _fuzzy_admitter(
         # store against BROADCAST batch keys (inner join + distinct id
         # ≡ the semi-join's hit set).  Neither side shuffles: the old
         # keys-semi-store formulation exchanged BOTH sides on
-        # (band, bucket) every batch.  The hint is SIZE-GATED: an
+        # (band, bucket) every batch.  The hint is SIZE-GATED by
+        # :data:`PROBE_BROADCAST_MAX_KEYS`, evaluated once per batch: an
         # availableNow/backfill first batch can be the entire backlog,
         # and an unconditional broadcast hint bypasses every AQE size
-        # check — above the gate, fall back to a plain join and let
-        # AQE pick (keys is localCheckpointed, so the count is a cheap
-        # cached-scan job, not a recompute).  Compaction (below) keeps
-        # the store scan itself cheap: few sorted files, not one per
-        # batch.
+        # check — above the gate, fall back to plain joins and let AQE
+        # pick (keys is localCheckpointed, so the count is a cheap
+        # cached-scan job, not a recompute).  The same gate covers the
+        # dropped-id set below, which is at most one row per key.
+        # Compaction (below) keeps the store scan itself cheap: few
+        # sorted files, not one per batch.
+        small = keys.count() <= PROBE_BROADCAST_MAX_KEYS
+
+        def bcast(df: DataFrame) -> DataFrame:
+            return F.broadcast(df) if small else df
+
         if store is not None:
-            probe_keys = (
-                F.broadcast(keys)
-                if keys.count() <= 4_000_000
-                else keys
-            )
             hit_store = (
-                store.join(probe_keys, on=["band", "bucket"], how="inner")
+                store.join(bcast(keys), on=["band", "bucket"], how="inner")
                 .select(id_col)
                 .distinct()
             )
@@ -564,8 +571,14 @@ def _fuzzy_admitter(
             .where(F.col(id_col) > F.col("__min_id"))
             .select(id_col)
         )
-        dropped = (
-            hit_store.select(id_col).union(hit_batch).distinct()
+        # computed ONCE per batch: both sinks below anti-join this
+        # checkpoint instead of each re-running the store scan, probe
+        # join and within-batch group-by
+        dropped = bcast(
+            hit_store.select(id_col)
+            .union(hit_batch)
+            .distinct()
+            .localCheckpoint(eager=True)
         )
         admitted = batch.join(dropped, on=id_col, how="left_anti")
         token = uuid.uuid4().hex

@@ -1207,6 +1207,75 @@ def test_auto_picks_star_above_edge_threshold(spark, monkeypatch) -> None:
     assert got2 == got
 
 
+def test_connected_components_logs_one_path_record(
+    spark, monkeypatch, caplog
+) -> None:
+    """Every call emits exactly one decision record on the
+    ``sql_autoloader_spark`` logger naming the path it took — local,
+    label, star or the label→star fallback — with the pair/edge counts
+    the call already took (None where it took none)."""
+    import logging
+
+    from sql_autoloader_spark.functions import dedup
+
+    small = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 8)], "id_a long, id_b long"
+    )
+    # scrambled 121-node chain: diameter 120 ≫ an 8-round label budget,
+    # which star still meets
+    scramble = [(i * 53) % 121 for i in range(121)]
+    chain = spark.createDataFrame(
+        [(scramble[i], scramble[i + 1]) for i in range(120)],
+        "id_a long, id_b long",
+    )
+
+    def record(pairs, **kw):  # noqa: ANN001, ANN003, ANN202
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger="sql_autoloader_spark"):
+            dedup.connected_components(pairs, **kw).collect()
+        recs = [
+            r
+            for r in caplog.records
+            if getattr(r, "op", None) == "connected_components"
+        ]
+        assert len(recs) == 1, kw
+        return recs[0].decision, recs[0].n_pairs, recs[0].n_edges
+
+    assert record(small) == ("local", 3, None)
+    assert record(small, algorithm="label") == ("label", None, None)
+    assert record(small, algorithm="star") == ("star", None, None)
+    monkeypatch.setattr(dedup, "STAR_EDGE_THRESHOLD", 0)
+    assert record(small) == ("star", 3, 6)
+    monkeypatch.setattr(dedup, "STAR_EDGE_THRESHOLD", 50_000_000)
+    monkeypatch.setattr(dedup, "LOCAL_EDGE_THRESHOLD", 0)
+    assert record(small) == ("label", 3, 6)
+    assert record(chain, max_iterations=8) == ("label→star", 120, 240)
+
+
+def test_connected_components_runs_pair_lineage_once(spark) -> None:
+    """The caller's pair lineage executes once per call on the driver,
+    label and star paths: a Python UDF in it ticks an accumulator once
+    per pair row."""
+    from pyspark.sql.types import LongType
+
+    from sql_autoloader_spark.functions import dedup
+
+    rows = [(1, 2), (2, 3), (3, 1), (7, 8), (8, 9), (20, 20)]
+    ticks = spark.sparkContext.accumulator(0)
+
+    def tick(x):  # noqa: ANN001, ANN202
+        ticks.add(1)
+        return x
+
+    base = spark.createDataFrame(rows, "id_a long, id_b long")
+    for kw in ({}, {"algorithm": "label"}, {"algorithm": "star"}):
+        ticks.value = 0
+        pairs = base.withColumn("id_b", F.udf(tick, LongType())("id_b"))
+        got = dedup.connected_components(pairs, **kw).collect()
+        assert len(got) == 7, kw
+        assert ticks.value == len(rows), kw
+
+
 def test_exact_cosine_pairs_matches_join_form(spark) -> None:
     """The blocked all-pairs scorer is bit-identical (exceptAll empty
     both ways, raw unrounded sims) to the join + cosine_arrow form on a
@@ -1295,11 +1364,12 @@ def test_exact_cosine_pairs_matches_join_form(spark) -> None:
 def test_local_components_fast_path_and_parity(
     spark, monkeypatch, conf_writes
 ) -> None:
-    """At or below LOCAL_EDGE_THRESHOLD symmetric edges, algorithm='auto'
-    solves the labeling on the driver (one collect, zero distributed
-    rounds) without writing the session conf; labels are identical to
-    the distributed label path; above the bound the distributed loop
-    still runs; NULL ids fall through to the distributed loop rather
+    """When 2 × the pair rows is at or below LOCAL_EDGE_THRESHOLD,
+    algorithm='auto' solves the labeling on the driver (one collect,
+    zero distributed rounds) without writing the session conf; labels
+    are identical to the distributed label path, also for reversed,
+    repeated and self pairs; one row over the bound the distributed
+    loop runs; NULL ids fall through to the distributed loop rather
     than the vectorized path; timestamp ids keep their instants under a
     non-UTC session timezone."""
     from sql_autoloader_spark.functions import dedup
@@ -1345,6 +1415,32 @@ def test_local_components_fast_path_and_parity(
     }
     assert calls == []
     assert got2 == want
+    monkeypatch.setattr(dedup, "LOCAL_EDGE_THRESHOLD", 1_000_000)
+
+    # the driver path symmetrizes raw pairs itself: a reversed
+    # duplicate, an exact duplicate and a self-pair label like star
+    messy = spark.createDataFrame(
+        [(5, 3), (3, 5), (5, 3), (3, 9), (9, 9), (40, 40), (41, 40)],
+        "id_a long, id_b long",
+    )
+    want_m = {
+        (r["id"], r["component"])
+        for r in dedup.connected_components(
+            messy, algorithm="star"
+        ).collect()
+    }
+    assert want_m == {(3, 3), (5, 3), (9, 3), (40, 40), (41, 40)}
+    # the bound is 2 × pair rows (7 rows here): at it the driver path
+    # runs, one below it the distributed loop does
+    for bound, path in ((14, ["local"]), (13, [])):
+        monkeypatch.setattr(dedup, "LOCAL_EDGE_THRESHOLD", bound)
+        calls.clear()
+        got_m = {
+            (r["id"], r["component"])
+            for r in dedup.connected_components(messy).collect()
+        }
+        assert calls == path, bound
+        assert got_m == want_m, bound
     monkeypatch.setattr(dedup, "LOCAL_EDGE_THRESHOLD", 1_000_000)
 
     # NULL ids: the vectorized path declines (returns None) and the

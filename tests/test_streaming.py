@@ -325,55 +325,62 @@ def test_fuzzy_dedup_stream_admission_and_idempotence(
 
 
 def test_fuzzy_dedup_crash_replay_is_idempotent(
-    spark: SparkSession, tmp_path: Path
+    spark: SparkSession, tmp_path: Path, monkeypatch
 ) -> None:
     """Commit protocol: a batch whose outputs landed but whose marker
     did NOT (crash between the sink appends and the commit point) must
     re-run on replay WITHOUT duplicating corpus rows — the replayed
     attempt overwrites its own ``__batch`` partition and ignores the
-    crashed attempt's uncommitted store keys when deciding admission."""
+    crashed attempt's uncommitted store keys when deciding admission.
+    The same admissions re-run with the broadcast gate at 0 (the plain
+    joins a backlog batch above the gate takes) admit the same ids."""
     import shutil
 
-    from sql_autoloader_spark.streaming.pipeline import _fuzzy_admitter
+    from sql_autoloader_spark.streaming import pipeline
 
     base = "the quick brown fox jumps over the lazy dog again and again " * 3
     batch0 = spark.createDataFrame(
         [(1, base), (2, base + " tiny tail"), (3, "totally different words about spark " * 4)],
         "doc_id long, text string",
     )
-    store = tmp_path / "store"
-    out = tmp_path / "out"
-    admit = _fuzzy_admitter(
-        id_col="doc_id",
-        text_col="text",
-        store_path=str(store),
-        out_path=str(out),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-
-    admit(batch0, 0)
-    # simulate the crash: outputs are in place, the marker never landed
-    shutil.rmtree(str(tmp_path / "store__commits"))
-    # at-least-once replay of the same batch
-    admit(batch0, 0)
-
-    counts: dict[int, int] = {}
-    for r in spark.read.parquet(str(out)).collect():
-        counts[r["doc_id"]] = counts.get(r["doc_id"], 0) + 1
-    assert counts == {1: 1, 3: 1}, counts  # no duplicates, near-dup 2 dropped
-
-    # the store still works for a later batch: a near-dup of doc 1 drops,
-    # and an already-committed batch id is skipped outright
+    # a near-dup of doc 1, and novel content
     batch1 = spark.createDataFrame(
         [(10, base + " another tail"), (11, "fresh unrelated content entirely " * 4)],
         "doc_id long, text string",
     )
-    admit(batch1, 1)
-    admit(batch1, 1)  # committed -> no-op
-    counts = {}
-    for r in spark.read.parquet(str(out)).collect():
-        counts[r["doc_id"]] = counts.get(r["doc_id"], 0) + 1
-    assert counts == {1: 1, 3: 1, 11: 1}, counts
+
+    def corpus(root: Path) -> dict[int, int]:
+        counts: dict[int, int] = {}
+        for r in spark.read.parquet(str(root / "out")).collect():
+            counts[r["doc_id"]] = counts.get(r["doc_id"], 0) + 1
+        return counts
+
+    def run(root: Path) -> None:
+        admit = pipeline._fuzzy_admitter(
+            id_col="doc_id",
+            text_col="text",
+            store_path=str(root / "store"),
+            out_path=str(root / "out"),
+            checkpoint_dir=str(root / "ckpt"),
+        )
+        admit(batch0, 0)
+        # simulate the crash: outputs are in place, the marker never landed
+        shutil.rmtree(str(root / "store__commits"))
+        # at-least-once replay of the same batch
+        admit(batch0, 0)
+        counts = corpus(root)
+        assert counts == {1: 1, 3: 1}, counts  # no duplicates, near-dup 2 dropped
+
+        # the store still works for a later batch: a near-dup of doc 1
+        # drops, and an already-committed batch id is skipped outright
+        admit(batch1, 1)
+        admit(batch1, 1)  # committed -> no-op
+        counts = corpus(root)
+        assert counts == {1: 1, 3: 1, 11: 1}, counts
+
+    run(tmp_path / "broadcast")
+    monkeypatch.setattr(pipeline, "PROBE_BROADCAST_MAX_KEYS", 0)
+    run(tmp_path / "plain")
 
 
 def test_signature_store_compaction_preserves_admissions(
