@@ -4,7 +4,10 @@ Design rules for 100 TB:
 - **Never all-pairs.** Every fuzzy family generates *candidate pairs* by
   joining on a bucketing key (band signature / fingerprint chunk / shared
   token), so the shuffle is keyed and skew is bounded by bucket size; the
-  exact similarity is then verified only on candidates.
+  exact similarity is then verified only on candidates.  The three LSH
+  families (MinHash, SimHash, embedding hyperplanes) share one candidate
+  generator, :func:`_bucket_pairs`; batch MinHash and the stream admitter
+  share :func:`_signed_shingles` and :func:`_band_keys`.
 - **Exact dedup is one keyed shuffle**: ``groupBy(fingerprint)`` compiles
   to partial+final HashAggregate (map-side combined).
 - All hashing uses ``xxhash64`` (JVM-side).  The Python touchpoints are
@@ -28,6 +31,7 @@ from __future__ import annotations
 
 import logging
 import threading
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -349,29 +353,35 @@ def _gram_keys(text_col: str, ngram_words: int, hashed: bool) -> Column:
     """Word n-gram keys of a text column: exact space-joined strings
     (portable, oracle-checkable) or xxhash64 over windows of per-token
     hashes (8-byte keys, strings never materialized — ~3× cheaper map
-    stage; used by the span ops' ``hash_grams`` scale path)."""
+    stage; used by the span ops' ``hash_grams`` scale path; MinHash
+    shingles use the same :func:`_hash_windows`)."""
     if not hashed:
         return word_shingles(F.col(text_col), ngram_words)
-
-    def windows(th: Column) -> Column:
-        count = F.size(th) - F.lit(ngram_words - 1)
-        return F.when(count <= 0, F.array().cast("array<bigint>")).otherwise(
-            F.transform(
-                F.sequence(F.lit(0), count - F.lit(1)),
-                lambda i: F.xxhash64(
-                    *[
-                        F.element_at(th, i + F.lit(w + 1))
-                        for w in range(ngram_words)
-                    ]
-                ),
-            )
-        )
-
     # bind the token-hash array once — element_at in the window lambda
     # would otherwise re-run the whole tokenize+hash per gram word
     return bind_once(
-        F.transform(tokens(F.col(text_col)), lambda t: F.xxhash64(t)),
-        windows,
+        _token_hashes(text_col), lambda th: _hash_windows(th, ngram_words)
+    )
+
+
+def _token_hashes(text_col: str) -> Column:
+    return F.transform(tokens(F.col(text_col)), lambda t: F.xxhash64(t))
+
+
+def _hash_windows(th: Column, ngram_words: int) -> Column:
+    """xxhash64 over each window of *ngram_words* consecutive token
+    hashes of *th* (empty when *th* is shorter than one window)."""
+    count = F.size(th) - F.lit(ngram_words - 1)
+    return F.when(count <= 0, F.array().cast("array<bigint>")).otherwise(
+        F.transform(
+            F.sequence(F.lit(0), count - F.lit(1)),
+            lambda i: F.xxhash64(
+                *[
+                    F.element_at(th, i + F.lit(w + 1))
+                    for w in range(ngram_words)
+                ]
+            ),
+        )
     )
 
 
@@ -578,7 +588,15 @@ def minhash_signature_vectorized(
     results match the JVM expression exactly.  This is the 100 TB path:
     one Arrow batch transfer of int64 arrays, vectorized O(shingles ×
     num_hashes) per batch.
+
+    HAZARD: pass a column, not an expression windowing a lambda-bound
+    array (:func:`_gram_keys`'s hashed form).  Wherever the input column
+    is projected away (e.g. a recompute after the pins are released)
+    Catalyst inlines the expression, the UDF is never extracted, and the
+    query fails with ``[INTERNAL_ERROR] Cannot evaluate expression:
+    sign(...)``.
     """
+
     from pyspark.sql.functions import pandas_udf
 
     params = _minhash_params(num_hashes, seed)
@@ -647,6 +665,144 @@ def minhash_signature_vectorized(
     return sign(hashes)
 
 
+def _check_minhash_params(
+    num_hashes: int, bands: int, shingle_words: int
+) -> int:
+    """Validate batch and stream MinHash parameters; return rows/band."""
+    if min(num_hashes, bands, shingle_words) < 1 or num_hashes % bands:
+        msg = (
+            f"num_hashes={num_hashes}, bands={bands} and shingle_words="
+            f"{shingle_words} must be >= 1, and bands must divide "
+            "num_hashes: a remainder would silently drop trailing "
+            "minhashes and change the recall S-curve from what was "
+            "requested."
+        )
+        raise ValueError(msg)
+    return num_hashes // bands
+
+
+def _signed_shingles(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_words: int,
+    sign: Callable[[Column], Column],
+) -> DataFrame:
+    """``(doc, sh, sig)``: each document's distinct hashed word shingles
+    in ``[0, p)`` and their MinHash signature ``sign(sh)``.  Documents
+    too short to form a single shingle are dropped: their empty shingle
+    set would give a degenerate all-null signature that glues them into
+    one giant bucket.
+
+    Shingle strings are never materialized: building them (slice +
+    concat_ws, both interpreted HOF lambdas) costs ~10x more than
+    everything else in the LSH pipeline combined.  The verify Jaccard
+    therefore runs over hashed shingle *sets* — identical to the
+    string-set Jaccard up to ~n²/2³² hash collisions.  ``th`` is a
+    column, not a bound lambda: see :func:`minhash_signature_vectorized`.
+    """
+    return (
+        df.select(
+            F.col(id_col).alias("doc"), _token_hashes(text_col).alias("th")
+        )
+        .where(F.size("th") >= shingle_words)
+        .select(
+            "doc",
+            F.array_distinct(
+                F.transform(
+                    _hash_windows(F.col("th"), shingle_words),
+                    lambda h: F.pmod(h, F.lit(_MERSENNE31)),
+                )
+            ).alias("sh"),
+        )
+        .select("doc", "sh", sign(F.col("sh")).alias("sig"))
+    )
+
+
+def _band_keys(signed: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
+    """``(doc, band, bucket)`` of a :func:`_signed_shingles` frame,
+    bucket = xxhash64 of a band's minhashes.  Batch MinHash joins on
+    these keys and the stream admitter stores them, so both build them
+    here."""
+    return signed.select(
+        "doc",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.xxhash64(
+                            *[
+                                F.element_at("sig", b * rows_per_band + r + 1)
+                                for r in range(rows_per_band)
+                            ]
+                        ).alias("bucket"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("bb"),
+    ).select("doc", "bb.band", "bb.bucket")
+
+
+def _bucket_pairs(
+    keys: DataFrame,
+    on: list[str],
+    *,
+    max_bucket_size: int | None,
+    pins: list[DataFrame],
+) -> DataFrame:
+    """Undeduplicated candidate pairs ``(id_a, id_b, <c>_a, <c>_b …)``,
+    ``id_a < id_b``, of a ``(*on, doc, *payload)`` frame: the bucket
+    self-join of the three LSH families, plus, under *max_bucket_size*,
+    the representative-star rows of oversized buckets (each member
+    paired with the bucket minimum, whose payload ``min_by`` takes).
+    The counted-bucket frame is persisted into *pins*."""
+    cols = ["doc", *[c for c in keys.columns if c not in (*on, "doc")]]
+
+    def pair(a: str, b: str) -> list[Column]:
+        # *a*/*b* name each side's columns; doc becomes id_a / id_b
+        return [
+            F.col(p.format(c)).alias(f"{'id' if c == 'doc' else c}_{s}")
+            for c in cols
+            for p, s in ((a, "a"), (b, "b"))
+        ]
+
+    star = None
+    if max_bucket_size is not None:
+        # one map-side-combined count per bucket; the join back is on the
+        # same key the self-join uses, so no extra repartitioning
+        counts = keys.groupBy(*on).agg(
+            F.count(F.lit(1)).alias("__f"),
+            F.min("doc").alias("__rep_doc"),
+            *[F.min_by(c, "doc").alias(f"__rep_{c}") for c in cols[1:]],
+        )
+        # pin the counted-bucket frame: the keys filter, the star branch,
+        # and BOTH sides of the self-join below read it — persisting runs
+        # the bucket-count aggregate + join ONCE instead of per consumer
+        # (lazy: no job until the query's first action)
+        sized = keys.join(counts, on=on).persist()
+        pins.append(sized)
+        keys = sized.where(F.col("__f") <= max_bucket_size).drop(
+            "__f", *[f"__rep_{c}" for c in cols]
+        )
+        star = sized.where(
+            (F.col("__f") > max_bucket_size)
+            & (F.col("doc") > F.col("__rep_doc"))
+        ).select(*pair("__rep_{}", "{}"))
+
+    pairs = (
+        keys.alias("l")
+        .join(
+            keys.alias("r"),
+            on=[F.col(f"l.{k}") == F.col(f"r.{k}") for k in on]
+            + [F.col("l.doc") < F.col("r.doc")],
+        )
+        .select(*pair("l.{}", "r.{}"))
+    )
+    return pairs if star is None else pairs.unionByName(star)
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     *,
@@ -685,57 +841,13 @@ def minhash_lsh_pairs(
 
     Returns ``(id_a, id_b[, jaccard])``, ``id_a < id_b``.
     """
-    if num_hashes % bands != 0:
-        msg = (
-            f"bands={bands} must divide num_hashes={num_hashes}: a "
-            "remainder would silently drop trailing minhashes and change "
-            "the recall S-curve from what was requested."
-        )
-        raise ValueError(msg)
-    rows_per_band = num_hashes // bands
-
-    # Shingle *hashes* built without materializing shingle strings:
-    # per-token xxhash64 first, then one xxhash64 over each window of
-    # `shingle_words` consecutive token hashes.  Building the string
-    # shingles (slice + concat_ws, both interpreted HOF lambdas) costs
-    # ~10x more than everything else in this pipeline combined; the
-    # hash-only form is a single cheap lambda per shingle.  The verify
-    # Jaccard therefore runs over hashed shingle *sets* — identical to
-    # the string-set Jaccard up to ~n²/2³² hash collisions.
-    docs = (
-        spread_for_compute(df).select(
-            F.col(id_col).alias("doc"),
-            F.transform(
-                tokens(F.col(text_col)), lambda t: F.xxhash64(t)
-            ).alias("th"),
-        )
-        .where(F.size("th") >= shingle_words)
-        .select(
-            "doc",
-            F.array_distinct(
-                F.transform(
-                    F.sequence(
-                        F.lit(0), F.size("th") - F.lit(shingle_words)
-                    ),
-                    lambda i: F.pmod(
-                        F.xxhash64(
-                            *[
-                                F.element_at("th", i + F.lit(w + 1))
-                                for w in range(shingle_words)
-                            ]
-                        ),
-                        F.lit(_MERSENNE31),
-                    ),
-                )
-            ).alias("sh"),
-        )
-    )
-    signed = docs.select(
-        "doc",
-        "sh",
-        minhash_signature_vectorized(
-            F.col("sh"), num_hashes=num_hashes
-        ).alias("sig"),
+    rows_per_band = _check_minhash_params(num_hashes, bands, shingle_words)
+    signed = _signed_shingles(
+        spread_for_compute(df),
+        id_col,
+        text_col,
+        shingle_words,
+        lambda sh: minhash_signature_vectorized(sh, num_hashes=num_hashes),
     )
     # Pin the signatures: the band self-join references this frame on both
     # sides and the verify stage twice more — without materialization the
@@ -747,25 +859,6 @@ def minhash_lsh_pairs(
     signed = signed.persist()
     pins.append(signed)
 
-    banded = signed.select(
-        "doc",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.element_at("sig", b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc", "bb.band", "bb.bucket")
     # One (band, bucket) exchange, computed once into cache: both sides
     # of the self-join (and, on the capped path, the bucket-count
     # aggregate and its join back) consume this partitioning, so the
@@ -775,66 +868,29 @@ def minhash_lsh_pairs(
     # cache lives one generation like ``signed`` above and is the
     # smaller of the two (3 numeric cols/row vs full shingle arrays +
     # signatures).
-    banded = banded.repartition(F.col("band"), F.col("bucket")).persist()
+    banded = (
+        _band_keys(signed, bands, rows_per_band)
+        .repartition(F.col("band"), F.col("bucket"))
+        .persist()
+    )
     pins.append(banded)
 
-    if max_bucket_size is not None:
-        # one map-side-combined count per (band, bucket); the join back is
-        # on the same key the self-join uses, so no extra repartitioning
-        counts = banded.groupBy("band", "bucket").agg(
-            F.count(F.lit(1)).alias("__f"),
-            F.min("doc").alias("__rep"),
-        )
-        # pin the counted-bucket frame: the keys filter, the star branch,
-        # and BOTH sides of the self-join below read it — persisting runs
-        # the bucket-count aggregate + join ONCE instead of per consumer
-        # (lazy: no job until the query's first action)
-        sized = banded.join(counts, on=["band", "bucket"]).persist()
-        pins.append(sized)
-        banded = sized.where(F.col("__f") <= max_bucket_size).drop(
-            "__f", "__rep"
-        )
-        star = (
-            sized.where(
-                (F.col("__f") > max_bucket_size)
-                & (F.col("doc") > F.col("__rep"))
-            )
-            .select(
-                F.col("__rep").alias("id_a"), F.col("doc").alias("id_b")
-            )
-            .distinct()
-        )
-    else:
-        star = None
-
-    # candidate dedup keyed on id_a ALONE: hashpartitioning(id_a)
-    # satisfies the (id_a, id_b) clustering the aggregate needs AND the
-    # id_a equi-join the verify stage opens with, so the dedup and that
-    # join share one exchange instead of shuffling the pair set twice
-    # (guide: two operations keyed the same way can share an exchange;
-    # plan-pinned in tests/test_plans.py).
+    # candidate dedup (star pairs included) keyed on id_a ALONE:
+    # hashpartitioning(id_a) satisfies the (id_a, id_b) clustering the
+    # aggregate needs AND the id_a equi-join the verify stage opens
+    # with, so the dedup and that join share one exchange instead of
+    # shuffling the pair set twice (guide: two operations keyed the same
+    # way can share an exchange; plan-pinned in tests/test_plans.py).
     pairs = (
-        banded.alias("l")
-        .join(
-            banded.alias("r"),
-            on=[
-                F.col("l.band") == F.col("r.band"),
-                F.col("l.bucket") == F.col("r.bucket"),
-                F.col("l.doc") < F.col("r.doc"),
-            ],
-        )
-        .select(
-            F.col("l.doc").alias("id_a"), F.col("r.doc").alias("id_b")
+        _bucket_pairs(
+            banded,
+            ["band", "bucket"],
+            max_bucket_size=max_bucket_size,
+            pins=pins,
         )
         .repartition(F.col("id_a"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    if star is not None:
-        pairs = (
-            pairs.unionByName(star)
-            .repartition(F.col("id_a"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
 
     if not verify:
         return pairs
@@ -962,9 +1018,7 @@ def simhash_fingerprints(
     """
     return spread_for_compute(df, barrier=False).select(
         F.col(id_col).alias("doc"),
-        simhash_vectorized(
-            F.transform(tokens(F.col(text_col)), lambda t: F.xxhash64(t))
-        ).alias("fp"),
+        simhash_vectorized(_token_hashes(text_col)).alias("fp"),
     )
 
 
@@ -1040,56 +1094,19 @@ def simhash_pairs(
         ).alias("ch"),
     ).select("doc", "fp", "ch.ci", "ch.cv")
 
-    star = None
-    if max_bucket_size is not None:
-        counts = chunked.groupBy("ci", "cv").agg(
-            F.count(F.lit(1)).alias("__f"),
-            F.min("doc").alias("__rep"),
-            F.min_by("fp", "doc").alias("__rep_fp"),
-        )
-        # pin (see minhash_lsh_pairs): filter, star, and both self-join
-        # sides consume this frame — one bucket-count aggregate, not four
-        sized = chunked.join(counts, on=["ci", "cv"]).persist()
-        pins.append(sized)
-        chunked = sized.where(F.col("__f") <= max_bucket_size).drop(
-            "__f", "__rep", "__rep_fp"
-        )
-        star = (
-            sized.where(
-                (F.col("__f") > max_bucket_size)
-                & (F.col("doc") > F.col("__rep"))
-            )
-            .select(
-                F.col("__rep").alias("id_a"),
-                F.col("doc").alias("id_b"),
-                F.bit_count(
-                    F.col("fp").bitwiseXOR(F.col("__rep_fp"))
-                ).cast("int").alias("hamming"),
-            )
-            .distinct()
-        )
-
     cand = (
-        chunked.alias("l")
-        .join(
-            chunked.alias("r"),
-            on=[
-                F.col("l.ci") == F.col("r.ci"),
-                F.col("l.cv") == F.col("r.cv"),
-                F.col("l.doc") < F.col("r.doc"),
-            ],
+        _bucket_pairs(
+            chunked, ["ci", "cv"], max_bucket_size=max_bucket_size, pins=pins
         )
         .select(
-            F.col("l.doc").alias("id_a"),
-            F.col("r.doc").alias("id_b"),
-            F.bit_count(
-                F.col("l.fp").bitwiseXOR(F.col("r.fp"))
-            ).cast("int").alias("hamming"),
+            "id_a",
+            "id_b",
+            F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
+            .cast("int")
+            .alias("hamming"),
         )
         .distinct()
     )
-    if star is not None:
-        cand = cand.unionByName(star).distinct()
     return cand.where(F.col("hamming") <= max_hamming)
 
 

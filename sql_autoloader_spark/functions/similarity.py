@@ -990,7 +990,10 @@ def embedding_neardup_pairs(
     # inspectable, partitions reused across both join sides.  Pins live
     # one generation (released by the next invocation or
     # dedup.release_pins) — see dedup._fresh_pins.
-    from sql_autoloader_spark.functions.dedup import _fresh_pins
+    from sql_autoloader_spark.functions.dedup import (
+        _bucket_pairs,
+        _fresh_pins,
+    )
 
     pins = _fresh_pins("embedding_neardup_pairs")
     banded = banded.persist()
@@ -1003,45 +1006,12 @@ def embedding_neardup_pairs(
     # pair instead, then re-join the vectors from the pinned signatures
     # frame — at 100 TB the dedup shuffle is the pair list, not the
     # pair list × vector payload.
-    keys = banded.select("tbl", "sig", "doc")
-    star = None
-    if max_bucket_size is not None:
-        counts = keys.groupBy("tbl", "sig").agg(
-            F.count(F.lit(1)).alias("__f"),
-            F.min("doc").alias("__rep"),
-        )
-        # pin (see minhash_lsh_pairs): filter, star, and both self-join
-        # sides consume this frame — one bucket-count aggregate, not four
-        sized = keys.join(counts, on=["tbl", "sig"]).persist()
-        pins.append(sized)
-        keys = sized.where(F.col("__f") <= max_bucket_size).drop(
-            "__f", "__rep"
-        )
-        star = sized.where(
-            (F.col("__f") > max_bucket_size) & (F.col("doc") > F.col("__rep"))
-        ).select(
-            F.col("__rep").alias("id_a"),
-            F.col("doc").alias("id_b"),
-        )
-
-    id_pairs = (
-        keys.alias("l")
-        .join(
-            keys.alias("r"),
-            on=[
-                F.col("l.tbl") == F.col("r.tbl"),
-                F.col("l.sig") == F.col("r.sig"),
-                F.col("l.doc") < F.col("r.doc"),
-            ],
-        )
-        .select(
-            F.col("l.doc").alias("id_a"),
-            F.col("r.doc").alias("id_b"),
-        )
-    )
-    if star is not None:
-        id_pairs = id_pairs.unionByName(star)
-    id_pairs = id_pairs.distinct()
+    id_pairs = _bucket_pairs(
+        banded.select("tbl", "sig", "doc"),
+        ["tbl", "sig"],
+        max_bucket_size=max_bucket_size,
+        pins=pins,
+    ).distinct()
 
     # pin the deduped vector lookup: the id_a and id_b joins each scan
     # it — one dedup aggregate over the vector payload, not two

@@ -786,7 +786,9 @@ def test_minhash_bucket_cap_star_fallback(spark: SparkSession) -> None:
         shingle_words=3,
         max_bucket_size=5,
     )
-    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
+    rows = pairs.collect()
+    got = {(r["id_a"], r["id_b"]) for r in rows}
+    assert len(rows) == len(got)  # star and bucket pairs deduped once
     # every cluster member links to the representative (doc 0)
     assert {(0, i) for i in range(1, 20)} <= got
     # no quadratic blowup inside the capped cluster
@@ -797,16 +799,48 @@ def test_minhash_bucket_cap_star_fallback(spark: SparkSession) -> None:
 
 def test_simhash_bucket_cap_star_fallback(spark: SparkSession) -> None:
     """Identical docs land in one chunk bucket; with a cap the cluster
-    still fully links to its representative at hamming 0."""
+    still fully links to its representative at hamming 0.  A cluster of
+    near-identical docs links the same way, each star row carrying
+    hamming(rep, doc), and no pair is emitted twice."""
     cluster = [(i, "identical boilerplate text block") for i in range(12)]
     df = spark.createDataFrame(cluster, "doc_id long, text string")
     pairs = dedup.simhash_pairs(
         df, id_col="doc_id", text_col="text", max_hamming=3, max_bucket_size=4
     )
-    got = {(r["id_a"], r["id_b"]): r["hamming"] for r in pairs.collect()}
+    rows = pairs.collect()
+    got = {(r["id_a"], r["id_b"]): r["hamming"] for r in rows}
+    assert len(rows) == len(got)
     assert {(0, i) for i in range(1, 12)} <= set(got)
     assert all(h == 0 for h in got.values())
     assert not any(a != 0 for a, _ in got)
+
+    # one differing tail word: fingerprints 0-1 bits from doc 100's
+    base = " ".join(f"w{i}" for i in range(60))
+    near = spark.createDataFrame(
+        [(100 + i, f"{base} tail{i}") for i in range(12)],
+        "doc_id long, text string",
+    )
+    fp = {
+        r["doc"]: r["fp"]
+        for r in dedup.simhash_fingerprints(
+            near, id_col="doc_id", text_col="text"
+        ).collect()
+    }
+    rows = dedup.simhash_pairs(
+        near,
+        id_col="doc_id",
+        text_col="text",
+        max_hamming=3,
+        max_bucket_size=4,
+    ).collect()
+    got = {(r["id_a"], r["id_b"]): r["hamming"] for r in rows}
+    assert len(rows) == len(got)
+    assert {(100, i) for i in range(101, 112)} <= set(got)
+    assert all(
+        h == bin((fp[a] ^ fp[b]) & (2**64 - 1)).count("1")
+        for (a, b), h in got.items()
+    )
+    assert any(got[(100, i)] > 0 for i in range(101, 112))
 
 
 def test_embedding_neardup_bucket_cap(spark: SparkSession) -> None:
@@ -819,7 +853,9 @@ def test_embedding_neardup_bucket_cap(spark: SparkSession) -> None:
     pairs = similarity.embedding_neardup_pairs(
         df, dim=4, threshold=0.99, max_bucket_size=3
     )
-    got = {(r["id_a"], r["id_b"]): r["sim"] for r in pairs.collect()}
+    rows = pairs.collect()
+    got = {(r["id_a"], r["id_b"]): r["sim"] for r in rows}
+    assert len(rows) == len(got)
     assert {(0, i) for i in range(1, 10)} <= set(got)
     assert all(abs(s - 1.0) < 1e-6 for s in got.values())
     assert not any(a != 0 for a, _ in got)

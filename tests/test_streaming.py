@@ -383,6 +383,92 @@ def test_fuzzy_dedup_crash_replay_is_idempotent(
     run(tmp_path / "plain")
 
 
+@pytest.mark.parametrize("entry", ["batch", "stream"])
+@pytest.mark.parametrize(
+    "params",
+    [
+        {"bands": 0},
+        {"bands": -8},
+        {"num_hashes": 0, "bands": 1},
+        {"shingle_words": 0},
+        {"num_hashes": 32, "bands": 5},
+    ],
+)
+def test_minhash_params_rejected_by_batch_and_stream(
+    spark: SparkSession, tmp_path: Path, entry: str, params: dict
+) -> None:
+    """Batch MinHash and the stream admitter reject the same bad
+    parameters with ValueError, before any Spark job or stream runs."""
+    from sql_autoloader_spark.functions import dedup
+    from sql_autoloader_spark.streaming import fuzzy_dedup_stream
+
+    schema = "doc_id long, text string"
+    with pytest.raises(ValueError, match="num_hashes"):
+        if entry == "batch":
+            docs = spark.createDataFrame([(0, "a b c d")], schema)
+            dedup.minhash_lsh_pairs(
+                docs, id_col="doc_id", text_col="text", **params
+            )
+        else:
+            (tmp_path / "src").mkdir()
+            fuzzy_dedup_stream(
+                spark.readStream.schema(schema).parquet(str(tmp_path / "src")),
+                id_col="doc_id",
+                text_col="text",
+                store_path=str(tmp_path / "store"),
+                out_path=str(tmp_path / "out"),
+                checkpoint_dir=str(tmp_path / "ckpt"),
+                **params,
+            )
+
+
+def test_stream_band_keys_match_batch_minhash(
+    spark: SparkSession, tmp_path: Path, monkeypatch
+) -> None:
+    """The stream admitter's band keys (JVM signature) and batch
+    minhash_lsh_pairs's banded keys (Arrow signature) are the same
+    ``(id, band, bucket)`` set, too-short docs keyed by neither.  The
+    signature store keeps these buckets forever: a drift between the two
+    sides would silently admit near-duplicates of the batch corpus."""
+    from sql_autoloader_spark.functions import dedup
+    from sql_autoloader_spark.streaming import pipeline
+
+    built: list[DataFrame] = []
+    real = dedup._band_keys
+
+    def record(*args) -> DataFrame:  # noqa: ANN002
+        built.append(real(*args))
+        return built[-1]
+
+    monkeypatch.setattr(dedup, "_band_keys", record)
+    base = "the quick brown fox jumps over the lazy dog again and again " * 3
+    docs = spark.createDataFrame(
+        [
+            (1, base),
+            (2, base + " tiny tail"),
+            (3, "  Completely DIFFERENT   words about spark shuffles " * 4),
+            (4, "hi"),  # below shingle_words
+            (5, "two words"),  # below shingle_words
+            (6, ""),  # below shingle_words
+            (7, "exactly three words"),
+        ],
+        "doc_id long, text string",
+    )
+    dedup.minhash_lsh_pairs(docs, id_col="doc_id", text_col="text")
+    pipeline._fuzzy_admitter(
+        id_col="doc_id",
+        text_col="text",
+        store_path=str(tmp_path / "store"),
+        out_path=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )(docs, 0)
+    assert len(built) == 2  # one band-key frame per side
+    batch_keys, stream_keys = ({tuple(r) for r in f.collect()} for f in built)
+    assert batch_keys == stream_keys
+    assert {i for i, _, _ in batch_keys} == {1, 2, 3, 7}
+    assert len(batch_keys) == 4 * 8  # 8 bands per keyed doc
+
+
 def test_signature_store_compaction_preserves_admissions(
     spark: SparkSession, tmp_path: Path
 ) -> None:

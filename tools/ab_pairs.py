@@ -7,7 +7,15 @@ seed to the next (so slow drift of a shared host does not favour one
 side).  For every end-to-end metric of ``BENCHMARK.json`` it then prints
 both medians, both interquartile ranges, how many pairs the change won,
 and whether the change's median stays within the metric's bound of the
-parent's median (the bound is relative: 0.25 allows 25% worse).
+parent's median (the bound is relative: 0.25 allows 25% worse).  Two
+verdicts follow the repository's review rules:
+
+- ``unresolved``: the parent's own spread (Q3 - Q1) is wider than the
+  bound allows (bound × parent median), and not every change run beats
+  every parent run, so "within bound" cannot be told from noise;
+- ``gain met``: the change wins at least 9 of every 10 pairs (ties count
+  for neither side) and its median is better than the parent's by more
+  than the parent's Q3 - Q1.
 
 The parent checkout is a temporary ``git worktree`` of ``--parent``,
 removed at exit; ``--parent-dir`` uses an existing checkout instead.
@@ -104,16 +112,21 @@ def summarize(bench: dict, pairs: list[dict]) -> list[dict]:
         wins = sum((c < p) if lower else (c > p) for p, c in both)
         med_p, med_c = statistics.median(par), statistics.median(chg)
         worse = (med_c - med_p) if lower else (med_p - med_c)
+        q1, q3 = quartiles(par)
+        beats_all = max(chg) < min(par) if lower else min(chg) > max(par)
         rows.append(
             {
                 "metric": name,
                 "parent_median": med_p,
-                "parent_q1_q3": quartiles(par),
+                "parent_q1_q3": (q1, q3),
                 "change_median": med_c,
                 "change_q1_q3": quartiles(chg),
                 "change_wins": wins,
                 "pairs": len(both),
                 "within_bound": worse <= m["bound"] * abs(med_p),
+                "unresolved": q3 - q1 > m["bound"] * abs(med_p)
+                and not beats_all,
+                "gain_met": 10 * wins >= 9 * len(both) and -worse > q3 - q1,
             }
         )
     return rows
@@ -155,6 +168,8 @@ def main() -> int:
             f"[{r['change_q1_q3'][0]:.4g}-{r['change_q1_q3'][1]:.4g}]  "
             f"wins {r['change_wins']}/{r['pairs']}  "
             f"bound {'holds' if r['within_bound'] else 'BROKEN'}"
+            f"{'  unresolved' if r['unresolved'] else ''}"
+            f"{'  gain met' if r['gain_met'] else ''}"
         )
     if args.out:
         Path(args.out).write_text(json.dumps({"pairs": pairs, "summary": rows}, indent=1))
