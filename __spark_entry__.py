@@ -1488,18 +1488,17 @@ def q_events_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("value", F.col("value").cast("decimal(18,6)"))
     agg = streaming.windowed_event_counts(stream, watermark="1 minute")
     name = f"stream_hourly_{uuid.uuid4().hex[:8]}"
-    # stateful: run on the RocksDB store (bounded memory at
-    # 100 TB/day; see streaming.rocksdb_state)
-    with streaming.rocksdb_state(spark):
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", tempfile.mkdtemp())
-            .start()
-        )
-        query.awaitTermination()
+    # stateful: the session's state-store provider backs it (RocksDB
+    # in production sessions; see OPERATIONS.md "Session settings")
+    query = (
+        agg.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", tempfile.mkdtemp())
+        .start()
+    )
+    query.awaitTermination()
     return spark.table(name).withColumn(
         "sum_value", F.col("sum_value").cast("double")
     )
@@ -1817,18 +1816,17 @@ def q_events_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, gap="30 minutes", watermark="0 seconds"
     )
     name = f"stream_sessions_{uuid.uuid4().hex[:8]}"
-    # stateful: run on the RocksDB store (bounded memory at
-    # 100 TB/day; see streaming.rocksdb_state)
-    with streaming.rocksdb_state(spark):
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", tempfile.mkdtemp())
-            .start()
-        )
-        query.awaitTermination()
+    # stateful: the session's state-store provider backs it (RocksDB
+    # in production sessions; see OPERATIONS.md "Session settings")
+    query = (
+        agg.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", tempfile.mkdtemp())
+        .start()
+    )
+    query.awaitTermination()
     return spark.table(name)
 
 
@@ -1914,18 +1912,17 @@ def q_events_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("bigint").alias("delay_us"),
     )
     name = f"stream_attr_{uuid.uuid4().hex[:8]}"
-    # stateful: run on the RocksDB store (bounded memory at
-    # 100 TB/day; see streaming.rocksdb_state)
-    with streaming.rocksdb_state(spark):
-        query = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", tempfile.mkdtemp())
-            .start()
-        )
-        query.awaitTermination()
+    # stateful: the session's state-store provider backs it (RocksDB
+    # in production sessions; see OPERATIONS.md "Session settings")
+    query = (
+        joined.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", tempfile.mkdtemp())
+        .start()
+    )
+    query.awaitTermination()
     return spark.table(name)
 
 
@@ -3384,18 +3381,17 @@ def q_events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         src().unionAll(src()), keys=["event_id"], watermark="3650 days"
     )
     name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    # stateful: run on the RocksDB store (bounded memory at
-    # 100 TB/day; see streaming.rocksdb_state)
-    with streaming.rocksdb_state(spark):
-        query = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", tempfile.mkdtemp())
-            .start()
-        )
-        query.awaitTermination()
+    # stateful: the session's state-store provider backs it (RocksDB
+    # in production sessions; see OPERATIONS.md "Session settings")
+    query = (
+        deduped.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", tempfile.mkdtemp())
+        .start()
+    )
+    query.awaitTermination()
     return spark.table(name)
 
 

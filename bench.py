@@ -106,12 +106,19 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from sql_autoloader_spark.streaming.pipeline import ROCKSDB_PROVIDER
+
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("sql_autoloader_spark-bench")
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # the session settings the loader's plans and the stateful
+        # stream queries were measured under (OPERATIONS.md)
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+        .config("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "16g")
         .getOrCreate()

@@ -68,6 +68,12 @@ class BaseConnector(ABC):
     #: broadcast set this False and let AQE pick the join at runtime.
     _broadcast_dims: bool = False
 
+    #: the sink stores zone-less timestamp columns as UTC wall clocks:
+    #: read-backs then align TIMESTAMP <-> TIMESTAMP_NTZ/DATE in UTC
+    #: (``ops.match_dtypes``) instead of by a plain cast, which binds
+    #: the session timezone
+    _utc_wall_clock: bool = False
+
     #: opt-in: keep the validated reconstruction the compare aggregate
     #: already computed, materialized flat (``localCheckpoint``), and
     #: expose it as :attr:`last_reconstruction` — callers that want the
@@ -237,7 +243,12 @@ class BaseConnector(ABC):
         # here; the scan stays a bare projection Catalyst can prune.
         check = self._read_table(table).select(*common)
         try:
-            ops.compare(payload, check, exact=False)
+            ops.compare(
+                payload,
+                check,
+                exact=False,
+                utc_wall_clock=self._utc_wall_clock,
+            )
         except CompareMissingRowsError as e:
             raise _insert_failed(table, e) from e
 
@@ -320,7 +331,9 @@ class BaseConnector(ABC):
             # (fact-sized) data side into a SortMergeJoin.
             db_fetch = F.broadcast(db_fetch)
 
-        db_data = ops.match_dtypes(db_fetch, data)
+        db_data = ops.match_dtypes(
+            db_fetch, data, utc_wall_clock=self._utc_wall_clock
+        )
         joined = ops.merge_join(data, db_data)
         result = joined
         if replace:
@@ -511,6 +524,7 @@ class BaseConnector(ABC):
             keep_grouped=self.expose_reconstruction,
             fast=_fast,
             on_mismatch=_on_mismatch,
+            utc_wall_clock=self._utc_wall_clock,
         )
         if not self.expose_reconstruction:
             return

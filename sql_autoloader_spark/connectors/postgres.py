@@ -117,12 +117,12 @@ _COPY_BUFFER = 1 << 18
 _MAX_SNAPSHOT_HOLDERS = 8
 
 #: naive timestamp text is interpreted in the connection's TimeZone;
-#: every Spark-side rendering this connector produces is UTC-naive
-#: (collects run under ``ops.utc_session``, COPY payloads are formatted
-#: JVM-side in UTC), so pin the interpretation to match on EVERY
-#: connection the connector opens.  DateStyle is pinned too: the wire
-#: and COPY decoders parse ISO output only, and a server configured
-#: with e.g. 'German, DMY' would otherwise break every datetime read.
+#: every timestamp this connector sends is rendered JVM-side as its UTC
+#: wall clock (``_render_timestamps``, on the driver INSERT and the COPY
+#: paths alike), so pin the interpretation to match on EVERY connection
+#: the connector opens.  DateStyle is pinned too: the wire and COPY
+#: decoders parse ISO output only, and a server configured with e.g.
+#: 'German, DMY' would otherwise break every datetime read.
 _TZ_SETUP = "SET TIME ZONE 'UTC'; SET datestyle = ISO"
 
 #: extra setup for auxiliary/executor connections only: these run
@@ -408,6 +408,13 @@ class PostgresConnector(BaseConnector):
 
     _quote = '"'
 
+    #: this sink's canonical wall clock is UTC: every connection is
+    #: pinned ``SET TIME ZONE 'UTC'`` and both write paths store a
+    #: TimestampType's UTC wall clock into zone-less columns, so the
+    #: lifecycle's read-back alignment reads those wall clocks in UTC
+    #: whatever the session timezone
+    _utc_wall_clock = True
+
     def __init__(
         self,
         spark: SparkSession,
@@ -508,34 +515,6 @@ class PostgresConnector(BaseConnector):
         #: open snapshot-export connections backing distributed reads
         self._snapshot_holders: list[PGWireClient] = []
         self.schema = self.get_schema()
-
-    # -- lifecycle wrappers: UTC-bound plan analysis --------------------------
-    #
-    # This sink's canonical wall clock is UTC: every connection is
-    # pinned ``SET TIME ZONE 'UTC'`` and both write paths store a
-    # TimestampType's UTC wall clock into zone-less columns.  The
-    # lifecycle's verification plans must interpret those wall clocks
-    # the same way — Spark binds time-zone-sensitive casts (the
-    # TIMESTAMP ↔ TIMESTAMP_NTZ alignment in ``ops.match_dtypes``) from
-    # the SESSION timezone at analysis, so each entry point analyzes its
-    # plans under ``ops.utc_session``.  Without this, a non-UTC session
-    # reinterprets a stored NTZ wall clock as session-local and every
-    # verification of a TimestampType→timestamp load mismatches.  The
-    # conf lock is held across the wrapped call (including its actions);
-    # concurrent OTHER-thread conf toggles on the same session serialize
-    # behind it — the documented trade of ``ops.utc_session``.
-
-    def insert(self, data: DataFrame, **kwargs) -> None:  # noqa: ANN003
-        with ops.utc_session(self.spark):
-            return super().insert(data, **kwargs)
-
-    def _retrieve_ids_counted(self, data: DataFrame, **kwargs):  # noqa: ANN003, ANN202
-        with ops.utc_session(self.spark):
-            return super()._retrieve_ids_counted(data, **kwargs)
-
-    def compare(self, data: DataFrame, **kwargs) -> None:  # noqa: ANN003
-        with ops.utc_session(self.spark):
-            return super().compare(data, **kwargs)
 
     # -- transactions -------------------------------------------------------
 
@@ -678,10 +657,7 @@ class PostgresConnector(BaseConnector):
             )
             for row in rs.rows
         ]
-        # wire timestamptz decodes to UTC-naive; enter Spark under UTC so
-        # the session timezone does not reinterpret the wall clock
-        with ops.utc_session(self.spark):
-            return self.spark.createDataFrame(rows, StructType(fields))
+        return self.spark.createDataFrame(rows, StructType(fields))
 
     # -- physical primitives ------------------------------------------------
 
@@ -909,10 +885,9 @@ class PostgresConnector(BaseConnector):
             self._copy_write(table, new_rows, columns)
             return
         quoted = ", ".join(f'"{c}"' for c in columns)
-        # collect under UTC so TimestampType renders as the same UTC
-        # wall clock the connection's pinned 'SET TIME ZONE UTC' writes
-        with ops.utc_session(self.spark):
-            collected = new_rows.select(*columns).collect()
+        # timestamps cross as the same rendered text the COPY path sends
+        rendered = self._render_timestamps(new_rows.select(*columns))
+        collected = rendered.collect()
         payload = [tuple(r[c] for c in columns) for r in collected]
         if not payload:
             return
@@ -1140,43 +1115,34 @@ class PostgresConnector(BaseConnector):
     @staticmethod
     def _render_timestamps(frame: DataFrame) -> DataFrame:
         """Render timestamp columns to UTC wall-clock text JVM-side
-        before a COPY.
+        before they leave Spark (COPY payloads and the driver INSERT's
+        collect alike).
 
-        ``TimestampType`` crosses the Python boundary as a NAIVE
-        datetime in the session timezone, which the server would then
-        reinterpret in the CONNECTION's timezone — two configs that
-        nothing forces to agree.  Instead, format the instant's UTC
-        wall clock: every connection this connector opens is pinned
-        ``SET TIME ZONE 'UTC'``, so a ``timestamptz`` landing stores
-        the exact instant and a ``timestamp`` landing stores the SAME
-        canonical UTC wall clock the driver INSERT path stores (which
-        collects under ``ops.utc_session``) — both physical paths land
-        bit-identical values.  The UTC binding happens at ANALYSIS time
-        (Spark resolves expression time zones from the session conf
-        when the plan is analyzed), so the lock is held only across
-        plan construction, never across the COPY itself; executors skip
-        per-row Python datetime rendering entirely.  NTZ timestamps are
-        zone-free wall clocks — a plain string cast is canonical.
+        ``TimestampType`` would cross the Python boundary as a NAIVE
+        datetime in the Python process's timezone, which the server then
+        reinterprets in the CONNECTION's timezone — two settings that
+        nothing forces to agree.  Instead, render the instant's wall
+        clock in UTC through a zone-free expression
+        (``ops.to_utc_wall_clock``), so neither the session nor the
+        process timezone enters: every connection this connector opens
+        is pinned ``SET TIME ZONE 'UTC'``, so a ``timestamptz`` landing
+        stores the exact instant and a ``timestamp`` landing stores the
+        canonical UTC wall clock, and both physical paths land
+        bit-identical values.  NTZ timestamps are zone-free wall clocks —
+        a plain string cast is canonical.
         """
-        exprs = []
-        changed = False
-        for fld in frame.schema.fields:
-            if isinstance(fld.dataType, TimestampType):
-                exprs.append(
-                    F.date_format(
-                        fld.name, "yyyy-MM-dd HH:mm:ss.SSSSSS"
-                    ).alias(fld.name)
-                )
-                changed = True
-            elif isinstance(fld.dataType, TimestampNTZType):
-                exprs.append(F.col(fld.name).cast("string").alias(fld.name))
-                changed = True
-            else:
-                exprs.append(F.col(fld.name))
-        if not changed:
+        ts = (TimestampType, TimestampNTZType)
+        if not any(isinstance(f.dataType, ts) for f in frame.schema.fields):
             return frame
-        with ops.utc_session(frame.sparkSession):
-            return frame.select(*exprs)
+        exprs = []
+        for fld in frame.schema.fields:
+            col = F.col(fld.name)
+            if isinstance(fld.dataType, TimestampType):
+                col = ops.to_utc_wall_clock(col)
+            if isinstance(fld.dataType, ts):
+                col = col.cast("string").alias(fld.name)
+            exprs.append(col)
+        return frame.select(*exprs)
 
     def _drop_stage_quietly(self, qualified: str, stage: str) -> None:
         """Best-effort staging drop on an error path: inside an aborted

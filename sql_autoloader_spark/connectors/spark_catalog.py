@@ -50,6 +50,7 @@ and are re-expressed here:
 from __future__ import annotations
 
 import json
+import threading
 import uuid
 from typing import TYPE_CHECKING, Literal
 
@@ -70,6 +71,14 @@ from sql_autoloader_spark.schema import ReferenceDict, Schema, TableDict
 
 if TYPE_CHECKING:
     from typing import Self
+
+#: serializes :meth:`SparkConnector._lazy_pin`'s AQE/shuffle-partitions
+#: toggle: the conf is SESSION-global, so two threads pinning at once
+#: (multi-threaded connectors on one session are supported) could
+#: restore each other's transient values and leave AQE off for
+#: unrelated queries.  The toggle only plans, so the lock is never held
+#: across execution.
+_CONF_LOCK = threading.Lock()
 
 _PROP_PREFIX = "sql_autoloader."
 
@@ -617,14 +626,14 @@ class SparkConnector(BaseConnector):
         exchange — the shuffle is paid once, at append.  Persisted as a
         table property like ``partition_by``; composable with it
         (partition dirs × hash buckets).  Ignored in temp-view mode.
-    tune_session_confs:
-        The connector sets two session-level Spark confs when they are
-        at their defaults (AQE's shuffled-hash-join conversion
-        threshold, and ``canChangeCachedPlanOutputPartitioning`` so AQE
-        sizes cached stages by bytes).  The conf API cannot
-        distinguish an explicit user setting from the default — pass
-        ``False`` if you deliberately configured either key the other
-        way and must not have the session mutated.
+
+    Notes
+    -----
+    The connector writes no session conf beyond the planning-only AQE
+    toggle of its small-append pins.  The two session settings its plans
+    were measured under (AQE's shuffled-hash-join conversion threshold
+    and ``canChangeCachedPlanOutputPartitioning``) are the caller's to
+    set; OPERATIONS.md "Session settings" gives their reasons.
     """
 
     def __init__(
@@ -637,7 +646,6 @@ class SparkConnector(BaseConnector):
         partition_by: dict[str, list[str]] | None = None,
         bucket_by: dict[str, tuple[int, list[str]]] | None = None,
         broadcast_dims: bool | None = None,
-        tune_session_confs: bool = True,
         recover: bool = True,
     ) -> None:
         self.spark = spark
@@ -649,43 +657,6 @@ class SparkConnector(BaseConnector):
         self._broadcast_dims = (
             key_strategy != "hash64" if broadcast_dims is None else broadcast_dims
         )
-        # The generated compare query's joins are dim-preserving LeftOuter
-        # with the fact on the RIGHT — a shape whose small (dim) side is
-        # not a legal broadcast build side, so the static planner and
-        # plain AQE both leave a SortMergeJoin that sorts the fact.  With
-        # this threshold set, AQE converts those SMJs to shuffled-hash
-        # joins building the dim-side map (legal since SPARK-36612) —
-        # the fact still shuffles (inherent to dim-preserving semantics)
-        # but is never sorted.  A non-zero user configuration wins; an
-        # explicit 0 is indistinguishable from the unset default through
-        # the conf API and also gets 64m — set the conf AFTER
-        # construction to force conversion off.
-        # SESSION-level tuning (the conf API cannot distinguish an
-        # explicit user setting from the Spark default, so a user who
-        # deliberately set either key the other way must pass
-        # tune_session_confs=False):
-        if tune_session_confs:
-            _shj_key = (
-                "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"
-            )
-            if spark.conf.get(_shj_key, "0b").lower().rstrip("bkmg") in (
-                "0",
-                "",
-            ):
-                spark.conf.set(_shj_key, "64m")
-            # By default AQE leaves CACHED plans' output partitioning
-            # alone (canChangeCachedPlanOutputPartitioning=false), so
-            # the pinned distinct input keeps every shuffle partition
-            # as a task no matter how small the data — a dim-sized
-            # cached frame then costs `shuffle.partitions` tasks on
-            # every one of the load's reads.  Letting AQE coalesce
-            # cached exchanges sizes those stages by bytes, the same
-            # policy as uncached plans.
-            _cc_key = (
-                "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-            )
-            if spark.conf.get(_cc_key, "false") == "false":
-                spark.conf.set(_cc_key, "true")
         self.dtype_adapters = dtype_adapters or {}
         self.partition_by = partition_by or {}
         self.bucket_by = bucket_by or {}
@@ -2568,8 +2539,6 @@ class SparkConnector(BaseConnector):
         # (A bound-scaled coalesce before this pin was tried and MEASURED
         # slower at sf0.1 — collapsing the anti-join stage's parallelism
         # costs more than scheduling its mostly-empty partitions saves.)
-        from sql_autoloader_spark.ops.dataframe_ops import _CONF_LOCK
-
         conf = self.spark.conf
         # the partition count is baked into the physical plan here (the
         # lazy checkpoint's toRdd plans now, executes later), so with
@@ -2583,7 +2552,7 @@ class SparkConnector(BaseConnector):
         parts = max(4, (bound or 0) // 500_000)
         keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
         # session conf is global: serialize the toggle against other
-        # threads' toggles (this section only PLANS — no execution)
+        # threads' pins (this section only PLANS — no execution)
         with _CONF_LOCK:
             prev = [conf.get(k) for k in keys]
             conf.set(keys[0], "false")

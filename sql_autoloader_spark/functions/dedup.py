@@ -264,7 +264,6 @@ def token_jaccard_pairs(
     text_col: str,
     threshold: float,
     shingle_words: int = 1,
-    max_shingle_freq: int | None = None,
 ) -> DataFrame:
     """Exact Jaccard similarity over token (or word-shingle) *sets* for
     every document pair sharing at least one token.
@@ -277,15 +276,9 @@ def token_jaccard_pairs(
     join per-doc set sizes (AQE-chosen strategy — the size table is one
     row per doc, corpus-proportional, so never force-broadcast)
     → exact Jaccard filter.  The join key is the shingle, so ubiquitous
-    shingles create skew: *max_shingle_freq* drops shingles appearing in
-    more than that many documents (stop-shingles) before the self-join —
-    a shingle in f docs generates f·(f-1)/2 candidate pairs that
-    near-certainly fail the threshold anyway.  NOTE: with the cap set,
-    stop-shingles are excluded from the intersection counts too, so
-    reported Jaccard is biased *low* (conservative) for pairs sharing
-    stop-shingles; leave the cap off for exact results (the default,
-    used by the sf0.01 oracle).  :func:`minhash_lsh_pairs` is the
-    sub-quadratic scale path.
+    shingles create skew: a shingle in f docs generates f·(f-1)/2
+    candidate pairs.  :func:`minhash_lsh_pairs` is the sub-quadratic
+    scale path.
     """
     shingle = (
         tokens(F.col(text_col))
@@ -309,19 +302,6 @@ def token_jaccard_pairs(
     pins.append(sets)
     sizes = sets.select("doc", F.size("sh").cast("bigint").alias("sz"))
     exploded = sets.select("doc", F.explode("sh").alias("s"))
-
-    if max_shingle_freq is not None:
-        hot = (
-            exploded.groupBy("s")
-            .agg(F.count(F.lit(1)).alias("f"))
-            .where(F.col("f") > max_shingle_freq)
-            .select("s")
-        )
-        # no forced broadcast: the stop-shingle set is corpus-dependent
-        # (a low cap makes it a large fraction of all distinct shingles);
-        # AQE broadcasts it when it is actually small and shuffles the
-        # anti-join otherwise
-        exploded = exploded.join(hot, on="s", how="left_anti")
 
     left = exploded.withColumnsRenamed({"doc": "id_a"})
     right = exploded.withColumnsRenamed({"doc": "id_b"})

@@ -24,13 +24,12 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import threading
-from contextlib import contextmanager
 from functools import reduce
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
 
 from sql_autoloader_spark.exceptions import (
     CompareMissingRowsError,
@@ -183,20 +182,58 @@ def distinct_rows(
     return projected if already_distinct else projected.distinct()
 
 
-def match_dtypes(db_data: DataFrame, like: DataFrame) -> DataFrame:
+def to_utc_wall_clock(col: Column) -> Column:
+    """The TIMESTAMP instant *col* as its UTC wall clock (TIMESTAMP_NTZ).
+    A plain cast binds the SESSION timezone when the plan is analyzed;
+    microsecond arithmetic from a zone-less epoch involves no zone."""
+    epoch = F.lit("1970-01-01 00:00:00").cast("timestamp_ntz")
+    return F.timestamp_add("MICROSECOND", F.unix_micros(col), epoch)
+
+
+def from_utc_wall_clock(col: Column) -> Column:
+    """Inverse of :func:`to_utc_wall_clock`: the TIMESTAMP_NTZ wall clock
+    *col*, read in UTC, as a TIMESTAMP.  Spark's NTZ -> TIMESTAMP casts
+    and timestamp arithmetic all bind the session timezone, so the wall
+    clock goes through text carrying an explicit ``Z``."""
+    return F.concat(col.cast("string"), F.lit("Z")).cast("timestamp")
+
+
+def match_dtypes(
+    db_data: DataFrame, like: DataFrame, *, utc_wall_clock: bool = False
+) -> DataFrame:
     """Cast columns of *db_data* to the dtypes *like* uses for shared names.
 
     Mirrors the reference's ``match_dtypes`` (dataframe_operations.py:79-103):
     values coming back from a database/catalog read are coerced to the user
     frame's types so joins and comparisons line up.
+
+    ``utc_wall_clock``: for sinks that store zone-less wall clocks in
+    UTC.  A TIMESTAMP then converts to TIMESTAMP_NTZ, DATE or text
+    through its UTC wall clock, and a TIMESTAMP_NTZ or DATE converts to
+    TIMESTAMP as a wall clock read in UTC (:func:`to_utc_wall_clock` /
+    :func:`from_utc_wall_clock`) — not in the session timezone a plain
+    cast would bind.
     """
+    db_types = {f.name: f.dataType for f in db_data.schema.fields}
     like_types = {f.name: f.dataType for f in like.schema.fields}
+
+    def cast_like(c: str) -> Column:
+        col, src, dst = _col(db_data, c), db_types[c], like_types[c]
+        if utc_wall_clock:
+            if isinstance(src, TimestampType) and not isinstance(
+                dst, TimestampType
+            ):
+                col = to_utc_wall_clock(col)
+            elif isinstance(dst, TimestampType) and isinstance(
+                src, (TimestampNTZType, DateType)
+            ):
+                col = from_utc_wall_clock(col.cast("timestamp_ntz"))
+        return col.cast(dst).alias(c)
+
     try:
         return db_data.select(
             [
-                _col(db_data, c).cast(like_types[c]).alias(c)
-                if c in like_types
-                else _col(db_data, c)
+                cast_like(c) if c in like_types else _col(db_data, c)
                 for c in db_data.columns
             ]
         )
@@ -428,13 +465,15 @@ def compare(
     db_data: DataFrame,
     *,
     exact: bool = True,
+    utc_wall_clock: bool = False,
 ) -> None:
     """Row-*set* comparison of data against a database read.
 
     ``exact=True``: the distinct row sets must match in both directions,
     else :class:`CompareNoExactMatchError`.  ``exact=False``: rows with any
     null are dropped from the data first, and data must be a subset of the
-    database, else :class:`CompareMissingRowsError`.
+    database, else :class:`CompareMissingRowsError`.  *utc_wall_clock*
+    goes to :func:`match_dtypes`.
 
     Replaces the reference's driver-side O(n*m) membership scan
     (dataframe_operations.py:36-37) with one distributed union+group-by
@@ -446,7 +485,7 @@ def compare(
         # and skipping the has_nulls pre-scan saves a full pass over data
         data = data.na.drop("any")
 
-    aligned = match_dtypes(db_data, data)
+    aligned = match_dtypes(db_data, data, utc_wall_clock=utc_wall_clock)
     db_aligned = aligned.select([_col(aligned, c) for c in data.columns])
     grouped = _compare_grouped(data, db_aligned)
 
@@ -496,40 +535,6 @@ def _row_hash_channels(frame: DataFrame, cols: list[str]) -> tuple[Column, Colum
     h1 = F.xxhash64(*interleaved)
     h2 = F.xxhash64(F.lit(-7046029254386353131), *interleaved)
     return h1, h2
-
-
-#: serializes session-conf toggles: the conf is SESSION-global, so two
-#: threads toggling concurrently (multi-threaded connectors on one
-#: session are supported) could restore each other's transient value
-#: and leave AQE off (the connector's small-append pin) or a UTC
-#: timezone in place for unrelated queries.  Only small bounded actions
-#: ever hold this across execution.
-_CONF_LOCK = threading.RLock()
-
-
-@contextmanager
-def utc_session(spark):  # noqa: ANN001, ANN202
-    """``spark.sql.session.timeZone=UTC`` for one bounded driver-side
-    conversion (a ``collect`` or ``createDataFrame``).
-
-    ``TimestampType`` crosses the Python boundary as a NAIVE datetime
-    rendered in the session timezone; database sinks that normalize
-    wall-clock values to UTC-naive on their side (the Postgres wire
-    decode) need the Spark side converted under UTC too, or the
-    idempotency pre-filter misses identical rows in any non-UTC session.
-    Serialized on the same lock as every other session-conf toggle; hold
-    it only across small bounded actions (the sinks' driver paths are
-    size-capped by construction).
-    """
-    conf = spark.conf
-    key = "spark.sql.session.timeZone"
-    with _CONF_LOCK:
-        prev = conf.get(key)
-        conf.set(key, "UTC")
-        try:
-            yield
-        finally:
-            conf.set(key, prev)
 
 
 def fast_set_equal(data: DataFrame, db_aligned: DataFrame) -> bool:
@@ -610,6 +615,7 @@ def validate_load_compare(
     keep_grouped: bool = False,
     fast: bool = False,
     on_mismatch=None,
+    utc_wall_clock: bool = False,
 ) -> DataFrame | None | object:
     """The full post-load validation in ONE aggregate job.
 
@@ -653,8 +659,10 @@ def validate_load_compare(
     classification and error samples — failure semantics are identical
     to the slow path, at the cost of re-executing the reconstruction
     join once (failures are the rare path by construction).
+
+    *utc_wall_clock* goes to :func:`match_dtypes`.
     """
-    aligned = match_dtypes(db_data, data)
+    aligned = match_dtypes(db_data, data, utc_wall_clock=utc_wall_clock)
     db_aligned = aligned.select([_col(aligned, c) for c in data.columns])
     if fast and exact:
         if fast_set_equal(data, db_aligned):

@@ -12,7 +12,6 @@ from sql_autoloader_spark.streaming.pipeline import (
     compact_signature_store,
     dedup_stream,
     fuzzy_dedup_stream,
-    rocksdb_state,
     sessionized_counts,
     user_activity_state,
     windowed_event_counts,
@@ -26,7 +25,6 @@ __all__ = [
     "fuzzy_dedup_stream",
     "read_changes_stream",
     "read_warehouse_changes_stream",
-    "rocksdb_state",
     "sessionized_counts",
     "stream_rollup",
     "user_activity_state",

@@ -20,8 +20,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import contextlib
-import threading
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
@@ -34,73 +32,21 @@ if TYPE_CHECKING:
     from sql_autoloader_spark.connectors.base import BaseConnector
 
 
-#: spilling state store (ships with Spark: rocksdbjni is a bundled jar)
+#: the spilling state store (ships with Spark: rocksdbjni is a bundled
+#: jar), for ``spark.sql.streaming.stateStore.providerClass``.  The
+#: stateful operators here run on whatever provider the session names
+#: at stream start (the provider is then persisted in the checkpoint);
+#: OPERATIONS.md "Session settings" says why production sessions should
+#: name this one.
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state."
     "RocksDBStateStoreProvider"
 )
 
-#: rocksdb_state mutates SESSION-GLOBAL conf: serialize entries so two
-#: threads scoping different providers on one SparkSession cannot
-#: interleave set/restore (round-12 advice).  REENTRANT: a helper that
-#: scopes rocksdb_state may be called from inside another scope in the
-#: same thread — nesting is benign (the inner scope restores the
-#: outer's provider), and a plain Lock would self-deadlock there.
-_STATE_CONF_LOCK = threading.RLock()
-
 #: :func:`fuzzy_dedup_stream` broadcasts a micro-batch's band keys (and
 #: its dropped-id set) into its joins only at or below this many keys;
 #: above it the joins are left to AQE (see the admitter's probe comment)
 PROBE_BROADCAST_MAX_KEYS = 4_000_000
-
-
-@contextlib.contextmanager
-def rocksdb_state(spark: "SparkSession"):  # noqa: ANN201
-    """Start the streaming queries inside this block on the RocksDB
-    state store instead of the default HDFS-backed in-memory map.
-
-    Why (round 11, after the ×30 probe): the default provider keeps
-    every live state row as JVM objects on the executor heap — for
-    ``dropDuplicatesWithinWatermark`` that is one entry PER KEY inside
-    the lateness horizon, so a high-cardinality dedup key at 100 TB/day
-    (billions of events inside a multi-hour watermark) linearly grows
-    the heap until GC collapse.  RocksDB keeps state off-heap with
-    spill-to-disk and changelog checkpointing: memory stays bounded by
-    the block cache, state size is bounded by rate × watermark horizon
-    on LOCAL DISK per executor, and eviction still happens at watermark
-    passage exactly as before (provider choice never changes
-    semantics — the RocksDB-backed runs are value-equal to the batch
-    oracles, pinned in tests/test_streaming.py).
-
-    The provider is a per-query setting read at STREAM START and
-    persisted in the checkpoint; this context manager scopes the
-    session conf around query construction+start, restoring the prior
-    value after (safe because our availableNow queries terminate inside
-    the block; a long-lived query keeps the provider it started with).
-
-    The conf is SESSION-GLOBAL, so the scope is serialized behind a
-    module lock: without it, an unrelated streaming query started
-    concurrently by another thread on the same SparkSession could
-    silently inherit (or lose) the RocksDB provider, and two nested
-    scopes could restore out of order.  Queries STARTED inside the
-    block keep their provider after the lock releases — only conf
-    reads during query construction need the exclusion.  Threads that
-    start streams on the same session WITHOUT this manager can still
-    observe the temporary provider; start all state-store-sensitive
-    queries through this scope (or on separate sessions) if that
-    matters.
-    """
-    key = "spark.sql.streaming.stateStore.providerClass"
-    with _STATE_CONF_LOCK:
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, ROCKSDB_PROVIDER)
-        try:
-            yield
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
 
 
 def autoload_stream(

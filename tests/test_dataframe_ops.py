@@ -95,6 +95,65 @@ def test_match_dtypes(spark: SparkSession) -> None:
     assert out.first().asDict() == {"a": 1, "b": 2.5}
 
 
+def test_match_dtypes_utc_wall_clock_ignores_session_timezone(
+    spark: SparkSession,
+) -> None:
+    """With ``utc_wall_clock``, TIMESTAMP <-> TIMESTAMP_NTZ/DATE/text
+    alignment reads and writes UTC wall clocks under any session
+    timezone — also in New York's fall-back and spring-forward hours,
+    where a session-zone cast is ambiguous or shifts the clock."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    utc = dt.timezone.utc
+    instants = [
+        dt.datetime(2021, 11, 7, 5, 30, tzinfo=utc),  # 01:30 EDT
+        dt.datetime(2021, 11, 7, 6, 30, tzinfo=utc),  # 01:30 EST
+        dt.datetime(2021, 3, 14, 2, 30, 0, 125000, tzinfo=utc),
+    ]
+    tz = "spark.sql.session.timeZone"
+    ny = spark.newSession()
+    ny.conf.set(tz, "America/New_York")
+    rows = [(m, m.replace(tzinfo=None)) for m in instants]
+    frame = ny.createDataFrame(rows, "ts timestamp, wall timestamp_ntz")
+    like = frame.select(
+        F.col("wall").alias("ts"),
+        F.col("ts").alias("wall"),
+        F.col("ts").alias("day"),
+        F.lit("").alias("text"),
+    )
+    # db side: stored instants and wall clocks, the other way round
+    db = frame.select(
+        "ts",
+        "wall",
+        F.col("wall").cast("date").alias("day"),
+        F.col("ts").alias("text"),
+    )
+    out = ops.match_dtypes(db, like, utc_wall_clock=True)
+    assert [f.dataType.simpleString() for f in out.schema.fields] == [
+        "timestamp_ntz", "timestamp", "timestamp", "string"
+    ]
+    got = out.select(
+        "ts",
+        F.unix_micros("wall").alias("wall"),
+        F.unix_micros("day").alias("day"),
+        "text",
+    ).collect()
+    expected = [
+        (
+            m.replace(tzinfo=None),
+            int(m.timestamp()) * 1_000_000 + m.microsecond,
+            int(dt.datetime.combine(m.date(), dt.time(), utc).timestamp())
+            * 1_000_000,
+            m.strftime("%Y-%m-%d %H:%M:%S")
+            + (f".{m.microsecond:06d}".rstrip("0") if m.microsecond else ""),
+        )
+        for m in instants
+    ]
+    assert [tuple(r) for r in got] == expected
+
+
 # --- merge_ids ---------------------------------------------------------------
 
 

@@ -116,7 +116,9 @@ def test_fast_compare_writes_no_session_conf(
     conf_writes: list,
 ) -> None:
     """The fast exact compare of a small frame (≤ 10k rows) leaves the
-    session conf alone, whether called directly or by ``load``."""
+    session conf alone, whether called directly or by ``load``; a
+    connector's construction and small load write only the small-append
+    pin's planning toggle."""
     data = _df(spark, [(str(i), str(i % 7)) for i in range(200)])
     conf_writes.clear()
     assert (
@@ -146,6 +148,25 @@ def test_fast_compare_writes_no_session_conf(
     with db:
         db.load(_df(spark, [("a", 1), ("b", 2)], "name string, v bigint"))
     assert during == [[]]
+
+    # construction plus one small load on a fresh session: the only
+    # writes are the small-append pin's planning toggle and its restore
+    fresh = spark.newSession()
+    conf_writes.clear()
+    db = SparkConnector(fresh)
+    db.execute_ddl(
+        """
+        CREATE TABLE fc4_dim (id INTEGER PRIMARY KEY, name TEXT UNIQUE);
+        CREATE TABLE fc4_fact (dim_id INTEGER REFERENCES fc4_dim (id), v BIGINT);
+        """
+    )
+    with db:
+        db.load(_df(fresh, [("a", 1), ("b", 2)], "name string, v bigint"))
+    pin_keys = {"spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"}
+    assert conf_writes
+    assert {method for method, _ in conf_writes} == {"set"}
+    assert {key for _, key in conf_writes} == pin_keys
+    assert len(conf_writes) % 4 == 0  # set both, restore both, per pin
 
 
 def test_load_conflict_error_identity_under_deferral(

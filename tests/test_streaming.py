@@ -853,31 +853,29 @@ def test_rocksdb_state_store_matches_batch_oracle(
     never change semantics: the RocksDB-backed dedup must equal the
     batch distinct, and the progress metrics must prove RocksDB — not
     the default map — actually held the state."""
-    from sql_autoloader_spark.streaming import rocksdb_state
+    from sql_autoloader_spark.streaming.pipeline import ROCKSDB_PROVIDER
 
-    stream = _read_stream(spark, events_dir)
-    with rocksdb_state(spark):
-        deduped = dedup_stream(stream, keys=["event_id"], watermark="1 day")
-        query = (
-            deduped.writeStream.format("memory")
-            .queryName("deduped_rocks")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt_rocks"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert query.awaitTermination(120)
-        progresses = [p for p in query.recentProgress if p]
-    # conf restored after the block
-    assert (
-        spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", None
-        )
-        != "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
+    provider_key = "spark.sql.streaming.stateStore.providerClass"
+    # the provider is a session setting: this query's own session names
+    # RocksDB, the caller's session stays as it was
+    rocks = spark.newSession()
+    rocks.conf.set(provider_key, ROCKSDB_PROVIDER)
+    stream = _read_stream(rocks, events_dir)
+    deduped = dedup_stream(stream, keys=["event_id"], watermark="1 day")
+    query = (
+        deduped.writeStream.format("memory")
+        .queryName("deduped_rocks")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt_rocks"))
+        .trigger(availableNow=True)
+        .start()
     )
+    assert query.awaitTermination(120)
+    progresses = [p for p in query.recentProgress if p]
+    # the caller's session conf is untouched
+    assert spark.conf.get(provider_key, None) != ROCKSDB_PROVIDER
     ids = sorted(
-        r["event_id"] for r in spark.table("deduped_rocks").collect()
+        r["event_id"] for r in rocks.table("deduped_rocks").collect()
     )
     batch = sorted(
         r["event_id"]

@@ -44,11 +44,17 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry_mod
+    from sql_autoloader_spark.streaming.pipeline import ROCKSDB_PROVIDER
 
     spark = (
         SparkSession.builder.master("local[4]")
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.sql.session.timeZone", "UTC")
+        # the session settings the loader's plans and the stateful
+        # stream queries were measured under (OPERATIONS.md)
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+        .config("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
