@@ -4,7 +4,7 @@ The reference lets users run raw DDL through the DB cursor and then
 re-introspect (/root/reference/sql_autoloader/connector.py:167-173,
 README.md:116-135).  Spark's catalog has no PK/FK/UNIQUE constraints, so
 this parser extracts them from the same DDL text and the connector stores
-them as table properties — the Spark-native substitute for
+them as sidecar JSON — the Spark-native substitute for
 ``pragma_foreign_key_list`` / ``information_schema`` introspection
 (reference sqlite_connector.py:84-147, postgres_connector.py:67-157).
 

@@ -80,8 +80,6 @@ if TYPE_CHECKING:
 #: across execution.
 _CONF_LOCK = threading.Lock()
 
-_PROP_PREFIX = "sql_autoloader."
-
 #: hidden commit-token column on managed tables (manifest-commit protocol)
 _COMMIT_COL = "__commit_id"
 #: legacy per-database journal table (pre-file-journal databases); still
@@ -238,7 +236,6 @@ class _CommitJournal:
         self,
         spark: SparkSession,
         database: str,
-        claim_strategy: ClaimStrategy | None = None,
     ) -> None:
         location = spark.catalog.getDatabase(database).locationUri
         self._dir = location.rstrip("/") + "/_sql_autoloader_commits"
@@ -251,16 +248,15 @@ class _CommitJournal:
         )
         self._fs.mkdirs(root)
         self._root = root
-        scheme = jvm.java.net.URI(location).getScheme()
-        #: local paths use the link(2)-based atomic claim
-        self._local = scheme in (None, "file")
         #: token content cache (commit files are immutable; unreadable
         #: ones are NOT cached — re-read on the next listing)
         self._tokens: dict[int, int] = {}
-        #: scheme-appropriate atomic-claim primitive, injectable for
-        #: object stores (pass a ConditionalPutClaim)
-        self._strategy: ClaimStrategy = claim_strategy or (
-            LinkClaim() if self._local else RenameClaim()
+        #: scheme-appropriate atomic-claim primitive: local paths use
+        #: the link(2)-based claim; an object-store deployment assigns a
+        #: ConditionalPutClaim here after construction
+        scheme = jvm.java.net.URI(location).getScheme()
+        self._strategy: ClaimStrategy = (
+            LinkClaim() if scheme in (None, "file") else RenameClaim()
         )
 
     def _read_token(self, name: str) -> int | None:
@@ -583,7 +579,8 @@ class SparkConnector(BaseConnector):
         The session to run on.
     database:
         When given, tables are *managed catalog tables* in this database
-        and PK/FK/UNIQUE metadata persists as table properties (the
+        and PK/FK/UNIQUE metadata persists as sidecar JSON,
+        ``<db>/_sql_autoloader_meta/<table>.json`` beside the data (the
         Spark-native substitute for ``pragma_foreign_key_list``,
         reference sqlite_connector.py:84-147).  When ``None`` (default)
         tables are in-memory DataFrames registered as temp views —
@@ -615,16 +612,16 @@ class SparkConnector(BaseConnector):
         RDBMS sinks cannot express).  Fact tables partitioned by a
         low-cardinality column (date bucket, region) get partition
         pruning on every filtered scan and append-only writes touch only
-        the partitions present in the payload.  Persisted as a table
-        property so reopened connectors keep appending partitioned.
+        the partitions present in the payload.  Persisted in the
+        sidecar JSON so reopened connectors keep appending partitioned.
         Ignored in temp-view mode (in-memory frames have no layout).
     bucket_by:
         ``{table_name: (n_buckets, [column, ...])}`` — hash bucketing
         (+ per-bucket sort) for managed catalog tables.  Two tables
         bucketed on the same join key co-locate at write time, so
         repeated post-load analytical joins run with ZERO runtime
-        exchange — the shuffle is paid once, at append.  Persisted as a
-        table property like ``partition_by``; composable with it
+        exchange — the shuffle is paid once, at append.  Persisted in
+        the sidecar JSON like ``partition_by``; composable with it
         (partition dirs × hash buckets).  Ignored in temp-view mode.
 
     Notes
@@ -693,8 +690,7 @@ class SparkConnector(BaseConnector):
         if database is not None:
             self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
             self._init_commit_log()
-            self._adopt_filesystem_tables()
-            self._load_catalog_state()
+            self._load_tables()
             # recover=False is the READ-SIDE open: the orphan sweep
             # cannot distinguish a crashed commit's leftovers from a
             # commit in flight RIGHT NOW (see _recover_orphans), so a
@@ -1395,7 +1391,7 @@ class SparkConnector(BaseConnector):
         the table's full content to ``<table>__recovery_staging`` before
         rewriting the target; a crash between the two can leave the
         target dropped or partial while the staging copy is complete.
-        ``_load_catalog_state`` warns when it finds one — this is the
+        ``_load_tables`` warns when it finds one — this is the
         actionable follow-up: move the staging copy aside, rewrite the
         target from it (the normal crash-safe rewrite), and clean up.
         Returns the number of restored VISIBLE rows.
@@ -1661,7 +1657,7 @@ class SparkConnector(BaseConnector):
         # open connectors before starting writers.  Deliberately NOT
         # swept here: __recovery_staging dirs — a crashed rewrite's
         # staging copy may be the only surviving content of its table
-        # (see the _load_catalog_state warning); the next rewrite on
+        # (see the _load_tables warning); the next rewrite on
         # that table clears it in place instead.
         fs, path_cls = _hadoop_fs(self.spark, self._db_location())
         db_root = path_cls(self._db_location())
@@ -1822,7 +1818,7 @@ class SparkConnector(BaseConnector):
         # it as an external-location entry there.  A bare overwrite-
         # saveAsTable only works for tables this session created as
         # managed: for a table ADOPTED from another process (external
-        # location, _adopt_filesystem_tables) the drop keeps the files
+        # location, _load_tables) the drop keeps the files
         # and the managed re-create refuses the non-empty location.
         # DROP + clear + external create is uniform for both; _drop_table
         # already deletes data files explicitly for the same reason.
@@ -1832,12 +1828,6 @@ class SparkConnector(BaseConnector):
         fs.delete(path_cls(loc), True)
         writer = self._apply_layout(staged.write.mode("overwrite"), table)
         writer.option("path", loc).saveAsTable(self._qualified(table))
-        # restore the metadata properties IMMEDIATELY after the rewrite
-        # (overwrite recreates the table without them): a crash before
-        # this line leaves a table a fresh connector would not recognize
-        # as ours — keep that window as small as possible, and only then
-        # clean up the staging copy
-        self._apply_table_props(self._meta[table])
         self.spark.sql(f"DROP TABLE IF EXISTS {staging}")
 
     # -- DDL / metadata -------------------------------------------------------
@@ -1896,7 +1886,7 @@ class SparkConnector(BaseConnector):
                 f"ALTER TABLE {self._qualified(action.table)} "
                 f"ADD COLUMNS (`{action.column}` {action.spark_type})"
             )
-            self._apply_table_props(meta)
+            self._persist_table_meta(meta)
             self._committed[action.table] = self._committed_view(action.table)
         else:
             self._committed[action.table] = self._committed[
@@ -1983,7 +1973,7 @@ class SparkConnector(BaseConnector):
                 with_epoch.write.mode("ignore"), parsed.name
             )
             create_writer.saveAsTable(qualified)
-            self._apply_table_props(parsed)
+            self._persist_table_meta(parsed)
             if (
                 pre_existed
                 and _COMMIT_COL not in self.spark.table(qualified).columns
@@ -2002,30 +1992,6 @@ class SparkConnector(BaseConnector):
             self._committed[parsed.name] = empty
             self._committed_empty[parsed.name] = True
 
-    def _apply_table_props(self, parsed: ParsedTable) -> None:
-        props = ", ".join(
-            f"'{_PROP_PREFIX}{key}' = '{self._escape(json.dumps(value))}'"
-            for key, value in (
-                ("primary_key", parsed.primary_key),
-                ("foreign_keys", parsed.foreign_keys),
-                ("payload_columns", parsed.payload_columns),
-                ("unique_constraints", parsed.unique_constraints),
-                ("references", parsed.references),
-                ("column_types", parsed.column_types),
-                ("not_null", parsed.not_null),
-                ("partition_by", self.partition_by.get(parsed.name, [])),
-                (
-                    "bucket_by",
-                    list(self.bucket_by.get(parsed.name, (0, []))),
-                ),
-            )
-        )
-        self.spark.sql(
-            f"ALTER TABLE {self._qualified(parsed.name)} "
-            f"SET TBLPROPERTIES ({props})"
-        )
-        self._persist_table_meta(parsed)
-
     # -- cross-process metadata (file-persisted, like the journal) -----------
     #
     # Session catalogs (in-memory, and any non-shared metastore) are
@@ -2033,12 +1999,13 @@ class SparkConnector(BaseConnector):
     # is all on the shared filesystem.  Persisting each table's
     # metadata as a JSON file next to the journal makes the database
     # REOPENABLE from any process (the analogue of opening the same
-    # SQLite file twice, reference sqlite_connector.py): a fresh
-    # connector adopts every persisted table as an external-location
-    # catalog entry over the existing files, then introspects it
-    # through the normal table-properties path.  DDL (create/alter/
-    # drop) is single-writer like any migration system; DATA commits
-    # are fully concurrent across processes via the journal.
+    # SQLite file twice, reference sqlite_connector.py): the sidecar is
+    # the ONLY metadata store, and opening reads it without writing.  A
+    # fresh connector adopts every persisted table absent from its
+    # session catalog as an external-location entry over the existing
+    # files.  DDL (create/alter/drop) is single-writer like any
+    # migration system; DATA commits are fully concurrent across
+    # processes via the journal.
 
     def _db_location(self) -> str:
         return self.spark.catalog.getDatabase(
@@ -2077,15 +2044,13 @@ class SparkConnector(BaseConnector):
                 ),
             }
         )
-        # the tmp name MUST be process-unique: two connectors opening
-        # the same warehouse simultaneously both adopt the same tables
-        # (_adopt_filesystem_tables → _apply_table_props → here), and a
-        # shared "<table>.json.tmp" would make one writer's move yank
-        # the file out from under the other's (NoSuchFileException
-        # inside __init__ — the concurrent-OPEN race).  With a
-        # uuid-suffixed tmp each writer moves only its own file; both
-        # moves succeed (REPLACE_EXISTING, identical content, last one
-        # wins) and no collision is possible.  Same discipline as the
+        # the tmp name MUST be process-unique: two connectors running
+        # the same DDL script against one warehouse at once persist the
+        # same table, and a shared "<table>.json.tmp" would make one
+        # writer's move yank the file out from under the other's
+        # (NoSuchFileException).  With a uuid-suffixed tmp each writer
+        # moves only its own file; both moves succeed (REPLACE_EXISTING,
+        # identical content, last one wins).  Same discipline as the
         # commit journal's per-token claim tmps.
         tmp_name = f"{parsed.name}.json.tmp-{uuid.uuid4().hex}"
         tmp = path_cls(f"{meta_dir}/{tmp_name}")
@@ -2148,7 +2113,7 @@ class SparkConnector(BaseConnector):
         else:
             # remote FS: rename refuses an existing destination —
             # delete-then-rename with its (tiny) absent window; a
-            # concurrent adopter may win the rename between our delete
+            # concurrent DDL writer may win the rename between our delete
             # and our rename, in which case our rename returns False
             # with the destination present: the content both writers
             # persist is identical, so tolerate the lost race and just
@@ -2167,150 +2132,113 @@ class SparkConnector(BaseConnector):
                         f"{tmp} -> {dest} refused and no concurrent "
                         "writer landed the destination (permissions/"
                         "quota?); the table's metadata file is gone — "
-                        "re-run the DDL/open to restore it."
+                        "re-run the DDL to restore it."
                     )
                     raise RuntimeError(msg)
 
-    def _adopt_filesystem_tables(self) -> None:
-        """Register every file-persisted table absent from THIS
-        process's session catalog as an external-location entry over
-        its existing directory, restoring layout + table properties so
-        ``_load_catalog_state`` introspects it like any other table."""
+    def _read_table_meta(
+        self, fs, path  # noqa: ANN001
+    ) -> tuple[ParsedTable, list[str], tuple[int, list[str]]]:
+        """Decode one sidecar written by :meth:`_persist_table_meta`:
+        the table's metadata, its partition columns and its
+        ``(n_buckets, columns)`` bucket spec."""
+        stream = fs.open(path)
+        try:
+            spec = json.loads(
+                self.spark.sparkContext._jvm.org.apache.commons.io.IOUtils
+                .toString(stream, "UTF-8")
+            )
+        finally:
+            stream.close()
+        parsed = ParsedTable(
+            name=path.getName()[: -len(".json")],
+            column_types=[tuple(ct) for ct in spec["column_types"]],
+            primary_key=spec["primary_key"],
+            foreign_keys=spec["foreign_keys"],
+            payload_columns=spec["payload_columns"],
+            unique_constraints=spec["unique_constraints"],
+            references=[tuple(r) for r in spec["references"]],
+            not_null=spec.get("not_null", []),
+        )
+        n_buckets, bucket_cols = spec.get("bucket_by", [0, []])
+        return parsed, spec.get("partition_by") or [], (n_buckets, bucket_cols)
+
+    def _load_tables(self) -> None:
+        """Load every table of the database from its sidecar JSON, in
+        one pass that writes nothing.  A table absent from THIS
+        process's session catalog gets an external-location entry over
+        its existing directory, with the persisted layout."""
+        import logging
+
+        db_loc = self._db_location()
         meta_dir = self._meta_dir()
         fs, path_cls = _hadoop_fs(self.spark, meta_dir)
         root = path_cls(meta_dir)
         if not fs.exists(root):
             return
-        jvm = self.spark.sparkContext._jvm
-        for status in fs.listStatus(root):
-            fname = status.getPath().getName()
-            if not fname.endswith(".json"):
+        paths = sorted(
+            (s.getPath() for s in fs.listStatus(root)),
+            key=lambda p: p.getName(),
+        )
+        for path in paths:
+            if not path.getName().endswith(".json"):
                 continue
-            table = fname[: -len(".json")]
-            qualified = self._qualified(table)
-            if self.spark.catalog.tableExists(qualified):
-                continue
-            stream = fs.open(status.getPath())
-            try:
-                text = jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
-                )
-            finally:
-                stream.close()
-            spec = json.loads(text)
-            cols = ", ".join(
-                f"`{c}` {t}" for c, t in spec["column_types"]
+            parsed, parts, (n_buckets, bucket_cols) = self._read_table_meta(
+                fs, path
             )
-            cols += f", `{_COMMIT_COL}` BIGINT"
-            clauses = ""
-            if parts := spec.get("partition_by") or []:
-                plist = ", ".join(f"`{c}`" for c in parts)
-                clauses += f" PARTITIONED BY ({plist})"
-                self.partition_by.setdefault(table, parts)
-            n_buckets, bucket_cols = spec.get("bucket_by", [0, []])
-            if n_buckets:
-                blist = ", ".join(f"`{c}`" for c in bucket_cols)
-                clauses += (
-                    f" CLUSTERED BY ({blist}) INTO {n_buckets} BUCKETS"
+            name = parsed.name
+            qualified = self._qualified(name)
+            if not self.spark.catalog.tableExists(qualified):
+                cols = ", ".join(f"`{c}` {t}" for c, t in parsed.column_types)
+                cols += f", `{_COMMIT_COL}` BIGINT"
+                clauses = ""
+                if parts:
+                    plist = ", ".join(f"`{c}`" for c in parts)
+                    clauses += f" PARTITIONED BY ({plist})"
+                if n_buckets:
+                    # the same bucketBy(...).sortBy(...) _apply_layout writes
+                    blist = ", ".join(f"`{c}`" for c in bucket_cols)
+                    clauses += (
+                        f" CLUSTERED BY ({blist}) SORTED BY ({blist})"
+                        f" INTO {n_buckets} BUCKETS"
+                    )
+                self.spark.sql(
+                    f"CREATE TABLE {qualified} ({cols}) USING PARQUET"
+                    f"{clauses} LOCATION '{db_loc}/{name}'"
                 )
-                self.bucket_by.setdefault(
-                    table, (n_buckets, bucket_cols)
-                )
-            location = f"{self._db_location()}/{table}"
-            self.spark.sql(
-                f"CREATE TABLE {qualified} ({cols}) USING PARQUET"
-                f"{clauses} LOCATION '{location}'"
-            )
-            if parts:
-                self.spark.sql(f"MSCK REPAIR TABLE {qualified}")
-            parsed = ParsedTable(
-                name=table,
-                column_types=[
-                    tuple(ct) for ct in spec["column_types"]
-                ],
-                primary_key=spec["primary_key"],
-                foreign_keys=spec["foreign_keys"],
-                payload_columns=spec["payload_columns"],
-                unique_constraints=spec["unique_constraints"],
-                references=[tuple(r) for r in spec["references"]],
-                not_null=spec.get("not_null", []),
-            )
-            self._apply_table_props(parsed)
-
-    def _load_catalog_state(self) -> None:
-        """Introspect existing tables of the database from table properties."""
-        import logging
-
-        rows = self.spark.sql(f"SHOW TABLES IN {self.database}").collect()
-        for row in rows:
-            name = row.tableName
-            if row.isTemporary:
-                continue
-            if name.endswith("__recovery_staging"):
+                if parts:
+                    self.spark.sql(f"MSCK REPAIR TABLE {qualified}")
+            if fs.exists(path_cls(f"{db_loc}/{name}__recovery_staging")):
                 # a crashed _overwrite_table left its staging copy —
                 # the target either survived intact or can be restored
-                # from this copy; surface it instead of silently
-                # treating it as a foreign table
+                # from this copy; surface it
                 logging.getLogger("sql_autoloader_spark").warning(
-                    "leftover recovery staging table '%s' found — a "
-                    "table rewrite (compaction/migration) crashed; "
-                    "verify '%s', then run recover_staging('%s') to "
-                    "restore it from the copy (or drop the staging "
+                    "leftover recovery staging copy '%s__recovery_staging' "
+                    "found — a table rewrite (compaction/migration) "
+                    "crashed; verify '%s', then run recover_staging('%s') "
+                    "to restore it from the copy (or drop the staging "
                     "table if the target survived intact).",
                     name,
-                    name.removesuffix("__recovery_staging"),
-                    name.removesuffix("__recovery_staging"),
+                    name,
+                    name,
                 )
-                continue
-            props = {
-                r.key: r.value
-                for r in self.spark.sql(
-                    f"SHOW TBLPROPERTIES {self._qualified(name)}"
-                ).collect()
-            }
-            pk_prop = props.get(f"{_PROP_PREFIX}primary_key")
-            if pk_prop is None:
-                continue  # not one of ours
-            parsed = ParsedTable(
-                name=name,
-                column_types=[
-                    tuple(ct)
-                    for ct in json.loads(props[f"{_PROP_PREFIX}column_types"])
-                ],
-                primary_key=json.loads(pk_prop),
-                foreign_keys=json.loads(props[f"{_PROP_PREFIX}foreign_keys"]),
-                payload_columns=json.loads(props[f"{_PROP_PREFIX}payload_columns"]),
-                unique_constraints=json.loads(
-                    props[f"{_PROP_PREFIX}unique_constraints"]
-                ),
-                references=[
-                    tuple(r)
-                    for r in json.loads(props[f"{_PROP_PREFIX}references"])
-                ],
-                not_null=json.loads(
-                    props.get(f"{_PROP_PREFIX}not_null", "[]")
-                ),
-            )
             self._meta[name] = parsed
             # restore the persisted physical layout FIRST: a migration
             # rewrite below must re-apply it, not erase it
-            if parts := json.loads(
-                props.get(f"{_PROP_PREFIX}partition_by", "[]")
-            ):
+            if parts:
                 self.partition_by.setdefault(name, parts)
-            n_buckets, bucket_cols = json.loads(
-                props.get(f"{_PROP_PREFIX}bucket_by", "[0, []]")
-            )
             if n_buckets:
                 self.bucket_by.setdefault(name, (n_buckets, bucket_cols))
             # another PROCESS may have appended since this session last
             # listed the table's files — drop the cached file index so
             # a fresh connector sees the current directory contents
-            self.spark.catalog.refreshTable(self._qualified(name))
-            raw = self.spark.table(self._qualified(name))
+            self.spark.catalog.refreshTable(qualified)
+            raw = self.spark.table(qualified)
             if _COMMIT_COL not in raw.columns:
-                # legacy (pre-manifest) table: one-time migration tags
-                # all existing rows as epoch 0 (always durable)
+                # legacy (pre-manifest) table, or a crash inside
+                # _create_table after its sidecar landed: one-time
+                # migration tags all existing rows as epoch 0 (always
+                # durable)
                 self._overwrite_table(
                     name,
                     raw.withColumn(_COMMIT_COL, F.lit(0).cast("bigint")),
@@ -2711,10 +2639,6 @@ class SparkConnector(BaseConnector):
 
     def _qualified(self, table: str) -> str:
         return f"{self.database}.{table}" if self.database else table
-
-    @staticmethod
-    def _escape(value: str) -> str:
-        return value.replace("'", "\\'")
 
     def _register_views(self) -> None:
         for table in self._meta:

@@ -1,4 +1,4 @@
-"""Catalog-database mode: metadata persists as table properties and a
+"""Catalog-database mode: metadata persists as sidecar JSON and a
 new connector re-introspects committed state (the analogue of reopening
 a SQLite file, reference tests/test_sqlite_connector.py:117-127,224-227).
 """
@@ -46,7 +46,7 @@ def test_database_mode_roundtrip_and_reopen(spark: SparkSession) -> None:
 
 def test_partitioned_fact_table_layout_and_reopen(spark: SparkSession) -> None:
     """partition_by lands managed tables physically partitioned, the
-    spec survives reopen via table properties, and filtered scans prune
+    spec survives reopen via the sidecar JSON, and filtered scans prune
     partitions (the 100 TB fact-table layout path)."""
     from pyspark.sql import functions as F
 
@@ -222,7 +222,7 @@ def test_bucketed_fact_tables_join_without_exchange(
     spark: SparkSession,
 ) -> None:
     """bucket_by lands managed tables hash-bucketed: the spec survives
-    reopen via table properties, appended data keeps the layout, and a
+    reopen via the sidecar JSON, appended data keeps the layout, and a
     join between two tables bucketed on the same key runs with zero
     runtime exchange — the write paid the shuffle once."""
     from pyspark.sql import functions as F
@@ -246,7 +246,7 @@ def test_bucketed_fact_tables_join_without_exchange(
         db.insert(data, table="bk_left")
         db.insert(data, table="bk_right")
 
-    # reopened connector re-learns the layout from table properties
+    # reopened connector re-learns the layout from the sidecar JSON
     db2 = SparkConnector(spark, database="buckettest")
     assert db2.bucket_by["bk_left"] == (4, ["k"])
 
@@ -294,9 +294,13 @@ def test_adopting_externally_created_table_migrates_epoch(
 def test_legacy_migration_preserves_partition_layout(
     spark: SparkSession,
 ) -> None:
-    """Opening a pre-manifest (epoch-less) database must migrate WITHOUT
-    erasing the persisted partition_by layout."""
+    """Opening an epoch-less table that has its sidecar JSON (a crash
+    inside ``_create_table`` between the sidecar write and the epoch
+    migration leaves one) must migrate WITHOUT erasing the persisted
+    partition_by layout."""
     import json
+    from pathlib import Path
+    from urllib.parse import urlparse
 
     spark.sql("CREATE DATABASE IF NOT EXISTS legacytest")
     spark.sql("DROP TABLE IF EXISTS legacytest.lg_fact")
@@ -304,7 +308,8 @@ def test_legacy_migration_preserves_partition_layout(
         [("NL", "a", 1), ("DE", "b", 2)], "country STRING, payload STRING, n BIGINT"
     )
     data.write.partitionBy("country").saveAsTable("legacytest.lg_fact")
-    props = {
+    meta = {
+        "meta_version": 1,
         "primary_key": "",
         "foreign_keys": [],
         "payload_columns": ["country", "payload", "n"],
@@ -317,11 +322,12 @@ def test_legacy_migration_preserves_partition_layout(
         ],
         "not_null": [],
         "partition_by": ["country"],
+        "bucket_by": [0, []],
     }
-    prop_sql = ", ".join(
-        f"'sql_autoloader.{k}' = '{json.dumps(v)}'" for k, v in props.items()
-    )
-    spark.sql(f"ALTER TABLE legacytest.lg_fact SET TBLPROPERTIES ({prop_sql})")
+    location = urlparse(spark.catalog.getDatabase("legacytest").locationUri)
+    sidecar = Path(location.path) / "_sql_autoloader_meta" / "lg_fact.json"
+    sidecar.parent.mkdir(parents=True, exist_ok=True)
+    sidecar.write_text(json.dumps(meta))
 
     db = SparkConnector(spark, database="legacytest")
     assert db.partition_by.get("lg_fact") == ["country"]
@@ -329,13 +335,8 @@ def test_legacy_migration_preserves_partition_layout(
     assert "__commit_id" in spark.table("legacytest.lg_fact").columns
     # ...and both content and the persisted layout survived
     assert db._read_table("lg_fact").count() == 2
-    kept = {
-        r.key: r.value
-        for r in spark.sql(
-            "SHOW TBLPROPERTIES legacytest.lg_fact"
-        ).collect()
-    }
-    assert json.loads(kept["sql_autoloader.partition_by"]) == ["country"]
+    kept = json.loads(sidecar.read_text())
+    assert kept["partition_by"] == ["country"]
     cols = spark.catalog.listColumns("lg_fact", "legacytest")
     assert [c.name for c in cols if c.isPartition] == ["country"]
 
@@ -501,10 +502,9 @@ def test_overwrite_crash_leaves_staging_copy(spark: SparkSession) -> None:
 
     def failing_sql(query, *a, **k):
         # _overwrite_table issues two staging DROPs: one before the
-        # staging write, one after the rewrite + props restoration.
-        # Failing the SECOND simulates a crash after the rewrite — the
-        # state where BOTH the rewritten target (with properties) and
-        # the complete staging copy exist.
+        # staging write, one after the rewrite.  Failing the SECOND
+        # simulates a crash after the rewrite — the state where BOTH
+        # the rewritten target and the complete staging copy exist.
         if "DROP TABLE IF EXISTS" in query and "staging" in query:
             calls["n"] += 1
             if calls["n"] == 2:
@@ -525,9 +525,9 @@ def test_overwrite_crash_leaves_staging_copy(spark: SparkSession) -> None:
         (r["n"], r["w"]) for r in spark.table(staging).collect()
     )
     assert staged == before
-    # retrying the compaction completes, cleans the staging table, and
-    # restores the metadata properties the crash interrupted — a fresh
-    # connector must introspect the table as before
+    # retrying the compaction completes and cleans the staging table;
+    # the rewrite never touches the sidecar JSON, so a fresh connector
+    # must introspect the table as before
     db.compact_table("cc_t", target_partitions=1)
     assert not spark.catalog.tableExists(staging)
     assert sorted(map(tuple, db._read_table("cc_t").collect())) == before
@@ -1098,6 +1098,26 @@ def test_adoption_restores_partitioned_and_bucketed_layout(
     adopted = SparkConnector(spark, database="layoutb")
     assert adopted.partition_by.get("ly_part") == ["country"]
     assert adopted.bucket_by.get("ly_buck") == (4, ["k"])
+
+    # the adopted catalog entry declares the writer's bucket spec,
+    # per-bucket sort included
+    def bucket_spec(qualified: str) -> dict[str, str]:
+        keys = ("Bucket Columns", "Sort Columns", "Num Buckets")
+        return {
+            r.col_name: r.data_type
+            for r in spark.sql(
+                f"DESCRIBE TABLE EXTENDED {qualified}"
+            ).collect()
+            if r.col_name in keys
+        }
+
+    written = bucket_spec("layouta.ly_buck")
+    assert written == {
+        "Bucket Columns": "[`k`]",
+        "Sort Columns": "[`k`]",
+        "Num Buckets": "4",
+    }, written
+    assert bucket_spec("layoutb.ly_buck") == written
     assert adopted._read_table("ly_part").count() == 3
     assert adopted._read_table("ly_buck").count() == 2
     # partition pruning works on the adopted entry
@@ -1116,6 +1136,83 @@ def test_adoption_restores_partitioned_and_bucketed_layout(
     assert adopted._read_table("ly_part").count() == 4
     fr_dir = tmp_path / "layout.db" / "ly_part" / "country=FR"
     assert fr_dir.exists()  # new rows landed in the partitioned layout
+
+
+def test_opening_a_database_writes_no_metadata(
+    spark: SparkSession, tmp_path
+) -> None:
+    """Opening reads each table's sidecar JSON and writes nothing.  A
+    connector opened over a managed database's location under a second
+    name (a fresh process's catalog state), with ``recover=True`` and
+    with ``recover=False``, leaves the ``_sql_autoloader_meta`` listing,
+    bytes and mtimes as they were and runs no ALTER TABLE."""
+    import time
+
+    loc = tmp_path / "readonly.db"
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS roopen_w LOCATION '{loc}'")
+    writer = SparkConnector(
+        spark,
+        database="roopen_w",
+        partition_by={"ro_part": ["country"]},
+        bucket_by={"ro_buck": (2, ["k"])},
+    )
+    writer.execute_ddl(
+        """
+        CREATE TABLE ro_part (
+            id INTEGER PRIMARY KEY, payload TEXT UNIQUE, country TEXT
+        );
+        CREATE TABLE ro_buck (
+            id INTEGER PRIMARY KEY, k INTEGER, w TEXT UNIQUE
+        );
+        """
+    )
+    with writer:
+        writer.insert(
+            spark.createDataFrame(
+                [("NL", "a"), ("DE", "b")], "country string, payload string"
+            ),
+            table="ro_part",
+        )
+        writer.insert(
+            spark.createDataFrame([(1, "x")], "k int, w string"),
+            table="ro_buck",
+        )
+
+    meta = loc / "_sql_autoloader_meta"
+
+    def snapshot() -> dict[str, tuple[bytes, int]]:
+        return {
+            p.name: (p.read_bytes(), p.stat().st_mtime_ns)
+            for p in sorted(meta.iterdir())
+        }
+
+    before = snapshot()
+    assert {"ro_part.json", "ro_buck.json"} <= set(before), before
+    # a rewrite of the same bytes would still move the mtime
+    time.sleep(1.1)
+
+    real_sql = spark.sql
+    for i, recover in enumerate((True, False)):
+        name = f"roopen_{i}"
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS {name} LOCATION '{loc}'")
+        statements: list[str] = []
+
+        def recording_sql(query, *a, **k):  # noqa: ANN001, ANN202
+            statements.append(query)
+            return real_sql(query, *a, **k)
+
+        spark.sql = recording_sql
+        try:
+            opened = SparkConnector(spark, database=name, recover=recover)
+        finally:
+            spark.sql = real_sql
+        assert sorted(opened._meta) == ["ro_buck", "ro_part"]
+        assert opened._read_table("ro_part").count() == 2
+        assert snapshot() == before, f"recover={recover}"
+        alters = [
+            q for q in statements if q.lstrip().upper().startswith("ALTER")
+        ]
+        assert not alters, (recover, alters)
 
 
 def test_analyze_tables_changes_join_strategy(spark: SparkSession) -> None:

@@ -981,9 +981,9 @@ spark = (
 spark.sparkContext.setLogLevel("ERROR")
 spark.sql(f"CREATE DATABASE IF NOT EXISTS codb LOCATION '{db_location}'")
 
-# barrier BEFORE the connector: the race under test lives INSIDE
-# SparkConnector.__init__ (_adopt_filesystem_tables re-persists every
-# table's metadata), so both processes must enter it together
+# barrier BEFORE the connector: the opens under test live INSIDE
+# SparkConnector.__init__ (each adopts every persisted table from its
+# sidecar JSON), so both processes must enter it together
 open(f"{barrier}/ready_{role}", "w").close()
 deadline = time.time() + 1200
 while not os.path.exists(f"{barrier}/go"):
@@ -1008,14 +1008,10 @@ def test_concurrent_open_same_warehouse(
 ) -> None:
     """Two driver processes OPEN the same warehouse simultaneously.
 
-    Both run ``_adopt_filesystem_tables`` over the same persisted
-    tables, so both re-persist each table's metadata JSON concurrently.
-    Pre-r14 this crashed ~1-in-4 opens: ``_persist_table_meta`` wrote a
-    SHARED ``<table>.json.tmp`` that one process's ``Files.move`` yanked
-    out from under the other's (``NoSuchFileException`` inside
-    ``__init__``).  The fix gives each persist a uuid-suffixed tmp —
-    this test pins that two simultaneous opens both succeed and both
-    see every table (the judge's r13 repro, now a regression gate).
+    Both run ``_load_tables`` over the same persisted tables.  Opening
+    only reads each table's sidecar JSON, so the two opens share no
+    write.  This test pins that two simultaneous opens both succeed,
+    both see every table, and leave every sidecar intact.
     """
     sc = _scenario(crash_runs, "open")
     db_location = sc["db_location"]

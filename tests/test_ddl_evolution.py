@@ -58,7 +58,7 @@ def test_alter_add_column_managed_mode(spark: SparkSession) -> None:
         )
     got = {r["doc_id"]: r["lang"] for r in spark.table("em_doc").collect()}
     assert got == {1: None, 2: None, 3: "en"}
-    # a reopened connector sees the widened schema from table properties
+    # a reopened connector sees the widened schema from the sidecar JSON
     db2 = SparkConnector(spark, database="evolvetest")
     assert ("lang", "STRING") in db2._meta["em_doc"].column_types
 

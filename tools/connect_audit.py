@@ -123,12 +123,9 @@ CLASSIFICATION: dict[tuple[str, str], tuple[str, str]] = {
         "classic-only",
         "managed-catalog table-metadata JSON sidecar write",
     ),
-    (
-        "connectors/spark_catalog.py",
-        "SparkConnector._adopt_filesystem_tables",
-    ): (
+    ("connectors/spark_catalog.py", "SparkConnector._read_table_meta"): (
         "classic-only",
-        "cross-process warehouse reopen: scan table dirs via Hadoop FS",
+        "managed-catalog table-metadata JSON sidecar read (warehouse open)",
     ),
     ("connectors/spark_catalog.py", "SparkConnector.compact_table"): (
         "classic-only",
