@@ -189,69 +189,72 @@ class RollupConsumer:
         # scans (the journal said "commit N is durable" but the cached
         # listing predates N's files)
         self.spark.catalog.refreshTable(db._qualified(table))
-        # persist + count ONCE: the count fully materializes the
-        # groups-sized delta into the cache, so the merge/write below
-        # reads the cache — exactly one job runs the commit-range scan
-        # per refresh (pre-r14 ran it twice: isEmpty, then the write)
-        delta = agg(
-            db.table_changes(table, h["bookmark"], head_commit)
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        # a polling refresh must PRESERVE the streaming fold's
+        # stream_batch id: stream_rollup's replay guard is
+        # "batch_id <= head[stream_batch]", and a consumer may legally
+        # alternate between polling and streaming — if a stream crashed
+        # after its HEAD flip but before the checkpoint commit, dropping
+        # the key here would make the replayed micro-batch unrecognized
+        # and double-counted
+        carry = (
+            {"stream_batch": h["stream_batch"]} if "stream_batch" in h else {}
+        )
+        delta = agg(db.table_changes(table, h["bookmark"], head_commit))
+        state = self._fold(db, h, delta, head_commit, **carry)
+        if state is None:
+            # new commits, none touching THIS table: advance the
+            # bookmark without writing a summary version — an empty
+            # parquet write would leave an unreadable (schema-less)
+            # version dir, and rewriting the old summary buys nothing
+            state = {"version": h["version"], "bookmark": head_commit, **carry}
+            self._flip_head(state)
+        return state
+
+    def _fold(
+        self,
+        db,  # noqa: ANN001 — SparkConnector (managed-catalog mode)
+        head: dict,
+        delta: DataFrame,
+        bookmark: int,
+        **extra,
+    ) -> dict | None:
+        """Merge the partial aggregate *delta* of the commits after
+        ``head["bookmark"]`` into the summary and publish it as the
+        next version with *bookmark* (and *extra*, see
+        :meth:`_publish`); None, writing nothing, when *delta* is
+        empty.  The one fold of :meth:`refresh` and ``stream_rollup``.
+        """
+        # persist + count ONCE: the count materializes the groups-sized
+        # delta, so the merge/write below reads the cache — one job
+        # runs the commit-range scan
+        delta = delta.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             n_groups = delta.count()
-            # vacuum-horizon RE-check, after the delta materialized: a
-            # concurrent vacuum that folded commits inside our range
-            # mid-scan retagged those rows to token 0, so the delta we
-            # just computed may silently under-report.  table_changes
-            # checked the floor at plan-build; advancing the bookmark
-            # on a stale delta would lose those rows forever — error
-            # instead (the caller re-runs refresh, or rebaselines).
-            # Guard on the vacuum INTENT, not the floor: ordering is
-            # intent marker -> table rewrite -> floor file, so in the
-            # window after the rewrite retagged rows to token 0 but
-            # before the floor lands, a floor-only check would pass
-            # while the delta already lost those rows.  intent
-            # collapses to floor once the vacuum completes, so this
-            # strictly widens the guard to cover the in-flight window.
+            # vacuum RE-check after materialization: a vacuum that
+            # folded commits of our range mid-scan retagged their rows
+            # to token 0, so the delta may under-report (even to
+            # empty), and advancing the bookmark would lose those rows
+            # for good.  Guard on the INTENT, not the floor: ordering
+            # is intent marker -> table rewrite -> floor file, so a
+            # floor-only check passes in the post-rewrite pre-floor
+            # window; intent collapses to floor once the vacuum ends.
             _, _floor, intent = db._journal.state()
-            if intent > h["bookmark"]:
+            if intent > head["bookmark"]:
                 msg = (
                     f"a concurrent vacuum through commit {intent} "
-                    f"overlaps this consumer's bookmark {h['bookmark']} "
-                    "while the refresh was in flight; the computed "
-                    "delta may be partial — rerun refresh (it will "
-                    "error on the horizon) or rebaseline()."
+                    f"overlaps this consumer's bookmark {head['bookmark']} "
+                    "while the fold was in flight; the delta may be "
+                    "partial — rerun it (it will error on the horizon) "
+                    "or rebaseline()."
                 )
                 raise ValueError(msg)
-            # a polling refresh must PRESERVE the streaming fold's
-            # stream_batch id: stream_rollup's replay guard is
-            # "batch_id <= head[stream_batch]", and a consumer may
-            # legally alternate between polling and streaming — if a
-            # stream crashed after its HEAD flip but before the
-            # checkpoint commit, dropping the key here would make the
-            # replayed micro-batch unrecognized and double-counted
-            carry = (
-                {"stream_batch": h["stream_batch"]}
-                if "stream_batch" in h
-                else {}
-            )
             if n_groups == 0:
-                # new commits, none touching THIS table: advance the
-                # bookmark without writing a summary version — an
-                # empty parquet write would leave an unreadable
-                # (schema-less) version dir, and rewriting the old
-                # summary buys nothing
-                state = {
-                    "version": h["version"],
-                    "bookmark": head_commit,
-                    **carry,
-                }
-                self._flip_head(state)
-                return state
+                return None
             old = self.summary()
             new = delta if old is None else merge_rollup(
                 old, delta, keys=self.keys, combine=self.combine
             )
-            return self._publish(new, h["version"] + 1, head_commit, **carry)
+            return self._publish(new, head["version"] + 1, bookmark, **extra)
         finally:
             delta.unpersist()
 

@@ -88,9 +88,24 @@ class SQLiteDialect(Dialect):
         """
 
     def references_query(self, table: str) -> str:
+        # "to" is NULL for `REFERENCES t` without a column (the target's
+        # primary key); fetch_schema_with_dialect resolves it
         return f"""
             SELECT "from" AS from_key, "table" AS to_table, "to" AS to_key
             FROM pragma_foreign_key_list('{table}')
+        """
+
+    def unique_query(self, table: str) -> str | None:
+        # origin 'u': indexes backing UNIQUE constraints (not PRIMARY
+        # KEY 'pk', not CREATE [UNIQUE] INDEX 'c')
+        return f"""
+            SELECT il.name AS constraint_name,
+                   ii.name AS column_name,
+                   ii.seqno + 1 AS ordinal_position
+            FROM pragma_index_list('{table}') AS il
+            JOIN pragma_index_info(il.name) AS ii
+            WHERE il.origin = 'u'
+            ORDER BY il.name, ii.seqno
         """
 
 
@@ -194,6 +209,7 @@ def fetch_schema_with_dialect(
     tables: list[TableDict] = []
     references: list[ReferenceDict] = []
     names = [r["name"] for r in run(dialect.tables_query())]
+    pk_by_table: dict[str, str] = {}
     for name in sorted(names):
         cols = run(dialect.columns_query(name))
         primary_key = ""
@@ -236,6 +252,7 @@ def fetch_schema_with_dialect(
             for members in grouped.values():
                 if members not in unique_constraints:
                     unique_constraints.append(members)
+        pk_by_table[name] = primary_key
         tables.append(
             {
                 "name": name,
@@ -245,6 +262,9 @@ def fetch_schema_with_dialect(
                 "unique_constraints": unique_constraints,
             }
         )
+    for ref in references:
+        if ref["to_key"] is None:  # `REFERENCES t`: the target's key
+            ref["to_key"] = pk_by_table.get(ref["to_table"], "")
     return tables, references
 
 

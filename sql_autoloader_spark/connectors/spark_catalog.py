@@ -52,6 +52,8 @@ from __future__ import annotations
 import json
 import threading
 import uuid
+from collections.abc import Callable, Iterable
+from functools import reduce
 from typing import TYPE_CHECKING, Literal
 
 from pyspark.sql import DataFrame, SparkSession
@@ -186,18 +188,103 @@ class ConditionalPutClaim(ClaimStrategy):
     def claim(
         self, journal: "_CommitJournal", tmp_name: str, dest_name: str
     ) -> bool:
-        stream = journal._fs.open(
-            journal._path_cls(f"{journal._dir}/{tmp_name}")
-        )
-        try:
-            content = journal._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            ).encode()
-        finally:
-            stream.close()
+        content = journal._read(tmp_name).encode()
         return bool(
             self._put_if_absent(f"{journal._dir}/{dest_name}", content)
         )
+
+
+def _journal_name(name: str) -> tuple[str, int]:
+    """``(kind, number)`` of a journal file name: ``<cid>.commit``
+    (content: the commit's row token), ``<N>.floor`` (vacuum horizon),
+    ``<N>.vacuuming`` (vacuum intent) or ``<token>.manifest`` (the
+    commit's data files per table); kind ``""`` for anything else."""
+    stem, _, kind = name.rpartition(".")
+    if kind in ("commit", "floor", "vacuuming", "manifest") and stem.isdigit():
+        return kind, int(stem)
+    return "", 0
+
+
+def _decode_journal(
+    names: Iterable[str],
+    read: Callable[[str], str],
+    tokens: dict[int, int] | None = None,
+) -> tuple[dict[int, int], int, int, bool]:
+    """``(visible {cid: token}, floor, intent, complete)`` from one
+    listing of the journal directory — the journal's one decoder, which
+    the catalog runs over Hadoop FS and the streaming changes feed over
+    ``os``.  *read* returns a journal file's text by name, raising
+    ``OSError`` when it cannot; *tokens* optionally caches cid → token
+    across listings (commit files are immutable).
+
+    Commits at or below the vacuum floor are excluded: their rows were
+    folded into token 0, and honoring the floor here makes a crash
+    between the floor write and the file deletions harmless.
+    ``intent`` is the highest in-progress-or-done vacuum horizon (>
+    floor while a vacuum is mid-flight): reads refuse ids at or below
+    it rather than serve a half-folded snapshot.  An unreadable commit
+    file (mid-publish on a non-atomic filesystem, or tampered) is
+    skipped uncached, for a later listing to pick up; ``complete`` is
+    then False."""
+    commits: dict[int, str] = {}
+    floor = intent = 0
+    for name in names:
+        kind, n = _journal_name(name)
+        if kind == "commit":
+            commits[n] = name
+        elif kind == "floor":
+            floor = max(floor, n)
+        elif kind == "vacuuming":
+            intent = max(intent, n)
+    cache = {} if tokens is None else tokens
+    visible: dict[int, int] = {}
+    complete = True
+    for cid, name in commits.items():
+        if cid <= floor:
+            continue
+        if cid not in cache:
+            try:
+                cache[cid] = int(read(name).strip())
+            except (OSError, ValueError):
+                complete = False
+                continue
+        visible[cid] = cache[cid]
+    return visible, floor, max(intent, floor), complete
+
+
+def _manifest_files(
+    read: Callable[[str], str],
+    exists: Callable[[str], bool],
+    table: str,
+    location: str,
+    tokens: Iterable[int],
+) -> list[str] | None:
+    """The data files that the manifests of the commits carrying
+    *tokens* name for *table* (``[]`` when those commits touched only
+    other tables), or None to fall back to scanning the whole table.
+
+    Entries are keyed by table name and list paths relative to the
+    table root, which are joined onto its current *location*: a copied
+    or moved warehouse resolves where its tables live now.  *read* is
+    :func:`_decode_journal`'s; *exists* tests a data file.  Falls back
+    whenever the list cannot be proven complete: a token without a
+    readable manifest (pre-manifest journal, swept orphan), or a named
+    file that is gone (compaction or vacuum rewrote the table; the
+    rewritten files still carry the tokens, which only the scan
+    finds)."""
+    paths: list[str] = []
+    for tok in tokens:
+        try:
+            entry = json.loads(read(f"{tok}.manifest"))["tables"].get(table)
+            rels = [] if entry is None else entry["files"]
+        except (OSError, ValueError, LookupError, TypeError, AttributeError):
+            return None
+        for rel in rels:
+            path = f"{location.rstrip('/')}/{rel}"
+            if not exists(path):
+                return None
+            paths.append(path)
+    return sorted(set(paths))
 
 
 class _CommitJournal:
@@ -259,60 +346,31 @@ class _CommitJournal:
             LinkClaim() if scheme in (None, "file") else RenameClaim()
         )
 
-    def _read_token(self, name: str) -> int | None:
-        stream = self._fs.open(self._path_cls(f"{self._dir}/{name}"))
+    def _read(self, name: str) -> str:
+        """Text of the journal file *name*; ``OSError`` when it cannot
+        be read (absent, or vanished since the listing)."""
+        from py4j.protocol import Py4JError
+
         try:
-            text = self._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-        finally:
-            stream.close()
-        try:
-            return int(text.strip())
-        except ValueError:
-            # unreadable commit file (external tampering/truncation):
-            # treat as claimed-but-unknown — its rows stay invisible and
-            # the claim loop's rename conflict skips the id regardless
-            return None
+            stream = self._fs.open(self._path_cls(f"{self._dir}/{name}"))
+            try:
+                return self._jvm.org.apache.commons.io.IOUtils.toString(
+                    stream, "UTF-8"
+                )
+            finally:
+                stream.close()
+        except Py4JError as exc:
+            raise OSError(f"cannot read {self._dir}/{name}") from exc
+
+    def _names(self) -> list[str]:
+        """One listing of the journal directory: a single metadata RPC
+        (listing dominates commit-path metadata cost on object stores)."""
+        return [s.getPath().getName() for s in self._fs.listStatus(self._root)]
 
     def state(self) -> tuple[dict[int, int], int, int]:
         """``(visible {cid: token}, floor, intent)`` from ONE directory
-        listing — the whole journal read costs a single metadata RPC
-        (listing dominates commit-path metadata cost on object stores).
-
-        Commits at or below the vacuum floor are excluded — their rows
-        were folded into the always-visible token 0 and their files are
-        (being) deleted; honoring the floor here makes a crash between
-        the floor write and the file deletions harmless.  ``intent`` is
-        the highest in-progress-or-done vacuum horizon (≥ floor while a
-        vacuum is mid-flight): time travel must refuse ids at or below
-        it rather than serve a half-folded snapshot.
-        """
-        commits: list[tuple[int, str]] = []
-        floor = 0
-        intent = 0
-        for status in self._fs.listStatus(self._root):
-            name = status.getPath().getName()
-            if name.endswith(".commit"):
-                commits.append((int(name[: -len(".commit")]), name))
-            elif name.endswith(".floor"):
-                floor = max(floor, int(name[: -len(".floor")]))
-            elif name.endswith(".vacuuming"):
-                intent = max(intent, int(name[: -len(".vacuuming")]))
-        out: dict[int, int] = {}
-        for cid, name in commits:
-            if cid <= floor:
-                continue
-            if cid not in self._tokens:
-                token = self._read_token(name)
-                if token is None:
-                    # unreadable right now (external tampering, or a
-                    # non-atomic filesystem mid-publish): skip WITHOUT
-                    # caching, so a later listing can pick it up
-                    continue
-                self._tokens[cid] = token
-            out[cid] = self._tokens[cid]
-        return out, floor, max(intent, floor)
+        listing (see :func:`_decode_journal`)."""
+        return _decode_journal(self._names(), self._read, self._tokens)[:3]
 
     def visible(self) -> dict[int, int]:
         return self.state()[0]
@@ -337,20 +395,12 @@ class _CommitJournal:
         ≤ floor regardless)."""
         marker = self._path_cls(f"{self._dir}/{horizon}.floor")
         self._fs.create(marker, True).close()
-        for status in self._fs.listStatus(self._root):
-            name = status.getPath().getName()
-            drop = (
-                name.endswith(".commit")
-                and int(name[: -len(".commit")]) <= horizon
-            ) or (
-                name.endswith(".floor")
-                and int(name[: -len(".floor")]) < horizon
-            ) or (
-                name.endswith(".vacuuming")
-                and int(name[: -len(".vacuuming")]) <= horizon
-            )
-            if drop:
-                self._fs.delete(status.getPath(), False)
+        for name in self._names():
+            kind, n = _journal_name(name)
+            if (kind in ("commit", "vacuuming") and n <= horizon) or (
+                kind == "floor" and n < horizon
+            ):
+                self._fs.delete(self._path_cls(f"{self._dir}/{name}"), False)
         # folded commits' file manifests go with their commit files —
         # their rows were retagged to token 0 and (on the next rewrite)
         # their files replaced, so the manifests describe nothing.
@@ -387,18 +437,18 @@ class _CommitJournal:
         plans through the footer-walk fallback instead of the
         manifest fast path.
         """
-        live_tokens = set(self.state()[0].values())
-        swept = 0
-        for status in self._fs.listStatus(self._root):
-            name = status.getPath().getName()
-            orphan_manifest = name.endswith(".manifest") and (
-                not name[: -len(".manifest")].isdigit()
-                or int(name[: -len(".manifest")]) not in live_tokens
-            )
-            if name.startswith("tmp-") or orphan_manifest:
-                self._fs.delete(status.getPath(), False)
-                swept += 1
-        return swept
+        names = self._names()
+        visible = _decode_journal(names, self._read, self._tokens)[0]
+        live = {f"{token}.manifest" for token in visible.values()}
+        doomed = [
+            name
+            for name in names
+            if name.startswith("tmp-")
+            or (_journal_name(name)[0] == "manifest" and name not in live)
+        ]
+        for name in doomed:
+            self._fs.delete(self._path_cls(f"{self._dir}/{name}"), False)
+        return len(doomed)
 
     # -- per-commit file manifests ---------------------------------------
 
@@ -433,24 +483,6 @@ class _CommitJournal:
                 "fallback",
                 token,
             )
-
-    def read_manifest(self, token: int) -> dict | None:
-        """The parsed manifest for *token*, or None (pre-manifest
-        commit, swept orphan, or unreadable content — all of which
-        consumers treat as 'fall back to the footer walk')."""
-        try:
-            stream = self._fs.open(
-                self._path_cls(f"{self._dir}/{token}.manifest")
-            )
-            try:
-                text = self._jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
-                )
-            finally:
-                stream.close()
-            return json.loads(text)
-        except Exception:
-            return None
 
     def _claim(self, tmp_name: str, dest_name: str) -> bool:
         """Atomically claim *dest_name* with *tmp_name*'s content.
@@ -833,7 +865,7 @@ class SparkConnector(BaseConnector):
             # partial set); open-time recovery covers a crash that
             # prevents even this
             failing = [t for t in pending if t not in done]
-            self._sweep_orphans([*done, *failing[:1]], only_token=token)
+            self._sweep_token([*done, *failing[:1]], token)
             raise
         # record the commit's FILE MANIFEST beside the journal before
         # the claim (the cid is unknown until the claim lands; readers
@@ -1225,32 +1257,19 @@ class SparkConnector(BaseConnector):
     ) -> DataFrame | None:
         """A frame over exactly the files the given commits' manifests
         name for *table* — the O(commits in range) plan for a changes
-        read — or None to fall back to the full catalog-table scan.
-
-        Fallback triggers whenever the fast path cannot be PROVEN
-        equivalent: a token without a (readable) manifest (pre-manifest
-        journal, swept orphan), or a manifested file that no longer
-        exists (compaction/vacuum rewrote the table — the rows still
-        carry their tokens in the rewritten files, which only the full
-        scan sees).  The wrong manifest is never trusted over the
-        always-correct fallback."""
+        read — or None to fall back to the full catalog-table scan
+        (:func:`_manifest_files` says when)."""
         loc = self._table_location(table).rstrip("/")
-        paths: list[str] = []
-        fs = path_cls = None
-        for tok in tokens:
-            m = self._journal.read_manifest(tok)
-            if not isinstance(m, dict) or "tables" not in m:
-                return None
-            entry = m["tables"].get(table)
-            if entry is None:
-                continue  # this commit touched only OTHER tables
-            if fs is None:
-                fs, path_cls = _hadoop_fs(self.spark, loc)
-            for rel in entry.get("files", []):
-                p = f"{loc}/{rel}"
-                if not fs.exists(path_cls(p)):
-                    return None
-                paths.append(p)
+        fs, path_cls = _hadoop_fs(self.spark, loc)
+        paths = _manifest_files(
+            self._journal._read,
+            lambda p: fs.exists(path_cls(p)),
+            table,
+            loc,
+            tokens,
+        )
+        if paths is None:
+            return None
         schema = self.spark.table(self._qualified(table)).schema
         if not paths:
             # every commit in the range touched only other tables: a
@@ -1264,7 +1283,7 @@ class SparkConnector(BaseConnector):
         return (
             self.spark.read.schema(schema)
             .option("basePath", loc)
-            .parquet(*sorted(set(paths)))
+            .parquet(*paths)
         )
 
     def compact_table(
@@ -1590,8 +1609,8 @@ class SparkConnector(BaseConnector):
 
         They were never visible — reads filter by published tokens —
         so this is storage hygiene, not correctness.  One small
-        aggregate per table at connector open; rewrites only happen
-        after an actual crash.
+        aggregate over all tables at connector open; file deletions
+        only happen after an actual crash.
 
         OPEN-TIME CAVEAT: this sweep cannot distinguish a crashed
         commit's leftovers from another connector's commit that is
@@ -1672,58 +1691,49 @@ class SparkConnector(BaseConnector):
             loc = self._table_location(table)
             fs, path_cls = _hadoop_fs(self.spark, loc)
             fs.delete(path_cls(f"{loc}/_staging"), True)
-        for table in self._meta:
-            frame = self.spark.table(self._qualified(table))
-            if _COMMIT_COL not in frame.columns:
-                continue
-            visible = self._visible_tokens()
-            orphans = frame.agg(
-                F.count(
-                    F.when(~F.col(_COMMIT_COL).isin(visible), 1)
-                ).alias("n")
-            ).first()["n"]
-            if orphans:
-                self._sweep_orphans([table])
+        # ONE aggregate over every table's unpublished rows names the
+        # tables holding orphans; only those go on to the per-file sweep
+        orphan = ~F.col(_COMMIT_COL).isin(self._visible_tokens())
+        frames = {t: self.spark.table(self._qualified(t)) for t in self._meta}
+        unpublished = [
+            frame.where(orphan).select(F.lit(table).alias("table"))
+            for table, frame in frames.items()
+            if _COMMIT_COL in frame.columns
+        ]
+        if unpublished:
+            rows = reduce(DataFrame.unionByName, unpublished).distinct()
+            dirty = {r["table"] for r in rows.collect()}
+            self._sweep_orphans([t for t in self._meta if t in dirty])
 
-    def _sweep_orphans(
-        self, tables: list[str], only_token: int | None = None
-    ) -> None:
-        """Drop never-published rows.  ``only_token`` restricts the
-        sweep to one writer's own rows — the failure path of a commit
-        must not touch other writers' in-flight (not yet published)
-        appends.  When the token's renamed-in destination files are
-        recorded (the normal failure path), the sweep DELETES exactly
-        those files — no table rewrite, so it cannot race a concurrent
-        writer's append the way an overwrite would."""
-        files = (
-            self._token_files.pop(only_token, None)
-            if only_token is not None
-            else None
-        )
-        if files is not None:
-            fs = path_cls = None
-            for f in files:
-                if fs is None:
-                    fs, path_cls = _hadoop_fs(self.spark, f)
-                fs.delete(path_cls(f), False)
-            for table in tables:
-                # leftovers of a mid-append failure: a token staging
-                # dir and/or stage table that never finished moving
-                stage = self._qualified(f"{table}__stage_{only_token}")
-                self.spark.sql(f"DROP TABLE IF EXISTS {stage}")
-                loc = self._table_location(table)
-                fs, path_cls = _hadoop_fs(self.spark, loc)
-                fs.delete(path_cls(f"{loc}/_staging/{only_token}"), True)
-                self.spark.catalog.refreshTable(self._qualified(table))
-                self._committed[table] = self._committed_view(table)
-            return
+    def _sweep_token(self, tables: list[str], token: int) -> None:
+        """Drop a failed commit's own rows: delete exactly the files its
+        *token* renamed into *tables* (``_commit_managed`` records them
+        before the first append), plus any staging leftovers.  No scan
+        and no table rewrite, so a concurrent writer's in-flight
+        appends are never touched."""
+        fs = path_cls = None
+        for f in self._token_files.pop(token, []):
+            if fs is None:
+                fs, path_cls = _hadoop_fs(self.spark, f)
+            fs.delete(path_cls(f), False)
+        for table in tables:
+            # leftovers of a mid-append failure: a token staging
+            # dir and/or stage table that never finished moving
+            stage = self._qualified(f"{table}__stage_{token}")
+            self.spark.sql(f"DROP TABLE IF EXISTS {stage}")
+            loc = self._table_location(table)
+            fs, path_cls = _hadoop_fs(self.spark, loc)
+            fs.delete(path_cls(f"{loc}/_staging/{token}"), True)
+            self.spark.catalog.refreshTable(self._qualified(table))
+            self._committed[table] = self._committed_view(table)
+
+    def _sweep_orphans(self, tables: list[str]) -> None:
+        """Drop the never-published rows of *tables* (open-time
+        recovery of a crashed commit)."""
+        orphan = ~F.col(_COMMIT_COL).isin(self._visible_tokens())
         for table in tables:
             qualified = self._qualified(table)
             frame = self.spark.table(qualified)
-            if only_token is not None:
-                orphan = F.col(_COMMIT_COL) == F.lit(int(only_token))
-            else:
-                orphan = ~F.col(_COMMIT_COL).isin(self._visible_tokens())
             # Appends land whole files under ONE token, and rewrites
             # only ever write visible rows — so orphan files are
             # token-pure: sweep by DELETING exactly those files.  No

@@ -16,6 +16,9 @@ commits in ``(lastOffset, head]``,
   (``<token>.manifest``, written by the committer beside the journal,
   r15+): a trigger plans exactly the files the batch's commits renamed
   in — O(commits in range), zero directory walks, zero footer opens.
+  The journal and its manifests are decoded by the catalog's own
+  functions (``spark_catalog._decode_journal`` / ``_manifest_files``),
+  here over ``os`` instead of Hadoop FS.
   Pre-manifest commits and post-compaction stale manifests fall back
   to the walk + row-group footer pruning on the ``_commit`` token
   column (a file none of whose row groups intersect the batch's token
@@ -49,12 +52,18 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Iterator, Sequence
+import time
+from collections.abc import Callable, Iterator, Sequence
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
     InputPartition,
+)
+
+from sql_autoloader_spark.connectors.spark_catalog import (
+    _decode_journal,
+    _manifest_files,
 )
 
 __all__ = [
@@ -83,13 +92,21 @@ _STATE_MEMO: dict[str, tuple[int, tuple[dict[int, int], int, int]]] = {}
 _MEMO_SETTLE_NS = 50_000_000
 
 
+def _reader(root: str) -> Callable[[str], str]:
+    """The journal file reader of ``_decode_journal`` over ``os``."""
+
+    def read(name: str) -> str:
+        with open(os.path.join(root, name)) as fh:
+            return fh.read()
+
+    return read
+
+
 def _journal_state(journal_dir: str) -> tuple[dict[int, int], int, int]:
-    """``({cid: token}, floor, intent)`` from one directory listing —
-    the pure-Python twin of ``_CommitJournal.state`` (spark_catalog.py),
-    usable inside data-source workers where no SparkSession exists.
-    ``intent`` is the highest in-progress-or-done vacuum horizon (>
-    floor while a vacuum is mid-flight): ranges at or below it must be
-    refused rather than served half-folded.
+    """``(visible {cid: token}, floor, intent)`` of the journal at
+    *journal_dir*: one ``os.listdir`` decoded by the catalog's own
+    ``_decode_journal``, usable inside data-source workers where no
+    SparkSession exists.
 
     Memoized on the directory's mtime, stat-BEFORE-list so any
     modification after the stat invalidates the entry; only quiescent
@@ -98,40 +115,16 @@ def _journal_state(journal_dir: str) -> tuple[dict[int, int], int, int]:
     can never outlive the journal state it mirrors."""
     try:
         mtime_ns = os.stat(journal_dir).st_mtime_ns
-    except FileNotFoundError:
-        return {}, 0, 0
-    memo = _STATE_MEMO.get(journal_dir)
-    if memo is not None and memo[0] == mtime_ns:
-        return memo[1]
-    visible: dict[int, int] = {}
-    floor = 0
-    intent = 0
-    complete = True
-    try:
+        memo = _STATE_MEMO.get(journal_dir)
+        if memo is not None and memo[0] == mtime_ns:
+            return memo[1]
         names = os.listdir(journal_dir)
     except FileNotFoundError:
         return {}, 0, 0
-    for name in names:
-        if name.endswith(".floor"):
-            floor = max(floor, int(name[: -len(".floor")]))
-        elif name.endswith(".vacuuming"):
-            intent = max(intent, int(name[: -len(".vacuuming")]))
-    for name in names:
-        if not name.endswith(".commit"):
-            continue
-        cid = int(name[: -len(".commit")])
-        if cid <= floor:
-            continue
-        try:
-            with open(os.path.join(journal_dir, name)) as fh:
-                visible[cid] = int(fh.read().strip())
-        except (OSError, ValueError):
-            # mid-publish or tampered: skip now, next listing retries
-            complete = False
-            continue
-    state = (visible, floor, max(intent, floor))
-    import time
-
+    visible, floor, intent, complete = _decode_journal(
+        names, _reader(journal_dir)
+    )
+    state = (visible, floor, intent)
     if complete and time.time_ns() - mtime_ns > _MEMO_SETTLE_NS:
         _STATE_MEMO[journal_dir] = (mtime_ns, state)
     return state
@@ -164,58 +157,6 @@ def _checkpoint_anchor(checkpoint_dir: str) -> int | None:
         return None
 
 
-def _norm_path(p: str) -> str:
-    for prefix in ("file://", "file:"):
-        if p.startswith(prefix):
-            p = p[len(prefix) :]
-            break
-    return p.rstrip("/")
-
-
-def _manifest_files(
-    journal_dir: str, location: str, tokens: set[int]
-) -> list[str] | None:
-    """The exact data files the given commits' manifests name under
-    *location* — O(commits in range) planning with ZERO footer opens —
-    or None to fall back to the directory walk + footer prune.
-
-    Fallback triggers whenever the fast path cannot be PROVEN
-    equivalent: a token without a readable ``<token>.manifest``
-    (pre-manifest journal, swept orphan), or a manifested file that no
-    longer exists (compaction/vacuum rewrote the table; the rewritten
-    files still carry the tokens, which only the walk finds).  The
-    pure-Python twin of ``SparkConnector._manifest_scan``."""
-    want = _norm_path(location)
-    out: list[str] = []
-    for tok in tokens:
-        try:
-            with open(
-                os.path.join(journal_dir, f"{tok}.manifest")
-            ) as fh:
-                m = json.load(fh)
-        except (OSError, ValueError):
-            return None
-        if not isinstance(m, dict) or "tables" not in m:
-            return None
-        entry = next(
-            (
-                e
-                for e in m["tables"].values()
-                if isinstance(e, dict)
-                and _norm_path(e.get("location", "")) == want
-            ),
-            None,
-        )
-        if entry is None:
-            continue  # this commit touched only OTHER tables
-        for rel in entry.get("files", []):
-            path = os.path.join(location, rel)
-            if not os.path.isfile(path):
-                return None
-            out.append(path)
-    return sorted(set(out))
-
-
 def _list_parquet(location: str) -> list[str]:
     out = []
     for root, dirs, files in os.walk(location):
@@ -239,6 +180,11 @@ class _ChangesStreamReader(DataSourceStreamReader):
     def __init__(self, schema, options) -> None:  # noqa: ANN001
         self._location = options["location"]
         self._journal = options["journal"]
+        #: the table's key in the commit manifests (a managed table's
+        #: directory is named after it)
+        self._table = options.get("table") or os.path.basename(
+            self._location.rstrip("/")
+        )
         self._from = int(options.get("fromcommit", 0))
         self._schema = schema
         #: micro-batch rate limit: at most N commits per planned batch
@@ -321,7 +267,13 @@ class _ChangesStreamReader(DataSourceStreamReader):
             # batch) manifest reads — no directory walk, no footer
             # opens.  Falls back to walk+footer-prune on pre-manifest
             # commits or post-compaction stale manifests.
-            fast = _manifest_files(self._journal, self._location, tokens)
+            fast = _manifest_files(
+                _reader(self._journal),
+                os.path.isfile,
+                self._table,
+                self._location,
+                tokens,
+            )
             if fast is not None:
                 parts.extend(
                     _ChangesPartition(path, payload) for path in fast
@@ -440,7 +392,9 @@ class TableChangesDataSource(DataSource):
     with ``spark.dataSource.register(TableChangesDataSource)`` or use
     :func:`read_changes_stream`.  Options: ``location`` (table data
     dir), ``journal`` (the warehouse's ``_sql_autoloader_commits``
-    dir), ``fromCommit`` (initial bookmark, default 0).  Pass the
+    dir), ``table`` (the table's name, its key in the commit
+    manifests; default: the last segment of ``location``),
+    ``fromCommit`` (initial bookmark, default 0).  Pass the
     output schema via ``.schema(...)`` — table columns plus
     ``_commit_id bigint, _change_type string``."""
 
@@ -503,6 +457,7 @@ def read_changes_stream(  # noqa: ANN201
         .schema(f"{fields}, `_commit_id` BIGINT, `_change_type` STRING")
         .option("location", location)
         .option("journal", journal)
+        .option("table", table)
         .option("fromCommit", str(from_commit))
         .option("maxCommitsPerTrigger", str(max_commits_per_trigger))
         .option("checkpoint", checkpoint_dir or "")
@@ -599,8 +554,6 @@ def stream_rollup(  # noqa: ANN201
     """
     from pyspark import StorageLevel
 
-    from sql_autoloader_spark.functions.scale import merge_rollup
-
     stream = read_changes_stream(
         db,
         table,
@@ -625,45 +578,19 @@ def stream_rollup(  # noqa: ANN201
             F.col("_commit_id") > F.lit(head["bookmark"])
         ).persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            delta = agg(batch).persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                if delta.count() == 0:
-                    return  # empty replay/no-op batch: nothing to fold
-                # vacuum RE-check after materialization, same contract
-                # as the polling refresh: a vacuum that folded commits
-                # under this batch mid-flight means the delta may be
-                # partial — error, never advance the bookmark.  Guard
-                # on the INTENT (ordering: intent marker -> table
-                # rewrite -> floor file): floor-only would pass in the
-                # post-rewrite pre-floor window where the retagged rows
-                # are already lost from the delta.  intent collapses to
-                # floor once the vacuum completes — strictly wider.
-                _, _floor, intent = db._journal.state()
-                if intent > head["bookmark"]:
-                    msg = (
-                        f"a concurrent vacuum through commit {intent} "
-                        f"overlaps this consumer's bookmark "
-                        f"{head['bookmark']} while the streamed fold "
-                        "was in flight — rerun the stream (it will "
-                        "error on the horizon) or rebaseline()."
-                    )
-                    raise ValueError(msg)
-                max_cid = batch.agg({"_commit_id": "max"}).first()[0]
-                old = consumer.summary()
-                new = delta if old is None else merge_rollup(
-                    old, delta, keys=consumer.keys, combine=consumer.combine
-                )
-                # ONE flip carries (version, bookmark, stream_batch)
-                # together — a separate stream_batch flip would open a
-                # crash window that double-counts the replayed batch
-                consumer._publish(
-                    new,
-                    head["version"] + 1,
-                    max(max_cid, head["bookmark"]),
-                    stream_batch=batch_id,
-                )
-            finally:
-                delta.unpersist()
+            max_cid = batch.agg(F.max("_commit_id")).first()[0]
+            if max_cid is None:
+                return  # empty replay/no-op batch: nothing to fold
+            # ONE flip carries (version, bookmark, stream_batch)
+            # together — a separate stream_batch flip would open a
+            # crash window that double-counts the replayed batch
+            consumer._fold(
+                db,
+                head,
+                agg(batch),
+                max(max_cid, head["bookmark"]),
+                stream_batch=batch_id,
+            )
         finally:
             batch.unpersist()
 

@@ -192,8 +192,8 @@ def test_crash_without_sweep_recovers_on_reopen(
     monkeypatch.setattr(SparkConnector, "_append_epoch", fail_second)
     monkeypatch.setattr(
         SparkConnector,
-        "_sweep_orphans",
-        lambda self, tables, only_token=None: None,
+        "_sweep_token",
+        lambda self, tables, token: None,
     )
     with pytest.raises(RuntimeError, match="process death"), db:
         db.load(data)

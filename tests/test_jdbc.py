@@ -69,6 +69,64 @@ def test_sqlite_introspection_sql_against_real_sqlite() -> None:
     assert refs_none == []
 
 
+def test_sqlite_dialect_matches_sqlite_connector(spark) -> None:
+    """The JDBC SQLite dialect's introspection, run by real SQLite,
+    gives the same TableDict/ReferenceDict content as
+    ``SQLiteConnector.fetch_schema`` over the same DDL: UNIQUE
+    constraints (single and multi-column, but not a plain unique
+    index) and a ``REFERENCES t`` without a column, which targets
+    t's primary key.  The JDBC path itself needs a driver jar and is
+    not exercised here."""
+    from sql_autoloader_spark.connectors.jdbc import fetch_schema_with_dialect
+    from sql_autoloader_spark.connectors.sqlite import SQLiteConnector
+
+    sc = SQLiteConnector(spark)
+    sc.connection.executescript(
+        CAR_DDL
+        + """
+        CREATE TABLE car (
+          id INTEGER PRIMARY KEY,
+          model TEXT UNIQUE,
+          code TEXT,
+          merk_id INTEGER REFERENCES merk,
+          UNIQUE (code, model)
+        );
+        CREATE UNIQUE INDEX car_code ON car (code);
+        """
+    )
+
+    def run(sql: str) -> list[dict]:
+        cur = sc.connection.execute(sql)
+        cols = [d[0] for d in cur.description]
+        return [dict(zip(cols, row)) for row in cur.fetchall()]
+
+    def canonical(tables, references):  # noqa: ANN001, ANN202
+        # order-free: the two paths list FKs and constraints in
+        # different (pragma) orders
+        return (
+            {
+                t["name"]: {
+                    **t,
+                    "foreign_keys": sorted(t["foreign_keys"]),
+                    "unique_constraints": sorted(t["unique_constraints"]),
+                }
+                for t in tables
+            },
+            sorted(tuple(sorted(r.items())) for r in references),
+        )
+
+    got = canonical(*fetch_schema_with_dialect(SQLiteDialect(), run))
+    assert got == canonical(*sc.fetch_schema())
+    tables, refs = got
+    assert tables["car"]["unique_constraints"] == [["code", "model"], ["model"]]
+    assert (
+        ("from_key", "merk_id"),
+        ("from_table", "car"),
+        ("to_key", "id"),
+        ("to_table", "merk"),
+    ) in refs
+
+
 def test_postgres_introspection_sql_shape() -> None:
     """Postgres queries are plain information_schema SELECTs (syntax
     check only — no server in the container)."""

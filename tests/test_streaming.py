@@ -1881,3 +1881,164 @@ def test_warehouse_multi_stream_trigger_cost(
     assert readers[0].latestOffset() == {"commit": head}
     assert len(listings) == 2
     assert walks == []
+
+
+def _local(path: str) -> str:
+    for prefix in ("file://", "file:"):
+        path = path.removeprefix(prefix)
+    return path.rstrip("/")
+
+
+def test_streaming_cdc_feed_on_copied_warehouse(
+    spark: SparkSession, tmp_path
+) -> None:
+    """A managed database's directory copied to a new database name and
+    reopened there (how a base store is cloned) must stream exactly the
+    batch feed.  The manifests still record the source's absolute
+    table location; entries resolve by table name onto the table's
+    current location, never to an empty feed."""
+    import os
+    import shutil
+
+    from sql_autoloader_spark.streaming import read_changes_stream
+
+    src = SparkConnector(spark, database="cdccopysrc")
+    src.execute_ddl("CREATE TABLE cc_t (id INTEGER PRIMARY KEY, v TEXT UNIQUE);")
+    for batch in (["a", "b"], ["c"]):
+        with src:
+            src.insert(
+                spark.createDataFrame([(x,) for x in batch], ["v"]),
+                table="cc_t",
+            )
+    src_dir = _local(src._db_location())
+    shutil.copytree(
+        src_dir, os.path.join(os.path.dirname(src_dir), "cdccopydst.db")
+    )
+    db = SparkConnector(spark, database="cdccopydst")
+    assert _local(db._db_location()) != src_dir
+
+    want = sorted(
+        (r["v"], r["_commit_id"])
+        for r in db.table_changes("cc_t", 0).collect()
+    )
+    assert [v for v, _ in want] == ["a", "b", "c"]
+    q = (
+        read_changes_stream(db, "cc_t")
+        .writeStream.format("memory")
+        .queryName("cdc_copied")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    got = sorted(
+        (r["v"], r["_commit_id"]) for r in spark.table("cdc_copied").collect()
+    )
+    assert got == want
+
+
+def test_journal_decoding_parity_catalog_and_stream(
+    spark: SparkSession, monkeypatch
+) -> None:
+    """One fabricated journal read through both of its callers — the
+    catalog over Hadoop FS and the streaming reader over ``os`` — gives
+    the same ``(visible, floor, intent)``, the same file lists and the
+    same fallback.  The directory holds a commit at the floor, an
+    unreadable commit file, a vacuum intent above the floor, a commit
+    whose manifest names only another table, a manifest naming a
+    missing file, and a commit without a manifest."""
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sql_autoloader_spark.streaming import cdc_source
+
+    db = SparkConnector(spark, database="jparity")
+    db.execute_ddl(
+        "CREATE TABLE jp_t (id INTEGER PRIMARY KEY, v TEXT);"
+        "CREATE TABLE jp_u (id INTEGER PRIMARY KEY, w TEXT);"
+    )
+    jdir = _local(db._journal._dir)
+    loc = _local(db._table_location("jp_t"))
+    os.makedirs(loc, exist_ok=True)
+    for name in ("a.parquet", "b.parquet"):
+        pq.write_table(
+            pa.table(
+                {
+                    "id": pa.array([1], pa.int32()),
+                    "v": ["x"],
+                    "__commit_id": pa.array([333], pa.int64()),
+                }
+            ),
+            os.path.join(loc, name),
+        )
+
+    def put(name: str, content) -> None:  # noqa: ANN001
+        with open(os.path.join(jdir, name), "w") as fh:
+            fh.write(content if isinstance(content, str) else json.dumps(content))
+
+    def manifest(table: str, files: list[str]) -> dict:
+        # the recorded location is stale on purpose: entries resolve by
+        # table name onto the table's current location
+        entry = {"location": "/moved/away", "files": files}
+        return {"manifest_version": 1, "tables": {table: entry}}
+
+    put("2.floor", "")
+    put("5.vacuuming", "")
+    put("1.commit", "111")  # at or below the floor: excluded
+    put("3.commit", "333")
+    put("333.manifest", manifest("jp_t", ["a.parquet", "b.parquet"]))
+    put("4.commit", "not a token")  # unreadable: skipped
+    put("6.commit", "666")
+    put("666.manifest", manifest("jp_u", ["x.parquet"]))
+    put("7.commit", "777")
+    put("777.manifest", manifest("jp_t", ["missing.parquet"]))
+    put("8.commit", "888")  # pre-manifest commit
+
+    want_state = ({3: 333, 6: 666, 7: 777, 8: 888}, 2, 5)
+    assert db._journal.state() == want_state
+    assert cdc_source._journal_state(jdir) == want_state
+
+    schema = spark.table(db._qualified("jp_t")).schema
+    reader = cdc_source._ChangesStreamReader(
+        schema, {"location": loc, "journal": jdir, "table": "jp_t"}
+    )
+    # both refuse a range under the in-flight vacuum
+    with pytest.raises(ValueError, match="in progress"):
+        db.table_changes("jp_t", 2)
+    with pytest.raises(ValueError, match="in progress"):
+        reader.partitions({"commit": 2}, {"commit": 8})
+    os.unlink(os.path.join(jdir, "5.vacuuming"))
+
+    walks: list[str] = []
+    real_walk = cdc_source._list_parquet
+
+    def counting_walk(location):  # noqa: ANN001, ANN202
+        walks.append(location)
+        return real_walk(location)
+
+    monkeypatch.setattr(cdc_source, "_list_parquet", counting_walk)
+
+    def catalog_files(lo: int, hi: int) -> list[str] | None:
+        tokens = [t for c, t in want_state[0].items() if lo < c <= hi]
+        scan = db._manifest_scan("jp_t", tokens)
+        return None if scan is None else sorted(map(_local, scan.inputFiles()))
+
+    def stream_files(lo: int, hi: int) -> list[str] | None:
+        walks.clear()
+        parts = reader.partitions({"commit": lo}, {"commit": hi})
+        return None if walks else sorted(p.path for p in parts if p.path)
+
+    both = [os.path.join(loc, "a.parquet"), os.path.join(loc, "b.parquet")]
+    for lo, hi, want in [
+        (2, 3, both),
+        (3, 6, []),  # only the other table (and an unreadable commit)
+        (2, 6, both),
+        (6, 7, None),  # a manifested file is gone
+        (7, 8, None),  # no manifest
+        (2, 8, None),
+    ]:
+        assert catalog_files(lo, hi) == want, (lo, hi)
+        assert stream_files(lo, hi) == want, (lo, hi)

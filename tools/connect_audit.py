@@ -99,21 +99,13 @@ CLASSIFICATION: dict[tuple[str, str], tuple[str, str]] = {
         "classic-only",
         "ACID journal: atomic no-overwrite claim via java.nio hardlink",
     ),
-    ("connectors/spark_catalog.py", "ConditionalPutClaim.claim"): (
-        "classic-only",
-        "ACID journal: conditional-put claim reads via commons-io",
-    ),
     ("connectors/spark_catalog.py", "_CommitJournal.__init__"): (
         "classic-only",
         "ACID journal constructor: Hadoop FS handle for commit files",
     ),
-    ("connectors/spark_catalog.py", "_CommitJournal._read_token"): (
+    ("connectors/spark_catalog.py", "_CommitJournal._read"): (
         "classic-only",
-        "ACID journal: read commit-token file through Hadoop FS",
-    ),
-    ("connectors/spark_catalog.py", "_CommitJournal.read_manifest"): (
-        "classic-only",
-        "ACID journal: read per-commit file manifest through Hadoop FS",
+        "ACID journal: read a journal file (token, manifest) through Hadoop FS",
     ),
     ("connectors/spark_catalog.py", "_hadoop_fs"): (
         "classic-only",
