@@ -7,11 +7,13 @@ The reference talks to the DB row-at-a-time over a cursor; here every
 exchange is a partitioned JDBC DataFrame read or a batched append write —
 the row-dict wire format disappears entirely (SURVEY.md §1.3).
 
-Schema introspection (reference D1/D2) runs the dialect's own metadata
-queries *through the JDBC source* — ``information_schema`` /
-``pragma_*`` are plain SELECTs, so ``spark.read.jdbc(query)`` executes
-them remotely and returns the catalog as DataFrames, which are collected
-(they are O(#tables) rows of metadata, not data).
+Schema introspection (reference D1/D2) has one classifier,
+:func:`classify_schema`, fed row mappings by three sources: a
+:class:`Dialect`'s metadata SQL (``information_schema`` / ``pragma_*``
+are plain SELECTs, so ``spark.read.jdbc(query)`` runs them remotely,
+the Postgres sink runs them over its wire client and the SQLite sink
+over ``sqlite3``), or ``java.sql.DatabaseMetaData`` for engines without
+one.  The rows are O(#tables) metadata, not data.
 
 Idempotent insert: JDBC has no conflict-ignore write mode, so new rows
 are reduced by a left-anti join against the live table's keyed
@@ -22,14 +24,14 @@ Requires the target database's JDBC driver jar on the Spark classpath
 (``spark.jars`` / ``--jars``).  Dialects with hand-written metadata SQL
 exist for SQLite and Postgres (parity with the reference's PRAGMA /
 information_schema introspection); every other database takes the
-*portable* path — ``java.sql.DatabaseMetaData`` via the JVM gateway
-(``getTables`` / ``getPrimaryKeys`` / ``getImportedKeys`` /
-``getIndexInfo``), which is metadata-sized driver-side work while all
-DATA still moves through partitioned ``spark.read/write.jdbc``.  The
-end-to-end test runs against Apache Derby (embedded, ships on Spark's
-own classpath — no extra jar), exercising introspection, identity
-surrogate keys, idempotent appends, and the generated compare query
-against a real JDBC database.
+*portable* path — ``getTables`` / ``getColumns`` / ``getPrimaryKeys`` /
+``getImportedKeys`` / ``getIndexInfo`` via the JVM gateway, which is
+metadata-sized driver-side work while all DATA still moves through
+partitioned ``spark.read/write.jdbc``.  The end-to-end test runs
+against Apache Derby (embedded, ships on Spark's own classpath — no
+extra jar), exercising introspection, identity surrogate keys,
+idempotent appends, and the generated compare query against a real
+JDBC database.
 """
 
 from __future__ import annotations
@@ -39,7 +41,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 from sql_autoloader_spark.connectors.base import BaseConnector
 from sql_autoloader_spark.connectors.ddl import split_statements
-from sql_autoloader_spark.schema import ReferenceDict, Schema, TableDict
+from sql_autoloader_spark.exceptions import InvalidTableError
+from sql_autoloader_spark.schema import ReferenceDict, TableDict
+
+
+def _sql_string(value: str) -> str:
+    """*value* as a single-quoted SQL literal (SQLite and Postgres both
+    escape a quote by doubling it)."""
+    return "'" + value.replace("'", "''") + "'"
 
 
 class Dialect:
@@ -57,12 +66,10 @@ class Dialect:
     def references_query(self, table: str) -> str:
         raise NotImplementedError
 
-    def unique_query(self, table: str) -> str | None:
-        """Optional: one row per (constraint_name, column_name,
-        ordinal_position) of the table's UNIQUE constraints, or ``None``
-        when the dialect cannot introspect them (only user-supplied
-        ``unique_constraints`` apply then)."""
-        return None
+    def unique_query(self, table: str) -> str:
+        """One row per (constraint_name, column_name, ordinal_position)
+        of the table's UNIQUE constraints."""
+        raise NotImplementedError
 
 
 class SQLiteDialect(Dialect):
@@ -82,27 +89,27 @@ class SQLiteDialect(Dialect):
                    i.pk AS is_primary_key,
                    f."table" AS to_table,
                    f."to" AS to_key
-            FROM pragma_table_info('{table}') AS i
-            LEFT JOIN pragma_foreign_key_list('{table}') AS f
+            FROM pragma_table_info({_sql_string(table)}) AS i
+            LEFT JOIN pragma_foreign_key_list({_sql_string(table)}) AS f
               ON i.name = f."from"
         """
 
     def references_query(self, table: str) -> str:
         # "to" is NULL for `REFERENCES t` without a column (the target's
-        # primary key); fetch_schema_with_dialect resolves it
+        # primary key); classify_schema resolves it
         return f"""
             SELECT "from" AS from_key, "table" AS to_table, "to" AS to_key
-            FROM pragma_foreign_key_list('{table}')
+            FROM pragma_foreign_key_list({_sql_string(table)})
         """
 
-    def unique_query(self, table: str) -> str | None:
+    def unique_query(self, table: str) -> str:
         # origin 'u': indexes backing UNIQUE constraints (not PRIMARY
         # KEY 'pk', not CREATE [UNIQUE] INDEX 'c')
         return f"""
             SELECT il.name AS constraint_name,
                    ii.name AS column_name,
                    ii.seqno + 1 AS ordinal_position
-            FROM pragma_index_list('{table}') AS il
+            FROM pragma_index_list({_sql_string(table)}) AS il
             JOIN pragma_index_info(il.name) AS ii
             WHERE il.origin = 'u'
             ORDER BY il.name, ii.seqno
@@ -140,7 +147,8 @@ class PostgresDialect(Dialect):
               ON kcu.constraint_schema = tc.constraint_schema
              AND kcu.constraint_name = tc.constraint_name
              AND tc.constraint_type = 'PRIMARY KEY'
-            WHERE c.table_schema = 'public' AND c.table_name = '{table}'
+            WHERE c.table_schema = 'public'
+              AND c.table_name = {_sql_string(table)}
             GROUP BY c.column_name
             ORDER BY MIN(c.ordinal_position)
         """
@@ -169,10 +177,10 @@ class PostgresDialect(Dialect):
              AND kcu.position_in_unique_constraint = rk.ordinal_position
             WHERE tc.constraint_type = 'FOREIGN KEY'
               AND tc.table_schema = 'public'
-              AND tc.table_name = '{table}'
+              AND tc.table_name = {_sql_string(table)}
         """
 
-    def unique_query(self, table: str) -> str | None:
+    def unique_query(self, table: str) -> str:
         return f"""
             SELECT tc.constraint_name,
                    kcu.column_name,
@@ -183,13 +191,97 @@ class PostgresDialect(Dialect):
              AND tc.constraint_name = kcu.constraint_name
             WHERE tc.constraint_type = 'UNIQUE'
               AND tc.table_schema = 'public'
-              AND tc.table_name = '{table}'
+              AND tc.table_name = {_sql_string(table)}
             ORDER BY tc.constraint_name, kcu.ordinal_position
         """
 
 
 # quote-aware statement splitting is shared with the DDL parser
 _split_statements = split_statements
+
+
+def classify_schema(
+    rows: dict[str, tuple[list, list, list]],
+    extra_unique: dict[str, list[list[str]]] | None = None,
+) -> tuple[list[TableDict], list[ReferenceDict]]:
+    """The one introspection classifier: per-table metadata rows in,
+    TableDict/ReferenceDict out.
+
+    ``rows`` maps each table to three lists of mappings (Spark ``Row``s
+    or dicts), in the shape a :class:`Dialect`'s queries return:
+
+    - columns (``column_name``, ``is_primary_key``) in declaration
+      order, possibly repeated once per constraint;
+    - references (``from_key``, ``to_table``, ``to_key``), ``to_key``
+      NULL for a ``REFERENCES t`` that names no column;
+    - UNIQUE members (``constraint_name``, ``column_name``) in
+      ordinal order.
+
+    One column may be the primary key; more raise
+    :class:`InvalidTableError` (reference sqlite_connector.py:132).
+    Referencing columns, the key included, are the foreign keys in
+    declaration order; the rest are payload.  ``REFERENCES t`` targets
+    t's key.  UNIQUE rows group per constraint, merge with the
+    user-supplied *extra_unique*, and a group equal to ``[key]`` is
+    dropped.
+    """
+    extra_unique = extra_unique or {}
+    tables: list[TableDict] = []
+    references: list[ReferenceDict] = []
+    pk_by_table: dict[str, str] = {}
+    for name in sorted(rows):
+        col_rows, ref_rows, unique_rows = rows[name]
+        columns = list(dict.fromkeys(c["column_name"] for c in col_rows))
+        pks = list(
+            dict.fromkeys(
+                c["column_name"]
+                for c in col_rows
+                if int(c["is_primary_key"] or 0) > 0
+            )
+        )
+        if len(pks) > 1:
+            msg = (
+                f"table '{name}' declares a composite primary key {pks};"
+                " only single-column keys are supported."
+            )
+            raise InvalidTableError(msg)
+        primary_key = pks[0] if pks else ""
+        pk_by_table[name] = primary_key
+        fk_names = {r["from_key"] for r in ref_rows}
+        references.extend(
+            {
+                "from_table": name,
+                "from_key": r["from_key"],
+                "to_table": r["to_table"],
+                "to_key": r["to_key"],
+            }
+            for r in ref_rows
+        )
+        grouped: dict[str, list[str]] = {}
+        for r in unique_rows:
+            grouped.setdefault(r["constraint_name"], []).append(
+                r["column_name"]
+            )
+        unique_constraints: list[list[str]] = []
+        extra = [list(uc) for uc in extra_unique.get(name, [])]
+        for members in [*grouped.values(), *extra]:
+            if members != [primary_key] and members not in unique_constraints:
+                unique_constraints.append(members)
+        tables.append(
+            {
+                "name": name,
+                "columns": [
+                    c for c in columns if c != primary_key and c not in fk_names
+                ],
+                "primary_key": primary_key,
+                "foreign_keys": [c for c in columns if c in fk_names],
+                "unique_constraints": unique_constraints,
+            }
+        )
+    for ref in references:
+        if ref["to_key"] is None:  # `REFERENCES t`: the target's key
+            ref["to_key"] = pk_by_table.get(ref["to_table"], "")
+    return tables, references
 
 
 def fetch_schema_with_dialect(
@@ -200,82 +292,29 @@ def fetch_schema_with_dialect(
     """Introspect a database through a :class:`Dialect`'s metadata SQL.
 
     ``run`` executes one SQL string and returns its rows as mappings —
-    the JDBC connector passes collected Spark ``Row``s, the wire-native
-    Postgres connector passes dicts straight off the socket, so the SAME
-    dialect SQL and the SAME classification logic (PK vs FK vs payload,
-    multi-constraint dedup, single-PK invariant) back both paths.
+    collected Spark ``Row``s over JDBC, dicts off the Postgres wire or
+    a ``sqlite3`` cursor — which :func:`classify_schema` classifies.
     """
-    extra_unique = extra_unique or {}
-    tables: list[TableDict] = []
-    references: list[ReferenceDict] = []
-    names = [r["name"] for r in run(dialect.tables_query())]
-    pk_by_table: dict[str, str] = {}
-    for name in sorted(names):
-        cols = run(dialect.columns_query(name))
-        primary_key = ""
-        payload: list[str] = []
-        fks: list[str] = []
-        fk_names = set()
-        for ref in run(dialect.references_query(name)):
-            fk_names.add(ref["from_key"])
-            references.append(
-                {
-                    "from_table": name,
-                    "from_key": ref["from_key"],
-                    "to_table": ref["to_table"],
-                    "to_key": ref["to_key"],
-                }
-            )
-        seen = set()
-        for c in cols:
-            cname = c["column_name"]
-            if cname in seen:  # multi-constraint duplicate rows
-                continue
-            seen.add(cname)
-            if int(c["is_primary_key"] or 0) > 0:
-                if primary_key:
-                    msg = f"table '{name}' has more than one primary key."
-                    raise AssertionError(msg)
-                primary_key = cname
-            elif cname in fk_names:
-                fks.append(cname)
-            else:
-                payload.append(cname)
-        unique_constraints = [list(uc) for uc in extra_unique.get(name, [])]
-        unique_sql = dialect.unique_query(name)
-        if unique_sql is not None:
-            grouped: dict[str, list[str]] = {}
-            for row in run(unique_sql):
-                grouped.setdefault(row["constraint_name"], []).append(
-                    row["column_name"]
-                )
-            for members in grouped.values():
-                if members not in unique_constraints:
-                    unique_constraints.append(members)
-        pk_by_table[name] = primary_key
-        tables.append(
-            {
-                "name": name,
-                "columns": payload,
-                "primary_key": primary_key,
-                "foreign_keys": fks,
-                "unique_constraints": unique_constraints,
-            }
+    rows = {
+        name: (
+            run(dialect.columns_query(name)),
+            run(dialect.references_query(name)),
+            run(dialect.unique_query(name)),
         )
-    for ref in references:
-        if ref["to_key"] is None:  # `REFERENCES t`: the target's key
-            ref["to_key"] = pk_by_table.get(ref["to_table"], "")
-    return tables, references
+        for name in (r["name"] for r in run(dialect.tables_query()))
+    }
+    return classify_schema(rows, extra_unique)
 
 
 class JDBCConnector(BaseConnector):
     """Auto-loader over a remote SQL database reached via Spark JDBC.
 
-    ``unique_constraints`` cannot be introspected portably, so natural
-    keys may be supplied per table via *unique_constraints* (``{table:
-    [[col, ...], ...]}``); the remote DB's own constraints still apply on
-    append (a violation surfaces as the write error, the analogue of the
-    reference's ``InsertingDataFailedError`` path).
+    Natural keys may be supplied per table via *unique_constraints*
+    (``{table: [[col, ...], ...]}``); they merge with the UNIQUE
+    constraints introspection finds, since driver support for the
+    latter varies.  The remote DB's own constraints still apply on
+    append (a violation surfaces as the write error, the analogue of
+    the reference's ``InsertingDataFailedError`` path).
     """
 
     def __init__(
@@ -357,13 +396,10 @@ class JDBCConnector(BaseConnector):
     def _fetch_schema_via_metadata(
         self,
     ) -> tuple[list[TableDict], list[ReferenceDict]]:
-        """Portable introspection through ``java.sql.DatabaseMetaData``.
-
-        Works against any compliant JDBC driver (the test exercises
-        Apache Derby).  Unique constraints come from unique index
-        metadata (PK-backing indexes excluded) merged with any
-        user-supplied ``unique_constraints``.
-        """
+        """Portable introspection through ``java.sql.DatabaseMetaData``
+        (the test exercises Apache Derby): its result sets become the
+        row mappings :func:`classify_schema` reads.  Unique indexes
+        stand in for UNIQUE constraints."""
         conn = self._driver_connection()
         try:
             meta = conn.getMetaData()
@@ -371,80 +407,51 @@ class JDBCConnector(BaseConnector):
             types = gateway.new_array(self.spark._jvm.java.lang.String, 1)
             types[0] = "TABLE"
 
-            names: list[str] = []
-            rs = meta.getTables(None, None, "%", types)
-            while rs.next():
-                names.append(rs.getString("TABLE_NAME"))
-
-            tables: list[TableDict] = []
-            references: list[ReferenceDict] = []
-            for name in sorted(names):
-                pk_cols: list[str] = []
-                rs = meta.getPrimaryKeys(None, None, name)
+            def read(rs, **fields: str) -> list[dict]:  # noqa: ANN001
+                out = []
                 while rs.next():
-                    pk_cols.append(rs.getString("COLUMN_NAME"))
-                if len(pk_cols) > 1:
-                    msg = f"table '{name}' declares a composite primary key."
-                    raise AssertionError(msg)
-                primary_key = pk_cols[0] if pk_cols else ""
+                    out.append({k: rs.getString(c) for k, c in fields.items()})
+                return out
 
-                fks: list[str] = []
-                rs = meta.getImportedKeys(None, None, name)
-                while rs.next():
-                    from_key = rs.getString("FKCOLUMN_NAME")
-                    fks.append(from_key)
-                    references.append(
-                        {
-                            "from_table": name,
-                            "from_key": from_key,
-                            "to_table": rs.getString("PKTABLE_NAME"),
-                            "to_key": rs.getString("PKCOLUMN_NAME"),
-                        }
+            tables = read(meta.getTables(None, None, "%", types), n="TABLE_NAME")
+            rows = {}
+            for name in (t["n"] for t in tables):
+                pk = {
+                    r["c"]
+                    for r in read(
+                        meta.getPrimaryKeys(None, None, name), c="COLUMN_NAME"
                     )
-
-                columns: list[str] = []
-                rs = meta.getColumns(None, None, name, "%")
-                while rs.next():
-                    columns.append(rs.getString("COLUMN_NAME"))
-                payload = [
-                    c for c in columns if c != primary_key and c not in fks
+                }
+                # getColumns takes a LIKE pattern: `_` in a name also
+                # matches other tables' columns
+                columns = [
+                    {**r, "is_primary_key": int(r["column_name"] in pk)}
+                    for r in read(
+                        meta.getColumns(None, None, name, "%"),
+                        column_name="COLUMN_NAME",
+                        table="TABLE_NAME",
+                    )
+                    if r["table"] == name
                 ]
-
-                # unique single/multi-column indexes (excluding the PK's
-                # backing index); driver support varies, so user-supplied
-                # constraints are merged in rather than replaced
-                by_index: dict[str, list[str]] = {}
-                rs = meta.getIndexInfo(None, None, name, True, False)
-                while rs.next():
-                    idx = rs.getString("INDEX_NAME")
-                    col = rs.getString("COLUMN_NAME")
-                    if idx is not None and col is not None:
-                        by_index.setdefault(idx, []).append(col)
-                uniques = [
-                    cols
-                    for cols in by_index.values()
-                    if cols != [primary_key]
-                ]
-                for extra in self.unique_constraints.get(name, []):
-                    if list(extra) not in uniques:
-                        uniques.append(list(extra))
-                # the idempotent-insert anti-join keys off this dict, so
-                # introspected constraints must land there too
-                if uniques:
-                    self.unique_constraints[name] = uniques
-
-                tables.append(
-                    {
-                        "name": name,
-                        "columns": payload,
-                        "primary_key": primary_key,
-                        "foreign_keys": fks,
-                        "unique_constraints": uniques,
-                    }
+                refs = read(
+                    meta.getImportedKeys(None, None, name),
+                    from_key="FKCOLUMN_NAME",
+                    to_table="PKTABLE_NAME",
+                    to_key="PKCOLUMN_NAME",
                 )
-            return tables, references
+                uniques = [
+                    r
+                    for r in read(
+                        meta.getIndexInfo(None, None, name, True, False),
+                        constraint_name="INDEX_NAME",
+                        column_name="COLUMN_NAME",
+                    )
+                    if r["constraint_name"] and r["column_name"]
+                ]
+                rows[name] = (columns, refs, uniques)
         finally:
             conn.close()
+        return classify_schema(rows, self.unique_constraints)
 
     def _read_table(self, table: str) -> DataFrame:
         """Partitioned JDBC scan of *table*.
@@ -511,7 +518,7 @@ class JDBCConnector(BaseConnector):
         existing = self._read_table(table)
         anti_keys = [
             uc
-            for uc in self.unique_constraints.get(table, [])
+            for uc in self.schema._get_table(table).unique_constraints
             if set(uc) <= set(columns)
         ]
         payload = new_rows.select(*columns)

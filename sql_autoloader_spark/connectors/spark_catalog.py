@@ -293,26 +293,13 @@ class _CommitJournal:
     The plain-Spark-tables restatement of how Delta/Iceberg get atomic
     multi-writer commits from a filesystem: one file per commit,
     ``<dir>/<cid>.commit`` (content = the commit's row token), created
-    by writing a temp file and LINKING/renaming it into place.  That
-    step is the whole commit — claim of the commit id and publication
-    of the token in ONE atomic operation: of two writers racing for
-    the same cid, exactly one claim succeeds and the loser retries
-    with the next id (its DATA needs no rewrite — rows are tagged with
-    the writer's own token, not the cid).  Scheme-aware atomicity:
-
-    - ``file://`` — ``java.nio.Files.createLink``: ``link(2)`` is a
-      single syscall that fails with ``EEXIST``, with none of the
-      TOCTOU window of Hadoop's local rename (whose no-overwrite
-      contract is a non-atomic exists-check before ``rename(2)``,
-      which itself silently replaces).
-    - everything else — ``FileSystem.rename``, which HDFS implements
-      as an atomic server-side no-overwrite operation.  On S3 use a
-      log-coordination layer, the same caveat as every file-journal
-      table format.
-
-    Either way the commit file appears with its COMPLETE content (the
-    temp file is fully written and closed first), so readers never see
-    a partial token.
+    through the store's :class:`ClaimStrategy`, which says how each
+    store makes it atomic.  That step is the whole commit — claim of
+    the commit id and publication of the token in ONE atomic
+    operation: of two writers racing for the same cid, exactly one
+    claim succeeds and the loser retries with the next id (its DATA
+    needs no rewrite — rows are tagged with the writer's own token,
+    not the cid).  Readers never see a partial token.
 
     Readers list the directory: the visible commits are exactly the
     ``*.commit`` files, each mapping cid → token.  Listing is a pure
@@ -1426,8 +1413,9 @@ class SparkConnector(BaseConnector):
         if table not in self._meta:
             msg = f"table '{table}' does not exist in the Spark catalog sink."
             raise KeyError(msg)
-        fs, path_cls = _hadoop_fs(self.spark, self._db_location())
-        src = f"{self._db_location()}/{table}__recovery_staging"
+        db_loc = self._db_location()
+        fs, path_cls = _hadoop_fs(self.spark, db_loc)
+        src = self._table_dir(db_loc, f"{table}__recovery_staging")
         aside = f"{src}__restoring"
         have_src = fs.exists(path_cls(src))
         have_aside = fs.exists(path_cls(aside))
@@ -1805,13 +1793,10 @@ class SparkConnector(BaseConnector):
         # non-empty location fails.  Rewrites are single-writer, so an
         # existing staging dir here is always such a leftover: clear it.
         if self.database is not None:
-            fs, path_cls = _hadoop_fs(self.spark, self._db_location())
-            fs.delete(
-                path_cls(
-                    f"{self._db_location()}/{table}__recovery_staging"
-                ),
-                True,
-            )
+            db_loc = self._db_location()
+            fs, path_cls = _hadoop_fs(self.spark, db_loc)
+            staging_dir = self._table_dir(db_loc, f"{table}__recovery_staging")
+            fs.delete(path_cls(staging_dir), True)
         content.write.mode("overwrite").saveAsTable(staging)
         staged = self.spark.table(staging)
         if cluster is not None:
@@ -1920,13 +1905,12 @@ class SparkConnector(BaseConnector):
             # uniform drop semantics for adopted (external-location)
             # tables: remove the persisted metadata and the data files
             # a catalog-only DROP leaves behind
-            fs, path_cls = _hadoop_fs(self.spark, self._db_location())
+            db_loc = self._db_location()
+            fs, path_cls = _hadoop_fs(self.spark, db_loc)
             fs.delete(
                 path_cls(f"{self._meta_dir()}/{action.table}.json"), False
             )
-            fs.delete(
-                path_cls(f"{self._db_location()}/{action.table}"), True
-            )
+            fs.delete(path_cls(self._table_dir(db_loc, action.table)), True)
         self._meta.pop(action.table, None)
         self._committed.pop(action.table, None)
         self._appends.pop(action.table, None)
@@ -2021,6 +2005,14 @@ class SparkConnector(BaseConnector):
         return self.spark.catalog.getDatabase(
             self.database
         ).locationUri.rstrip("/")
+
+    def _table_dir(self, db_loc: str, name: str) -> str:
+        """The directory Spark gives managed table *name* in the database
+        at *db_loc*: the name is lower-cased unless analysis is
+        case-sensitive (``SessionCatalog.formatTableName``)."""
+        if self.spark.conf.get("spark.sql.caseSensitive", "false") != "true":
+            name = name.lower()
+        return f"{db_loc}/{name}"
 
     def _meta_dir(self) -> str:
         return f"{self._db_location()}/_sql_autoloader_meta"
@@ -2198,6 +2190,7 @@ class SparkConnector(BaseConnector):
             )
             name = parsed.name
             qualified = self._qualified(name)
+            table_dir = self._table_dir(db_loc, name)
             if not self.spark.catalog.tableExists(qualified):
                 cols = ", ".join(f"`{c}` {t}" for c, t in parsed.column_types)
                 cols += f", `{_COMMIT_COL}` BIGINT"
@@ -2214,11 +2207,11 @@ class SparkConnector(BaseConnector):
                     )
                 self.spark.sql(
                     f"CREATE TABLE {qualified} ({cols}) USING PARQUET"
-                    f"{clauses} LOCATION '{db_loc}/{name}'"
+                    f"{clauses} LOCATION '{table_dir}'"
                 )
                 if parts:
                     self.spark.sql(f"MSCK REPAIR TABLE {qualified}")
-            if fs.exists(path_cls(f"{db_loc}/{name}__recovery_staging")):
+            if fs.exists(path_cls(f"{table_dir}__recovery_staging")):
                 # a crashed _overwrite_table left its staging copy —
                 # the target either survived intact or can be restored
                 # from this copy; surface it

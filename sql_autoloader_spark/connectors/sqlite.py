@@ -4,9 +4,11 @@ Runs the full loader lifecycle against a live ``sqlite3`` database using
 the standard-library driver (no JDBC jar required), so every semantic
 the reference relies on executes for real rather than being emulated:
 
-- schema introspection from the database itself via PRAGMAs
-  (reference sqlite_connector.py:84-147 — table_info / foreign_key_list
-  / index_list classify each column as PK, FK, or payload);
+- schema introspection from the database itself: the JDBC
+  :class:`~sql_autoloader_spark.connectors.jdbc.SQLiteDialect`'s
+  ``pragma_*`` SQL runs over ``sqlite3`` and the shared classifier
+  sorts each column into PK, FK, or payload (reference
+  sqlite_connector.py:84-147);
 - idempotent inserts via ``INSERT OR IGNORE`` against REAL ``UNIQUE``
   constraints (reference sqlite_connector.py:10-25) — a uniqueness
   conflict keeps rows out at the database layer and surfaces as
@@ -48,11 +50,12 @@ from pyspark.sql.types import (
 )
 
 from sql_autoloader_spark.connectors.base import BaseConnector
-from sql_autoloader_spark.connectors.normalize import canonical_number
-from sql_autoloader_spark.exceptions import (
-    InvalidTableError,
-    MatchDatatypesError,
+from sql_autoloader_spark.connectors.jdbc import (
+    SQLiteDialect,
+    fetch_schema_with_dialect,
 )
+from sql_autoloader_spark.connectors.normalize import canonical_number
+from sql_autoloader_spark.exceptions import MatchDatatypesError
 from sql_autoloader_spark.schema import ReferenceDict, TableDict
 
 
@@ -228,80 +231,12 @@ class SQLiteConnector(BaseConnector):
         self.update_schema()
 
     def fetch_schema(self) -> tuple[list[TableDict], list[ReferenceDict]]:
-        cur = self.connection.cursor()
-        names = [
-            row[0]
-            for row in cur.execute(
-                "SELECT name FROM sqlite_master WHERE type = 'table' "
-                "AND name NOT LIKE 'sqlite_%' ORDER BY name"
-            )
-        ]
-        tables: list[TableDict] = []
-        references: list[ReferenceDict] = []
-        pk_by_table: dict[str, str] = {}
-        pending: list[tuple[str, str, str, str | None]] = []
+        def run(sql: str) -> list[dict]:
+            cur = self.connection.execute(sql)
+            cols = [d[0] for d in cur.description]
+            return [dict(zip(cols, row, strict=True)) for row in cur]
 
-        for table in names:
-            cols = cur.execute(f'PRAGMA table_info("{table}")').fetchall()
-            #      (cid, name, declared_type, notnull, default, pk_position)
-            pk_cols = [c[1] for c in cols if c[5]]
-            if len(pk_cols) > 1:
-                msg = (
-                    f"table '{table}' declares a composite primary key "
-                    f"{pk_cols}; only single-column keys are supported "
-                    "(reference sqlite_connector.py:132)."
-                )
-                raise InvalidTableError(msg)
-            primary_key = pk_cols[0] if pk_cols else ""
-            pk_by_table[table] = primary_key
-
-            fk_rows = cur.execute(
-                f'PRAGMA foreign_key_list("{table}")'
-            ).fetchall()
-            #      (id, seq, target_table, from_col, to_col, ...)
-            foreign_keys = []
-            for fk in fk_rows:
-                foreign_keys.append(fk[3])
-                # to_col is None for `REFERENCES t` (implicit target PK)
-                pending.append((table, fk[3], fk[2], fk[4]))
-
-            unique_constraints: list[list[str]] = []
-            for idx in cur.execute(f'PRAGMA index_list("{table}")').fetchall():
-                #  (seq, index_name, is_unique, origin, partial)
-                if not idx[2] or idx[3] != "u":
-                    continue  # only UNIQUE-constraint indexes
-                members = [
-                    r[2]
-                    for r in cur.execute(
-                        f'PRAGMA index_info("{idx[1]}")'
-                    ).fetchall()
-                ]
-                unique_constraints.append(members)
-
-            tables.append(
-                {
-                    "name": table,
-                    "columns": [
-                        c[1]
-                        for c in cols
-                        if c[1] != primary_key and c[1] not in foreign_keys
-                    ],
-                    "primary_key": primary_key,
-                    "foreign_keys": foreign_keys,
-                    "unique_constraints": unique_constraints,
-                }
-            )
-
-        for from_table, from_key, to_table, to_key in pending:
-            references.append(
-                {
-                    "from_table": from_table,
-                    "from_key": from_key,
-                    "to_table": to_table,
-                    "to_key": to_key or pk_by_table.get(to_table, ""),
-                }
-            )
-        return tables, references
+        return fetch_schema_with_dialect(SQLiteDialect(), run)
 
     # -- physical primitives --------------------------------------------------
 

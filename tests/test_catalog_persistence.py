@@ -2282,3 +2282,36 @@ def test_manifest_scan_partitioned_bucketed_and_evolved(
         ("us", 2, None, 1),
     ]
     assert buck == [(1, "a", 1), (2, "b", 1), (3, "c", 2)]
+
+
+def test_mixed_case_table_on_copied_database(spark: SparkSession) -> None:
+    """Spark lower-cases a managed table's directory, so a mixed-case
+    table copied with its database under a new name and reopened there
+    is registered over that lower-cased directory and keeps every
+    row, in the table and in its changes feed."""
+    import os
+    import shutil
+
+    src = SparkConnector(spark, database="mixcasesrc")
+    src.execute_ddl("CREATE TABLE CcT (id INTEGER PRIMARY KEY, v TEXT UNIQUE);")
+    for batch in (["a", "b"], ["c"]):
+        with src:
+            src.insert(
+                spark.createDataFrame([(x,) for x in batch], ["v"]),
+                table="CcT",
+            )
+    src_dir = src._db_location().removeprefix("file:").removeprefix("//")
+    shutil.copytree(
+        src_dir, os.path.join(os.path.dirname(src_dir), "mixcasedst.db")
+    )
+    db = SparkConnector(spark, database="mixcasedst")
+    assert sorted(r["v"] for r in db._read_table("CcT").collect()) == [
+        "a",
+        "b",
+        "c",
+    ]
+    assert sorted(r["v"] for r in db.table_changes("CcT", 0).collect()) == [
+        "a",
+        "b",
+        "c",
+    ]

@@ -69,62 +69,154 @@ def test_sqlite_introspection_sql_against_real_sqlite() -> None:
     assert refs_none == []
 
 
-def test_sqlite_dialect_matches_sqlite_connector(spark) -> None:
-    """The JDBC SQLite dialect's introspection, run by real SQLite,
-    gives the same TableDict/ReferenceDict content as
-    ``SQLiteConnector.fetch_schema`` over the same DDL: UNIQUE
-    constraints (single and multi-column, but not a plain unique
-    index) and a ``REFERENCES t`` without a column, which targets
-    t's primary key.  The JDBC path itself needs a driver jar and is
-    not exercised here."""
-    from sql_autoloader_spark.connectors.jdbc import fetch_schema_with_dialect
-    from sql_autoloader_spark.connectors.sqlite import SQLiteConnector
+CAR_UNIQUE_DDL = (
+    CAR_DDL
+    + """
+    CREATE TABLE car (
+      id INTEGER PRIMARY KEY,
+      model TEXT UNIQUE,
+      code TEXT,
+      merk_id INTEGER REFERENCES merk,
+      UNIQUE (code, model)
+    );
+    CREATE UNIQUE INDEX car_code ON car (code);
+    """
+)
 
-    sc = SQLiteConnector(spark)
-    sc.connection.executescript(
-        CAR_DDL
-        + """
-        CREATE TABLE car (
-          id INTEGER PRIMARY KEY,
-          model TEXT UNIQUE,
-          code TEXT,
-          merk_id INTEGER REFERENCES merk,
-          UNIQUE (code, model)
-        );
-        CREATE UNIQUE INDEX car_code ON car (code);
-        """
-    )
 
+def _sqlite_run(con: sqlite3.Connection):  # noqa: ANN202
     def run(sql: str) -> list[dict]:
-        cur = sc.connection.execute(sql)
+        cur = con.execute(sql)
         cols = [d[0] for d in cur.description]
         return [dict(zip(cols, row)) for row in cur.fetchall()]
 
-    def canonical(tables, references):  # noqa: ANN001, ANN202
-        # order-free: the two paths list FKs and constraints in
-        # different (pragma) orders
-        return (
-            {
-                t["name"]: {
-                    **t,
-                    "foreign_keys": sorted(t["foreign_keys"]),
-                    "unique_constraints": sorted(t["unique_constraints"]),
-                }
-                for t in tables
-            },
-            sorted(tuple(sorted(r.items())) for r in references),
-        )
+    return run
 
-    got = canonical(*fetch_schema_with_dialect(SQLiteDialect(), run))
-    assert got == canonical(*sc.fetch_schema())
-    tables, refs = got
-    assert tables["car"]["unique_constraints"] == [["code", "model"], ["model"]]
-    assert (
-        ("from_key", "merk_id"),
-        ("from_table", "car"),
-        ("to_key", "id"),
-        ("to_table", "merk"),
-    ) in refs
+
+def test_sqlite_dialect_matches_sqlite_connector(spark) -> None:
+    """SQLite introspection, the JDBC SQLite dialect's SQL run by real
+    SQLite through ``SQLiteConnector.fetch_schema``, yields these
+    TableDict/ReferenceDict values: UNIQUE constraints (single and
+    multi-column, but not a plain unique index) and a ``REFERENCES t``
+    without a column, which targets t's primary key.  The JDBC path
+    itself needs a driver jar and is not exercised here."""
+    from sql_autoloader_spark.connectors.sqlite import SQLiteConnector
+
+    sc = SQLiteConnector(spark)
+    sc.connection.executescript(CAR_UNIQUE_DDL)
+    tables, references = sc.fetch_schema()
+    assert tables == [
+        {
+            "name": "car",
+            "columns": ["model", "code"],
+            "primary_key": "id",
+            "foreign_keys": ["merk_id"],
+            "unique_constraints": [["model"], ["code", "model"]],
+        },
+        {
+            "name": "dealer",
+            "columns": ["naam"],
+            "primary_key": "id",
+            "foreign_keys": [],
+            "unique_constraints": [["naam"]],
+        },
+        {
+            "name": "merk",
+            "columns": ["naam"],
+            "primary_key": "id",
+            "foreign_keys": [],
+            "unique_constraints": [["naam"]],
+        },
+        {
+            "name": "merk_dealer",
+            "columns": [],
+            "primary_key": "id",
+            # column-declaration order, not foreign_key_list's
+            "foreign_keys": ["merk_id", "dealer_id"],
+            "unique_constraints": [["merk_id", "dealer_id"]],
+        },
+    ]
+    edges = sorted(
+        (r["from_table"], r["from_key"], r["to_table"], r["to_key"])
+        for r in references
+    )
+    assert edges == [
+        ("car", "merk_id", "merk", "id"),
+        ("merk_dealer", "dealer_id", "dealer", "id"),
+        ("merk_dealer", "merk_id", "merk", "id"),
+    ]
+
+
+def test_dialect_composite_primary_key_rejected() -> None:
+    """The dialect path raises the same typed error as every other
+    introspection path on a composite primary key."""
+    from sql_autoloader_spark.connectors.jdbc import fetch_schema_with_dialect
+    from sql_autoloader_spark.exceptions import InvalidTableError
+
+    con = sqlite3.connect(":memory:")
+    con.executescript(
+        "CREATE TABLE pair (a INTEGER, b INTEGER, PRIMARY KEY (a, b));"
+    )
+    with pytest.raises(InvalidTableError, match="composite primary key"):
+        fetch_schema_with_dialect(SQLiteDialect(), _sqlite_run(con))
+
+
+def test_dialect_write_anti_joins_on_introspected_unique(
+    spark, monkeypatch
+) -> None:
+    """In dialect mode the idempotent insert anti-joins on the UNIQUE
+    keys introspection found, not only on user-supplied ones: a row
+    whose natural key is stored is not written again, even with a
+    different payload.  ``_query`` runs on sqlite3 and the JDBC write
+    is captured, so no driver jar is needed."""
+    from pyspark.sql import DataFrameWriter
+
+    con = sqlite3.connect(":memory:")
+    con.executescript(
+        """
+        CREATE TABLE brand (
+          id INTEGER PRIMARY KEY, name TEXT UNIQUE, country TEXT
+        );
+        INSERT INTO brand (name, country) VALUES ('Toyota', 'JP');
+        """
+    )
+    run = _sqlite_run(con)
+
+    class Collected:
+        def __init__(self, rows: list[dict]) -> None:
+            self.rows = rows
+
+        def collect(self) -> list[dict]:
+            return self.rows
+
+    monkeypatch.setattr(
+        JDBCConnector, "_query", lambda self, sql: Collected(run(sql))
+    )
+    monkeypatch.setattr(
+        JDBCConnector,
+        "_read_table",
+        lambda self, table: spark.createDataFrame(
+            [("Toyota", "JP")], "name string, country string"
+        ),
+    )
+    written = []
+    monkeypatch.setattr(
+        DataFrameWriter,
+        "jdbc",
+        lambda self, *args, **kwargs: written.append(self._df),
+    )
+    db = JDBCConnector(spark, "jdbc:sqlite::memory:")
+    assert isinstance(db.dialect, SQLiteDialect)
+    assert db.schema._get_table("brand").unique_constraints == [["name"]]
+    db._write_new_rows(
+        "brand",
+        spark.createDataFrame(
+            [("Toyota", "US"), ("Ford", "US")], "name string, country string"
+        ),
+        ["name", "country"],
+    )
+    (frame,) = written
+    assert sorted(map(tuple, frame.collect())) == [("Ford", "US")]
 
 
 def test_postgres_introspection_sql_shape() -> None:
@@ -187,8 +279,8 @@ def test_jdbc_end_to_end_against_embedded_derby(
     # introspected structure: natural-key UNIQUEs found via index
     # metadata; CAR's FK resolves through the schema graph (the load
     # below would fail to plan otherwise)
-    assert db.unique_constraints.get("BRAND") == [["BRAND"]]
-    assert db.unique_constraints.get("CAR") == [["MODEL"]]
+    assert db.schema._get_table("BRAND").unique_constraints == [["BRAND"]]
+    assert db.schema._get_table("CAR").unique_constraints == [["MODEL"]]
 
     flat = spark.createDataFrame(
         [
@@ -222,6 +314,33 @@ def test_jdbc_end_to_end_against_embedded_derby(
         db.load(flat)
     assert spark.read.jdbc(url, "BRAND").count() == 2
     assert spark.read.jdbc(url, "CAR").count() == 3
+
+
+def test_derby_metadata_rows_classified(spark, tmp_path) -> None:
+    """DatabaseMetaData introspection: a ``_`` in a table name is not a
+    wildcard that pulls in another table's columns, and a composite
+    primary key raises the same typed error as every other path."""
+    from sql_autoloader_spark.exceptions import InvalidTableError
+
+    if not _derby_available(spark):
+        pytest.skip("Derby JDBC driver not on the Spark classpath")
+
+    db = JDBCConnector(spark, f"jdbc:derby:{tmp_path}/pairs;create=true")
+    db.execute_ddl(
+        """
+        CREATE TABLE A_B (ID INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY,
+                          X VARCHAR(10));
+        CREATE TABLE AXB (ID INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY,
+                          Y VARCHAR(10))
+        """
+    )
+    assert db.schema._get_table("A_B").columns == ["X"]
+    assert db.schema._get_table("AXB").columns == ["Y"]
+    with pytest.raises(InvalidTableError, match="composite primary key"):
+        db.execute_ddl(
+            "CREATE TABLE PAIR (A INT NOT NULL, B INT NOT NULL,"
+            " PRIMARY KEY (A, B))"
+        )
 
 
 def test_split_statements_honors_quotes() -> None:

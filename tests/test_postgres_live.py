@@ -919,6 +919,80 @@ def test_distributed_read_bare_numeric_and_quoted_name(
         db.close()
 
 
+def test_fetch_schema_quoted_table_name(
+    spark: SparkSession, pg_database: tuple[EmbeddedPostgres, str]
+) -> None:
+    """A quote in a table name is escaped inside the dialect's string
+    literals: introspection finds the table's key, FK and UNIQUE
+    constraint instead of failing with a syntax error."""
+    db = _connector(spark, pg_database)
+    try:
+        db.execute_ddl(
+            STAR_DDL
+            + """
+            CREATE TABLE "it's" (
+                id bigint GENERATED ALWAYS AS IDENTITY PRIMARY KEY,
+                v text UNIQUE,
+                region_id bigint REFERENCES dim_region (id)
+            );
+            """
+        )
+        tables, references = db.fetch_schema()
+        by_name = {t["name"]: t for t in tables}
+        assert by_name["it's"] == {
+            "name": "it's",
+            "columns": ["v"],
+            "primary_key": "id",
+            "foreign_keys": ["region_id"],
+            "unique_constraints": [["v"]],
+        }
+        assert {
+            "from_table": "it's",
+            "from_key": "region_id",
+            "to_table": "dim_region",
+            "to_key": "id",
+        } in references
+    finally:
+        db.close()
+
+
+def test_primary_key_that_is_a_foreign_key_loads(
+    spark: SparkSession, pg_database: tuple[EmbeddedPostgres, str]
+) -> None:
+    """A key that also references another table's key (a 1:1
+    extension table) is both the primary key and a foreign key, so a
+    load fills it from the parent's retrieved keys."""
+    db = _connector(spark, pg_database)
+    try:
+        db.execute_ddl(
+            """
+            CREATE TABLE car (
+                id bigint GENERATED ALWAYS AS IDENTITY PRIMARY KEY,
+                model text UNIQUE
+            );
+            CREATE TABLE car_detail (
+                car_id bigint PRIMARY KEY REFERENCES car (id),
+                note text
+            );
+            """
+        )
+        detail = db.schema._get_table("car_detail")
+        assert detail.primary_key == "car_id"
+        assert detail.foreign_keys == ["car_id"]
+        with db:
+            db.load(
+                spark.createDataFrame(
+                    [("a", "n1"), ("b", "n2")], "model string, note string"
+                )
+            )
+        assert db.client.query(
+            "SELECT c.model, d.note FROM car c"
+            " JOIN car_detail d ON d.car_id = c.id ORDER BY c.model"
+        ).rows == [("a", "n1"), ("b", "n2")]
+    finally:
+        db.close()
+
+
 def test_copy_and_driver_paths_store_identical_timestamps(
     spark: SparkSession, pg_database: tuple[EmbeddedPostgres, str]
 ) -> None:

@@ -203,6 +203,26 @@ def test_composite_primary_key_rejected(spark: SparkSession) -> None:
         db.fetch_schema()
 
 
+def test_quoted_table_name_introspected(spark: SparkSession) -> None:
+    """A quote in a table name is escaped inside the introspection
+    SQL's string literals."""
+    db = SQLiteConnector(spark)
+    db.connection.executescript(
+        'CREATE TABLE "it\'s" (id INTEGER PRIMARY KEY, v TEXT UNIQUE);'
+    )
+    tables, references = db.fetch_schema()
+    assert tables == [
+        {
+            "name": "it's",
+            "columns": ["v"],
+            "primary_key": "id",
+            "foreign_keys": [],
+            "unique_constraints": [["v"]],
+        }
+    ]
+    assert references == []
+
+
 def test_planner_errors_surface(spark: SparkSession) -> None:
     db = SQLiteConnector(spark)
     with pytest.raises(X.EmptySchemaError):
