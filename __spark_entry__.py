@@ -3142,8 +3142,9 @@ def q_load_events_postgres_copy(
     partitions concurrently into an unlogged staging table and ONE
     server-side null-safe anti-join + ``ON CONFLICT DO NOTHING``
     statement merges it — no fact row ever crosses the driver on the
-    write side.  The dim stays on the reference-shaped driver INSERT
-    path, exercising both physical strategies in one load.  Returns
+    write side.  The dim stays on the driver path (COPY over the
+    driver connection), exercising both physical strategies in one
+    load.  Returns
     the PostgreSQL-executed compare-query reconstruction (= the
     distinct input projection)."""
     from sql_autoloader_spark.connectors.pgwire import EmbeddedPostgres
@@ -3250,12 +3251,12 @@ def q_load_events_postgres_readback(
 def q_load_star_postgres_typed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """E5 with TYPE-CORNER columns through the driver INSERT path
+    """E5 with TYPE-CORNER columns through the driver write path
     against LIVE PostgreSQL (round-10 gap close): the dimension carries
     ``numeric(18,6)``, ``bytea``, and ``timestamptz`` payload columns
-    and the fact a ``numeric(18,6)`` measure, all moving as
-    driver-rendered VALUES into the typed session-temp table + EXCEPT
-    merge (``connectors/postgres.py:_write_new_rows``), validated by
+    and the fact a ``numeric(18,6)`` measure, all moving as COPY text
+    over the driver connection into the typed session-temp table +
+    EXCEPT merge (``connectors/postgres.py:_write_new_rows``), validated by
     the in-database checksum, and read back through the generated
     compare query — so decimal scale, binary round-trip fidelity, and
     the UTC timestamptz canon are all oracle-checked end to end (the

@@ -1,15 +1,14 @@
-"""Driver-side value canonicalization shared by the database sinks'
-idempotency pre-filters.
+"""Driver-side number canonicalization: the form in which the SQLite
+sink binds a ``decimal.Decimal`` payload value (``sqlite3`` has no
+Decimal adapter).
 
-The pre-filter (reference sqlite_connector.py:10-25 analogue) decides
-"is this payload row already present?" by set membership over collected
-rows, so every representation a value can take on either side of the
-round trip — Spark ``collect`` vs the database driver's decode — must
-map to ONE canonical form.  Numbers are the subtle case: the same
-mathematical value arrives as ``int``, ``float``, or ``Decimal``
-depending on column types, while two Decimals differing only beyond
-float53 precision are genuinely different rows (collapsing them through
-``float()`` silently filtered real rows as already-present).
+Which payload rows are already stored is decided by the databases
+themselves (the sinks land the payload in a table typed like the
+target and run ``EXCEPT``), so nothing here defines value equality; the
+bind form only has to be exact text that SQLite's column affinity can
+convert — two Decimals differing only beyond float53 precision stay
+distinct strings (collapsing them through ``float()`` would lose real
+rows in TEXT columns).
 """
 
 from __future__ import annotations
@@ -24,13 +23,10 @@ def canonical_number(value: int | float | decimal.Decimal) -> str:
     Decimal representations, at the precision the value itself carries.
 
     Floats canonicalize through their shortest round-trip decimal form
-    (``repr``) — exactly the text the sinks send as SQL literals — so a
-    Spark double and the ``numeric`` the database stored for it land on
-    the SAME string, while Decimals keep their full precision and stay
+    (``repr``), while Decimals keep their full precision and stay
     distinct beyond float53.  ``normalize()`` strips trailing zeros and
-    scale so ``1.50`` and ``1.5`` agree; zeros drop their sign (the
-    sinks' numeric types have no negative zero).  NaN is the caller's
-    business (its non-reflexive equality needs a sentinel).
+    scale so ``1.50`` and ``1.5`` agree; zeros drop their sign.  NaN is
+    the caller's business (the SQLite sink rejects it before binding).
     """
     if isinstance(value, float):
         value = decimal.Decimal(repr(value))

@@ -30,12 +30,12 @@ Postgres path promises runs for real:
 Positioning at scale: the driver's single connection never carries
 table-sized traffic in either direction.
 
-- **Writes**: small known payloads (dimension tables) land in a typed
-  session-temp table via driver-rendered ``VALUES`` lists,
-  reference-shaped — but BOTH idempotency layers run SERVER-side in
-  the merge statement (a hashable typed ``EXCEPT`` set difference +
-  ``ON CONFLICT DO NOTHING``), so the target is never read back
-  through the driver.  Anything larger — or of unknown size, the
+- **Writes**: small known payloads (dimension tables) are COPYed over
+  the driver connection into a typed session-temp table, in the same
+  COPY text the executors send — and BOTH idempotency layers run
+  SERVER-side in the merge statement (a hashable typed ``EXCEPT`` set
+  difference + ``ON CONFLICT DO NOTHING``), so the target is never
+  read back through the driver.  Anything larger — or of unknown size, the
   scale-safe default — goes through the distributed COPY path:
   executors ``COPY`` DataFrame partitions concurrently into an
   unlogged staging table (PostgreSQL's fastest ingest primitive, N
@@ -97,18 +97,12 @@ from sql_autoloader_spark.schema import ReferenceDict, TableDict
 
 logger = logging.getLogger("sql_autoloader_spark")
 
-#: rows per multi-row INSERT statement — sized so the default
-#: ``copy_threshold`` payload fits ONE statement (= one linear
-#: hash-anti-join scan of the target for the whole insert); the
-#: reference's executemany batched at wire-bind granularity instead
-_INSERT_BATCH = 5000
-
 #: schema holding per-load staging tables for the distributed COPY
 #: path; outside 'public' so introspection (jdbc.PostgresDialect
 #: filters table_schema='public') never sees load machinery
 _STAGING_SCHEMA = "_al_staging"
 
-#: COPY bytes buffered per CopyData message from each executor
+#: COPY bytes buffered per CopyData message (executors and driver alike)
 _COPY_BUFFER = 1 << 18
 
 #: default cap on concurrently-held snapshot-export connections (one
@@ -118,9 +112,9 @@ _MAX_SNAPSHOT_HOLDERS = 8
 
 #: naive timestamp text is interpreted in the connection's TimeZone;
 #: every timestamp this connector sends is rendered JVM-side as its UTC
-#: wall clock (``_render_timestamps``, on the driver INSERT and the COPY
-#: paths alike), so pin the interpretation to match on EVERY connection
-#: the connector opens.  DateStyle is pinned too: the wire and COPY
+#: wall clock (``_render_timestamps``, in the COPY text of both write
+#: paths), so pin the interpretation to match on EVERY connection the
+#: connector opens.  DateStyle is pinned too: the wire and COPY
 #: decoders parse ISO output only, and a server configured with e.g.
 #: 'German, DMY' would otherwise break every datetime read.
 _TZ_SETUP = "SET TIME ZONE 'UTC'; SET datestyle = ISO"
@@ -137,16 +131,21 @@ _TZ_SETUP = "SET TIME ZONE 'UTC'; SET datestyle = ISO"
 _AUX_SESSION_SETUP = f"{_TZ_SETUP}; SET lock_timeout = '30s'"
 
 
+def _dial(conn: dict) -> PGWireClient:
+    """Open one auxiliary/executor connection from the connector's
+    ``_connect`` mapping (plain data, so executor tasks can capture
+    it) and apply :data:`_AUX_SESSION_SETUP`."""
+    client = PGWireClient(**conn)
+    try:
+        client.execute(_AUX_SESSION_SETUP)
+    except BaseException:
+        client.close()
+        raise
+    return client
+
+
 def _copy_partition_reader(
-    host: str | None,
-    sock_dir: str | None,
-    port: int,
-    user: str,
-    database: str,
-    password: str | None,
-    tls: bool,
-    tls_ca: str | None,
-    tls_verify_hostname: bool,
+    conn: dict,
     table: str,
     quoted: str,
     oids: list[int],
@@ -178,19 +177,8 @@ def _copy_partition_reader(
                 f'COPY (SELECT {quoted} FROM "{table}" WHERE {cond}) '
                 "TO STDOUT"
             )
-            client = PGWireClient(
-                sock_dir,
-                port,
-                host=host,
-                user=user,
-                database=database,
-                password=password,
-                tls=tls,
-                tls_ca=tls_ca,
-                tls_verify_hostname=tls_verify_hostname,
-            )
+            client = _dial(conn)
             try:
-                client.execute(_AUX_SESSION_SETUP)
                 if snapshot_id is not None:
                     client.execute(
                         "BEGIN ISOLATION LEVEL REPEATABLE READ READ"
@@ -254,87 +242,48 @@ def _close_quietly(client: PGWireClient) -> None:
         pass
 
 
-def _render_values_row(row: tuple, columns: list[str]) -> str:
-    """One parenthesized VALUES tuple, naming the column on an
-    :class:`UnstorableTextError` so the driver-path rejection is as
-    actionable as the COPY path's."""
-    parts = []
-    for col, v in zip(columns, row):
-        try:
-            parts.append(pg_literal(v))
-        except UnstorableTextError as exc:
-            raise UnstorableTextError(
-                f'column "{col}": {exc}', value=exc.value
-            ) from None
-    return "(" + ", ".join(parts) + ")"
+def _copy_chunks(rows, columns: list[str]):  # noqa: ANN001, ANN201
+    """COPY text-format lines of *rows* (:func:`copy_text_row`),
+    buffered into CopyData-sized chunks — the one payload encoding of
+    both write paths.  An :class:`UnstorableTextError` is re-raised
+    naming the column, so the rejection is actionable."""
+    buffer = bytearray()
+    try:
+        for row in rows:
+            buffer += copy_text_row(tuple(row))
+            if len(buffer) >= _COPY_BUFFER:
+                yield bytes(buffer)
+                buffer = bytearray()
+    except UnstorableTextError as exc:
+        named = (
+            f'column "{columns[exc.cell_index]}": {exc}'
+            if exc.cell_index is not None and exc.cell_index < len(columns)
+            else str(exc)
+        )
+        raise UnstorableTextError(
+            named, cell_index=exc.cell_index, value=exc.value
+        ) from None
+    if buffer:
+        yield bytes(buffer)
 
 
-def _copy_partition_writer(
-    host: str | None,
-    sock_dir: str | None,
-    port: int,
-    user: str,
-    database: str,
-    password: str | None,
-    tls: bool,
-    tls_ca: str | None,
-    tls_verify_hostname: bool,
-    copy_sql: str,
-    columns: list[str],
-):
+def _copy_partition_writer(conn: dict, copy_sql: str, columns: list[str]):
     """Build the ``foreachPartition`` task for the distributed COPY
-    path.  Captures only plain connect parameters (picklable); each
+    path.  Captures only the plain connect mapping (picklable); each
     non-empty partition opens its own wire connection — on a cluster
     that is N executors COPYing into the server concurrently, the
     standard parallel-ingest topology for PostgreSQL."""
 
     def write(rows) -> None:  # noqa: ANN001 - iterator of Row
-        client: PGWireClient | None = None
+        chunks = _copy_chunks(rows, columns)
+        first = next(chunks, None)
+        if first is None:
+            return  # empty partition: never connect
+        client = _dial(conn)
         try:
-            buffer = bytearray()
-
-            def chunks():  # noqa: ANN202
-                nonlocal buffer
-                for row in rows:
-                    buffer += copy_text_row(tuple(row))
-                    if len(buffer) >= _COPY_BUFFER:
-                        yield bytes(buffer)
-                        buffer = bytearray()
-                if buffer:
-                    yield bytes(buffer)
-
-            gen = chunks()
-            try:
-                first = next(gen)
-            except StopIteration:
-                return  # empty partition: never connect
-            client = PGWireClient(
-                sock_dir,
-                port,
-                host=host,
-                user=user,
-                database=database,
-                password=password,
-                tls=tls,
-                tls_ca=tls_ca,
-                tls_verify_hostname=tls_verify_hostname,
-            )
-            client.execute(_AUX_SESSION_SETUP)
-            client.copy_in(copy_sql, itertools.chain([first], gen))
-        except UnstorableTextError as exc:
-            # name the column so the task failure is actionable
-            named = (
-                f'column "{columns[exc.cell_index]}": {exc}'
-                if exc.cell_index is not None
-                and exc.cell_index < len(columns)
-                else str(exc)
-            )
-            raise UnstorableTextError(
-                named, cell_index=exc.cell_index, value=exc.value
-            ) from None
+            client.copy_in(copy_sql, itertools.chain([first], chunks))
         finally:
-            if client is not None:
-                client.close()
+            client.close()
 
     return write
 
@@ -386,9 +335,9 @@ class PostgresConnector(BaseConnector):
         to verify-full).  The connector owns whichever
         connection it uses (``close()``).
     copy_threshold:
-        Payload row-count bound at or below which inserts use the
-        driver-side multi-row INSERT path.  Above it — or whenever the
-        payload size is unknown — the write goes through the
+        Payload row-count bound at or below which inserts COPY the
+        collected payload over the driver connection.  Above it — or
+        whenever the payload size is unknown — the write goes through the
         distributed COPY path (executors COPY partitions concurrently
         into an unlogged staging table; one server-side null-safe
         anti-join + ``ON CONFLICT DO NOTHING`` merges it), provided
@@ -449,38 +398,6 @@ class PostgresConnector(BaseConnector):
                 "'auto' or 'always'"
             )
             raise ValueError(msg)
-        if client is None:
-            if sock_dir is None and host is None:
-                msg = "pass either an open client= or sock_dir=/host="
-                raise ValueError(msg)
-            client = PGWireClient(
-                sock_dir,
-                port,
-                host=host,
-                user=user,
-                database=database,
-                password=password,
-                tls=tls,
-                tls_ca=tls_ca,
-                tls_verify_hostname=tls_verify_hostname,
-            )
-        self.client = client
-        self.client.execute(_TZ_SETUP)
-        self.dialect = PostgresDialect()
-        self.copy_threshold = copy_threshold
-        self.copy_connections = copy_connections
-        self.read_copy_bytes = read_copy_bytes
-        #: cap on live snapshot-export connections (one idle read-only
-        #: REPEATABLE READ transaction per distributed read): a
-        #: long-lived connector must not exhaust max_connections or
-        #: pin the vacuum horizon indefinitely.  Past the cap the
-        #: OLDEST export is released — any frame from that read (even
-        #: one never yet acted on: exports happen at construction,
-        #: imports at action time) then fails loudly with "invalid
-        #: snapshot identifier" instead of the SERVER failing new
-        #: connections.  Size it to the number of big-table frames the
-        #: application keeps live simultaneously.
-        self.snapshot_exports = snapshot_exports
         # executor connect parameters; without them (bare client=) the
         # distributed COPY path is unavailable and all writes stay on
         # the driver connection
@@ -499,6 +416,28 @@ class PostgresConnector(BaseConnector):
             if sock_dir is not None or host is not None
             else None
         )
+        if client is None:
+            if self._connect is None:
+                msg = "pass either an open client= or sock_dir=/host="
+                raise ValueError(msg)
+            client = PGWireClient(**self._connect)
+        self.client = client
+        self.client.execute(_TZ_SETUP)
+        self.dialect = PostgresDialect()
+        self.copy_threshold = copy_threshold
+        self.copy_connections = copy_connections
+        self.read_copy_bytes = read_copy_bytes
+        #: cap on live snapshot-export connections (one idle read-only
+        #: REPEATABLE READ transaction per distributed read): a
+        #: long-lived connector must not exhaust max_connections or
+        #: pin the vacuum horizon indefinitely.  Past the cap the
+        #: OLDEST export is released — any frame from that read (even
+        #: one never yet acted on: exports happen at construction,
+        #: imports at action time) then fails loudly with "invalid
+        #: snapshot identifier" instead of the SERVER failing new
+        #: connections.  Size it to the number of big-table frames the
+        #: application keeps live simultaneously.
+        self.snapshot_exports = snapshot_exports
         #: EXCEPT pre-filter policy — identity-gap mitigation (round 12;
         #: validated pre-I/O at the top of __init__).
         #: ``"auto"``: keep the EXCEPT layer whenever the target has a
@@ -824,19 +763,7 @@ class PostgresConnector(BaseConnector):
             ranges, len(ranges)
         ).mapPartitions(
             _copy_partition_reader(
-                conn["host"],
-                conn["sock_dir"],
-                conn["port"],
-                conn["user"],
-                conn["database"],
-                conn["password"],
-                conn["tls"],
-                conn["tls_ca"],
-                conn["tls_verify_hostname"],
-                table,
-                quoted,
-                masked_oids,
-                snapshot_id,
+                conn, table, quoted, masked_oids, snapshot_id
             )
         )
         # NOTE: the export is held until close() — NOT tied to this
@@ -865,8 +792,9 @@ class PostgresConnector(BaseConnector):
 
         Physical strategy by payload size: at or below
         ``copy_threshold`` known rows, the driver path — the PAYLOAD is
-        collected and rendered into ``VALUES`` lists (reference-shaped,
-        postgres_connector.py executemany analogue), but BOTH
+        collected and COPYed over the driver connection as the same
+        COPY text the executors send (the reference's executemany,
+        postgres_connector.py, in one COPY), but BOTH
         idempotency layers run server-side in the same statement
         (a hashable ``EXCEPT`` set difference + ``ON
         CONFLICT``), so the TARGET table is never read: a 100-row
@@ -887,16 +815,17 @@ class PostgresConnector(BaseConnector):
         quoted = ", ".join(f'"{c}"' for c in columns)
         # timestamps cross as the same rendered text the COPY path sends
         rendered = self._render_timestamps(new_rows.select(*columns))
-        collected = rendered.collect()
-        payload = [tuple(r[c] for c in columns) for r in collected]
-        if not payload:
+        # render the whole payload BEFORE the first statement: a
+        # rejected value (lone surrogate) sends nothing
+        chunks = list(_copy_chunks(rendered.collect(), columns))
+        if not chunks:
             return
         # The payload lands first in a SESSION-TEMP table typed like the
-        # target (CTAS WITH NO DATA clones exact typmods), so literals
-        # take ASSIGNMENT casts — a value too long for varchar(n) errors
-        # exactly like a plain INSERT or the COPY path would, where an
-        # explicit ::cast would silently truncate; bare literals for
-        # uuid/enum/inet columns resolve to the landing types with no
+        # target (CTAS WITH NO DATA clones exact typmods), so each value
+        # enters through its column type's input function, exactly as
+        # on the COPY path — a value too long for varchar(n) errors
+        # where an explicit ::cast would silently truncate, and text for
+        # uuid/enum/inet columns resolves to the landing types with no
         # catalog machinery.  The null-safe already-present filter is
         # then a type-exact ``EXCEPT``: exact SQL VALUE equality
         # (numeric 1.5 ≡ 1.50, float -0 ≡ 0, NULLs not distinct —
@@ -915,14 +844,7 @@ class PostgresConnector(BaseConnector):
             f'CREATE TEMP TABLE "__al_values" AS '
             f'SELECT {quoted} FROM "{table}" WITH NO DATA'
         )
-        for start in range(0, len(payload), _INSERT_BATCH):
-            values = ", ".join(
-                _render_values_row(row, columns)
-                for row in payload[start : start + _INSERT_BATCH]
-            )
-            self.client.execute(
-                f"INSERT INTO {tmp} ({quoted}) VALUES {values}"
-            )
+        self.client.copy_in(f"COPY {tmp} ({quoted}) FROM STDIN", chunks)
         self.client.execute(
             f'INSERT INTO "{table}" ({quoted}) '
             f"SELECT {quoted} FROM ("
@@ -1097,17 +1019,7 @@ class PostgresConnector(BaseConnector):
         assert conn is not None  # routing guarantees this  # noqa: S101
         out.foreachPartition(
             _copy_partition_writer(
-                conn["host"],
-                conn["sock_dir"],
-                conn["port"],
-                conn["user"],
-                conn["database"],
-                conn["password"],
-                conn["tls"],
-                conn["tls_ca"],
-                conn["tls_verify_hostname"],
-                f"COPY {qualified} ({quoted}) FROM STDIN",
-                list(columns),
+                conn, f"COPY {qualified} ({quoted}) FROM STDIN", list(columns)
             )
         )
         return qualified, stage
@@ -1115,8 +1027,8 @@ class PostgresConnector(BaseConnector):
     @staticmethod
     def _render_timestamps(frame: DataFrame) -> DataFrame:
         """Render timestamp columns to UTC wall-clock text JVM-side
-        before they leave Spark (COPY payloads and the driver INSERT's
-        collect alike).
+        before they leave Spark (executor COPY partitions and the driver
+        path's collect alike).
 
         ``TimestampType`` would cross the Python boundary as a NAIVE
         datetime in the Python process's timezone, which the server then
@@ -1160,19 +1072,7 @@ class PostgresConnector(BaseConnector):
         if conn is None:  # pragma: no cover - guarded by callers
             msg = "distributed COPY path needs sock_dir=/host= parameters"
             raise ValueError(msg)
-        client = PGWireClient(
-            conn["sock_dir"],
-            conn["port"],
-            host=conn["host"],
-            user=conn["user"],
-            database=conn["database"],
-            password=conn["password"],
-            tls=conn["tls"],
-            tls_ca=conn["tls_ca"],
-            tls_verify_hostname=conn["tls_verify_hostname"],
-        )
-        client.execute(_AUX_SESSION_SETUP)
-        return client
+        return _dial(conn)
 
     def sweep_staging(self) -> int:
         """Drop EVERY table in the staging schema — recovery after a

@@ -9,9 +9,11 @@ the reference relies on executes for real rather than being emulated:
   ``pragma_*`` SQL runs over ``sqlite3`` and the shared classifier
   sorts each column into PK, FK, or payload (reference
   sqlite_connector.py:84-147);
-- idempotent inserts via ``INSERT OR IGNORE`` against REAL ``UNIQUE``
-  constraints (reference sqlite_connector.py:10-25) — a uniqueness
-  conflict keeps rows out at the database layer and surfaces as
+- idempotent inserts decided by the database: the payload lands in a
+  temp table with the target's column affinities, ``EXCEPT`` drops the
+  rows already stored, and ``INSERT OR IGNORE`` against REAL
+  ``UNIQUE`` constraints (reference sqlite_connector.py:10-25) keeps
+  conflicting rows out at the database layer — a conflict surfaces as
   :class:`InsertingDataFailedError` through the shared lifecycle;
 - surrogate keys from SQLite's own ``INTEGER PRIMARY KEY`` rowid
   autoincrement and read back by the key-retrieval scan (reference
@@ -34,7 +36,6 @@ where writes stay distributed.
 
 from __future__ import annotations
 
-import datetime
 import decimal
 import sqlite3
 
@@ -100,10 +101,9 @@ class UnstorableValueError(ValueError):
 
     SQLite has no NaN: binding ``float('nan')`` (or a NaN Decimal)
     silently stores NULL (sqlite.org/floatingpoint.html), so a NaN row
-    would come back as a different row — the re-load filter could never
-    match it and every reload would grow the table.  The sink rejects
-    the value loudly BEFORE any write instead (the same contract as the
-    PG wire client's lone-surrogate rejection)."""
+    would come back as a different row.  The sink rejects the value
+    loudly BEFORE any write instead (the same contract as the PG wire
+    client's lone-surrogate rejection)."""
 
 
 def _bind_cell(value: object) -> object:
@@ -111,10 +111,8 @@ def _bind_cell(value: object) -> object:
     found by the type-lattice fuzz): ``decimal.Decimal`` is not a
     registered sqlite3 adapter type (raises ``ProgrammingError``), so
     it binds as its :func:`canonical_number` string — NUMERIC/INTEGER
-    affinity columns convert numeric text back to INTEGER/REAL exactly
-    when the conversion is lossless, TEXT columns keep full precision;
-    either way the readback re-canonicalizes to the same string the
-    idempotency filter normed the payload to.  NaN (float or Decimal)
+    affinity columns convert numeric text to INTEGER/REAL by SQLite's
+    own rule, TEXT columns keep full precision.  NaN (float or Decimal)
     is rejected typed — see :class:`UnstorableValueError`."""
     if isinstance(value, float):
         if value != value:
@@ -132,41 +130,6 @@ def _bind_cell(value: object) -> object:
             )
             raise UnstorableValueError(msg)
         return canonical_number(value)
-    return value
-
-
-def _norm_cell(value: object) -> object:
-    """Canonical comparable form for the idempotency pre-filter: values
-    that change representation across the Spark → sqlite3 → Spark round
-    trip (datetimes bound via the default adapters come back as TEXT,
-    bools as 0/1, NaN breaks reflexive equality, numbers cross storage
-    classes) map to the form the database would hand back, so set
-    membership is meaningful.  Numbers canonicalize through
-    :func:`canonical_number` so an INTEGER readback matches the REAL
-    that produced it while high-precision decimals stay distinct."""
-    if value is None:
-        return None
-    if isinstance(value, bool):
-        # sqlite stores bools as INTEGER 0/1, and the readback int
-        # routes through canonical_number below — the payload side must
-        # land on the SAME form or a bool column defeats the
-        # idempotency pre-filter and every re-load duplicates
-        # constraint-less tables
-        return canonical_number(int(value))
-    if isinstance(value, float):
-        if value != value:
-            return "__nan__"
-        return canonical_number(value)
-    if isinstance(value, int):
-        return canonical_number(value)
-    if isinstance(value, decimal.Decimal):
-        if value.is_nan():
-            return "__nan__"
-        return canonical_number(value)
-    if isinstance(value, (datetime.date, datetime.datetime)):
-        return str(value)
-    if isinstance(value, bytearray):
-        return bytes(value)
     return value
 
 
@@ -284,98 +247,53 @@ class SQLiteConnector(BaseConnector):
         *,
         payload_bound: int | None = None,
     ) -> None:
-        """Idempotent insert, two layers deep:
+        """Idempotent insert, decided by SQLite itself:
 
-        1. rows already present (all inserted columns equal, NULLs
-           treated as equal — Python tuple equality mirrors the
-           engine's null-safe set semantics) are filtered out first, so
-           re-loading identical data never grows constraint-less
-           tables — the same guarantee the Spark sink's anti-join gives;
-        2. the remainder goes through ``INSERT OR IGNORE`` so REAL
+        1. the payload lands in a temp table cloned from the target's
+           columns (``CREATE TABLE ... AS SELECT ... WHERE 0`` keeps each
+           column's affinity), so every value takes the same conversion
+           the target would give it;
+        2. ``EXCEPT SELECT ... FROM target`` drops rows already stored
+           (compound SELECTs treat NULLs as equal), so re-loading
+           identical data never grows constraint-less tables — the same
+           guarantee the Spark sink's anti-join gives — and the target
+           is never read into Python;
+        3. the remainder goes through ``INSERT OR IGNORE`` so REAL
            ``UNIQUE`` constraints arbitrate genuine conflicts (same key,
            different payload), exactly like the reference
            (sqlite_connector.py:10-25).
         """
         quoted = ", ".join(f'"{c}"' for c in columns)
         binds = ", ".join("?" for _ in columns)
-        existing = {
-            tuple(_norm_cell(v) for v in row)
-            for row in self.connection.execute(
-                f'SELECT DISTINCT {quoted} FROM "{table}"'
-            )
-        }
-        # bind-canonicalize AFTER filtering, and build the full list
-        # BEFORE executemany: a typed rejection (NaN) must fire with
-        # nothing partially written
-        rows = [
-            tuple(r[c] for c in columns)
-            for r in new_rows.select(*columns).collect()
-        ]
-        normed = self._norm_payload_rows(table, columns, rows)
+        # bind the whole payload BEFORE the first statement: a typed
+        # rejection (NaN) must fire with nothing written
         payload = [
             tuple(_bind_cell(v) for v in row)
-            for row, norm in zip(rows, normed, strict=True)
-            if norm not in existing
+            for row in new_rows.select(*columns).collect()
         ]
-        self.connection.executemany(
-            f'INSERT OR IGNORE INTO "{table}" ({quoted}) VALUES ({binds})',
-            payload,
-        )
-
-    def _norm_payload_rows(
-        self, table: str, columns: list[str], rows: list[tuple]
-    ) -> list[tuple]:
-        """Idempotency-filter norm of PAYLOAD rows, affinity-aware.
-
-        Round 12 (found by the type-lattice fuzz): a Decimal with more
-        than 15 significant digits bound as text into a NUMERIC-affinity
-        column is converted to REAL by SQLite — the docs' rule is
-        "lossless and reversible if the first 15 significant decimal
-        digits are preserved", so the conversion is *deliberately*
-        lossy beyond digit 15 — while the same text in a TEXT column
-        stays full-precision text.  A value-only norm can match at most
-        one of those, and mismatching means every re-load grows the
-        table.  Instead of replicating the engine's conversion rule
-        (version-dependent, subtle), ask the engine: probe what SQLite
-        physically stores for each distinct (declared type, decimal)
-        pair and norm the payload cell to THAT stored form.  One probe
-        per distinct pair per write — payloads on this sink are
-        driver-sized by design.
-        """
-        declared = self._declared_types(table)
-        cache: dict[tuple[str, str], object] = {}
-        out = []
-        for row in rows:
-            normed = []
-            for column, value in zip(columns, row, strict=True):
-                if isinstance(value, decimal.Decimal) and not value.is_nan():
-                    key = (
-                        declared.get(column) or "",
-                        canonical_number(value),
-                    )
-                    if key not in cache:
-                        cache[key] = _norm_cell(self._stored_form(*key))
-                    normed.append(cache[key])
-                else:
-                    normed.append(_norm_cell(value))
-            out.append(tuple(normed))
-        return out
-
-    def _stored_form(self, declared: str, text: str) -> object:
-        """What SQLite physically stores when *text* lands in a column
-        declared as *declared* — asked of the engine itself via a
-        throwaway temp-table round trip, so the norm tracks the exact
-        affinity-conversion semantics of the linked SQLite version."""
+        if not payload:
+            return
         con = self.connection
-        con.execute('DROP TABLE IF EXISTS temp."__al_probe"')
-        decl = f" {declared}" if declared else ""
-        con.execute(f'CREATE TEMP TABLE "__al_probe" (v{decl})')
+        landing = 'temp."__al_landing"'
+        # rolling back a block undoes the DROP below when the CREATE
+        # ran before the block's first write (outside its transaction)
+        con.execute(f"DROP TABLE IF EXISTS {landing}")
+        con.execute(
+            f'CREATE TEMP TABLE "__al_landing" AS '
+            f'SELECT {quoted} FROM "{table}" WHERE 0'
+        )
         try:
-            con.execute('INSERT INTO "__al_probe" (v) VALUES (?)', (text,))
-            (stored,) = con.execute('SELECT v FROM "__al_probe"').fetchone()
+            con.executemany(
+                f"INSERT INTO {landing} ({quoted}) VALUES ({binds})",
+                payload,
+            )
+            con.execute(
+                f'INSERT OR IGNORE INTO "{table}" ({quoted}) '
+                f"SELECT {quoted} FROM {landing} "
+                f'EXCEPT SELECT {quoted} FROM "{table}"'
+            )
         finally:
-            con.execute('DROP TABLE IF EXISTS temp."__al_probe"')
-        return stored
+            con.execute(f"DROP TABLE {landing}")
 
     def _execute_compare_query(self, query: str) -> DataFrame:
         cur = self.connection.execute(query)

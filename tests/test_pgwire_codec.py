@@ -141,6 +141,20 @@ def test_pg_literal_rejects_lone_surrogates(bad: str) -> None:
     assert "surrogate" in str(err.value)
 
 
+def test_copy_chunks_names_the_column() -> None:
+    """Both Postgres write paths encode through ``_copy_chunks``; its
+    rejection names the column and keeps the cell context."""
+    from sql_autoloader_spark.connectors.postgres import _copy_chunks
+
+    rows = [("ok", "fine"), ("ok", "x\udc00y")]
+    with pytest.raises(UnstorableTextError) as err:
+        list(_copy_chunks(rows, ["k", "note"]))
+    assert str(err.value).startswith('column "note": ')
+    assert err.value.cell_index == 1
+    assert err.value.value == "x\udc00y"
+    assert b"".join(_copy_chunks(rows[:1], ["k", "note"])) == b"ok\tfine\n"
+
+
 @settings(max_examples=200, deadline=None)
 @given(
     st.text(min_size=1),

@@ -452,7 +452,7 @@ def test_copy_path_load_matches_driver_path(
     spark: SparkSession, pg_database: tuple[EmbeddedPostgres, str]
 ) -> None:
     """The SAME star load executed through the distributed COPY path
-    must land the identical row set the driver INSERT path lands,
+    must land the identical row set the driver path lands,
     including null-key rows, and a second identical load must not grow
     anything (both idempotency layers run server-side)."""
     server, name = pg_database
@@ -996,7 +996,7 @@ def test_primary_key_that_is_a_foreign_key_loads(
 def test_copy_and_driver_paths_store_identical_timestamps(
     spark: SparkSession, pg_database: tuple[EmbeddedPostgres, str]
 ) -> None:
-    """Under a NON-UTC session timezone the driver INSERT path and the
+    """Under a NON-UTC session timezone the driver path and the
     distributed COPY path must store bit-identical values for both
     timestamptz and timestamp columns — otherwise re-loading the same
     data through the other path duplicates rows with shifted clocks."""
@@ -1031,7 +1031,7 @@ def test_copy_and_driver_paths_store_identical_timestamps(
                 )
                 db.schema = db.get_schema()
                 # _known_count routes the 'driver' leg through the
-                # multi-row INSERT path (payload_bound <= threshold);
+                # driver COPY path (payload_bound <= threshold);
                 # without it the bound is unknown and BOTH legs would
                 # take the COPY path, comparing COPY with itself
                 db.insert(
@@ -1200,7 +1200,7 @@ def test_tls_refused_by_plain_server() -> None:
 def test_driver_insert_path_never_reads_the_target(
     spark: SparkSession, pg_database: tuple[EmbeddedPostgres, str]
 ) -> None:
-    """The small-payload driver INSERT path must move only the payload
+    """The small-payload driver path must move only the payload
     over the lifecycle connection: its idempotency filter runs
     server-side (typed EXCEPT — the old pre-filter SELECT
     DISTINCTed the whole target through the driver first), and the
@@ -1273,10 +1273,56 @@ def test_value_equal_render_distinct_rows_filtered(
             db.close()
 
 
+def test_driver_path_sends_copy_text_not_values(
+    spark: SparkSession,
+    pg_database: tuple[EmbeddedPostgres, str],
+    monkeypatch: pytest.MonkeyPatch,
+) -> None:
+    """A payload under ``copy_threshold`` lands over the driver
+    connection as COPY text (the encoding the executors send), never
+    as rendered ``INSERT ... VALUES`` literals; re-loading it stays a
+    no-op."""
+    db = _connector(spark, pg_database)
+    sent: list[tuple[str, str]] = []
+
+    def recording(kind, orig):  # noqa: ANN001, ANN202
+        def call(sql, *args):  # noqa: ANN001, ANN202
+            sent.append((kind, sql))
+            return orig(sql, *args)
+
+        return call
+
+    for kind in ("execute", "query", "copy_in"):
+        monkeypatch.setattr(
+            db.client, kind, recording(kind, getattr(db.client, kind))
+        )
+    try:
+        db.execute_ddl("CREATE TABLE dv (k text, v numeric, at date)")
+        frame = spark.createDataFrame(
+            [
+                ("a", Decimal("1.50"), datetime.date(2020, 1, 2)),
+                ("b\tc", None, None),
+            ],
+            "k string, v decimal(10,2), at date",
+        )
+        db.insert(frame, table="dv", _known_count=2)
+        db.insert(frame, table="dv", _known_count=2)
+        (n,) = db.client.query("SELECT count(*) FROM dv").rows[0]
+        assert n == 2
+    finally:
+        db.close()
+    copies = [sql for kind, sql in sent if kind == "copy_in"]
+    assert len(copies) == 2
+    assert all('"__al_values"' in sql for sql in copies)
+    assert not [
+        sql for kind, sql in sent if kind != "copy_in" and "VALUES" in sql
+    ]
+
+
 def test_driver_insert_into_exotic_column_types(
     spark: SparkSession, pg_database: tuple[EmbeddedPostgres, str]
 ) -> None:
-    """The VALUES-path filter must cast through the target's declared
+    """The driver-path filter must cast through the target's declared
     types: bare string literals resolve to text, and EXCEPT (unlike
     INSERT) refuses to match text against uuid/enum/inet columns.
     Idempotency must hold for them too."""
@@ -1435,7 +1481,7 @@ def test_checksum_compare_degrades_when_executors_cannot_dial(
         sock_dir=server.sock_dir,
         port=server.port,
         database=name,
-        copy_threshold=10_000,  # writes stay on the driver VALUES path
+        copy_threshold=10_000,  # writes stay on the driver COPY path
     )
     try:
         db.execute_ddl(STAR_DDL)
@@ -1714,8 +1760,8 @@ def test_except_prefilter_auto_blocks_narrow_identity_gap(
     otherwise allow skipping it (ON CONFLICT evaluates identity
     defaults before arbitration, so a skipped re-insert burns one
     sequence value per row; hourly re-loads would exhaust 2^31 in
-    weeks).  Checked on BOTH physical write paths (driver VALUES and
-    distributed COPY)."""
+    weeks).  Checked on BOTH physical write paths (driver COPY and
+    distributed executor COPY)."""
     db = _connector(spark, pg_database)
     try:
         db.execute_ddl(
@@ -1737,7 +1783,7 @@ def test_except_prefilter_auto_blocks_narrow_identity_gap(
         ).rows[0][0]
         before = last()
         assert before == 40
-        with db:  # driver VALUES path (payload under copy_threshold)
+        with db:  # driver COPY path (payload under copy_threshold)
             db.load(flat)
         assert last() == before
         server, name = pg_database

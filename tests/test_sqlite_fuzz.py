@@ -7,18 +7,20 @@ fuzz; this closes that gap for the whole type lattice.  Hypothesis
 drives mixed-type payloads (int / float incl. inf and -0.0 / Decimal /
 text / bool / datetime / date / bytes / NULL, with deliberate
 duplicates) through the public ``insert`` surface (which composes the
-payload dedup, the idempotency pre-filter, the bind canonicalization,
-AND the post-insert subset verification) and checks three contracts:
+payload dedup, the bind canonicalization, the in-database idempotent
+write, AND the post-insert subset verification) and checks three
+contracts:
 
 1. double-write idempotency against an in-database oracle: the
    filtered table's count after writing the payload TWICE equals
    ``SELECT count(DISTINCT *)`` of the same payload inserted raw —
    SQLite's own value equality, so divergence in either direction
    (filter too lax → growth, too aggressive → data loss) fails;
-2. readback equality through ``_norm_cell``: the normed set of stored
-   rows equals the normed set of payload rows (the representation
-   round trip — bool→INTEGER, Decimal→canonical text/REAL,
-   datetime→TEXT — is lossless under the filter's equality);
+2. stored-form equality judged by the engine: the filtered table and
+   the raw oracle hold the same rows (``EXCEPT`` both ways is empty),
+   so the payload lands exactly as SQLite stores it (the
+   representation round trip — bool→INTEGER, Decimal→canonical
+   text/REAL, datetime→TEXT — takes the target's own affinity);
 3. NaN rejection: SQLite silently coerces NaN to NULL (a row the
    filter could never re-match — every reload would grow the table),
    so the sink must reject it typed BEFORE anything is written.
@@ -29,8 +31,9 @@ Found by this fuzz while writing it (fixed in the same round):
 ``canonical_number`` text; and NaN previously mapped to a ``"__nan__"``
 sentinel that could never match the NULL SQLite actually stores.
 Round 12 (also found here): >15-significant-digit Decimals in NUMERIC
-columns are stored as lossy REALs by SQLite's affinity rule — the norm
-now probes the engine's stored form (sqlite.py _norm_payload_rows).
+columns are stored as lossy REALs by SQLite's affinity rule — the sink
+now lands the payload in a temp table with the target's affinities and
+lets SQLite's ``EXCEPT`` decide which rows are already stored.
 
 ``SPARK_GRAFT_FUZZ_EXAMPLES`` scales the budget (default 25 for CI;
 a 250-example hunt ran clean after the round-12 fixes).
@@ -52,7 +55,6 @@ from sql_autoloader_spark.connectors.sqlite import (
     SQLiteConnector,
     UnstorableValueError,
     _bind_cell,
-    _norm_cell,
 )
 
 SPARK_SCHEMA = (
@@ -166,7 +168,7 @@ def test_double_write_matches_sqlite_distinct(
 
     frame = db.spark.createDataFrame(payload, SPARK_SCHEMA)
     # the sink collects Spark's representation of the payload, not the
-    # raw python tuples — norm/readback must be compared against THAT
+    # raw python tuples — the oracle must bind THAT
     spark_rows = [tuple(r[c] for c in COLS) for r in frame.collect()]
 
     db.insert(frame, table="filtered")
@@ -184,20 +186,15 @@ def test_double_write_matches_sqlite_distinct(
     (got,) = con.execute("SELECT count(*) FROM filtered").fetchone()
     assert got == expected, payload
 
-    # readback equality through _norm_cell: representation changes
-    # (bool→INTEGER, Decimal→canonical text/REAL, datetime→TEXT) are
-    # invisible under the filter's equality
-    stored = {
-        tuple(_norm_cell(v) for v in row)
-        for row in con.execute(
-            'SELECT i, d, n, s, b, ts, dt, "by" FROM filtered'
-        )
-    }
-    # payload side norms through the connector's affinity-aware norm
-    # (a >15-digit Decimal in a NUMERIC column is STORED as the lossy
-    # REAL — the norm must land on the stored form, round 12)
-    sent = set(db._norm_payload_rows("filtered", COLS, spark_rows))
-    assert stored == sent, payload
+    # stored-form equality judged by SQLite itself: representation
+    # changes (bool→INTEGER, Decimal→canonical text/REAL, datetime→TEXT,
+    # a >15-digit Decimal in a NUMERIC column stored as the lossy REAL)
+    # must land the same rows as the raw oracle, in both directions
+    for left, right in (("filtered", "raw"), ("raw", "filtered")):
+        extra = con.execute(
+            f"SELECT * FROM {left} EXCEPT SELECT * FROM {right}"
+        ).fetchall()
+        assert extra == [], (left, right, payload)
 
 
 def test_nan_rejected_before_any_write(fuzz_db) -> None:  # noqa: ANN001

@@ -294,11 +294,11 @@ def test_idempotent_reload_constraintless_datetime_table(spark) -> None:
 
 
 def test_idempotent_reload_constraintless_bool_table(spark) -> None:
-    """Payload bools normalize to the SAME canonical form as their
-    INTEGER readback (advice round 10): before the fix, _norm_cell(True)
-    was the int 1 while the readback normalized to the string '1', so a
-    bool column made the pre-filter never match and every re-load
-    duplicated constraint-less tables."""
+    """A bool column re-loads idempotently although SQLite stores bools
+    as INTEGER 0/1 (advice round 10: a driver-side pre-filter once
+    normalized the payload's True and the stored 1 to different forms,
+    so it never matched and every re-load duplicated constraint-less
+    tables)."""
     from sql_autoloader_spark.connectors.sqlite import SQLiteConnector
 
     db = SQLiteConnector(spark)
@@ -315,6 +315,58 @@ def test_idempotent_reload_constraintless_bool_table(spark) -> None:
         "SELECT count(*) FROM flags"
     ).fetchone()[0]
     assert count == 3
+
+
+def test_idempotent_reload_takes_target_affinity(spark) -> None:
+    """Numeric text converts to its column's affinity before the
+    already-stored check: SQLite stores '1.0' into a REAL column as
+    1.0, so a re-load of the same string frame must match the stored
+    rows and add none (a driver-side filter compared the payload text
+    '1.0' against the stored number's canonical form '1', never
+    matched, and every re-load doubled the table)."""
+    from sql_autoloader_spark.connectors.sqlite import SQLiteConnector
+
+    db = SQLiteConnector(spark)
+    db.execute_ddl("CREATE TABLE m (price REAL, qty INTEGER, note TEXT);")
+    data = spark.createDataFrame(
+        [("1.0", "7", "a"), ("2.0", "8", "b")],
+        "price string, qty string, note string",
+    )
+    with db:
+        db.insert(data, table="m")
+    with db:
+        db.insert(data, table="m")
+    rows = db.connection.execute(
+        "SELECT price, qty, note FROM m ORDER BY note"
+    ).fetchall()
+    assert rows == [(1.0, 7, "a"), (2.0, 8, "b")]
+
+
+def test_write_reads_no_stored_rows(spark) -> None:
+    """The idempotent write leaves the already-stored decision to
+    SQLite: no statement it issues returns target rows to Python."""
+    from sql_autoloader_spark.connectors.sqlite import SQLiteConnector
+
+    db = SQLiteConnector(spark)
+    db.execute_ddl("CREATE TABLE m (price REAL, qty INTEGER, note TEXT);")
+    data = spark.createDataFrame(
+        [(1.0, 7, "a"), (2.0, 8, "b")],
+        "price double, qty long, note string",
+    )
+    columns = ["price", "qty", "note"]
+    statements: list[str] = []
+    db.connection.set_trace_callback(statements.append)
+    try:
+        with db:
+            db._write_new_rows("m", data, columns)  # first load
+            db._write_new_rows("m", data, columns)  # re-load
+    finally:
+        db.connection.set_trace_callback(None)
+    assert statements
+    reads = [s for s in statements if s.lstrip().upper().startswith("SELECT")]
+    assert reads == []
+    (count,) = db.connection.execute("SELECT count(*) FROM m").fetchone()
+    assert count == 2
 
 
 def test_heterogeneous_column_falls_back_to_string(spark) -> None:
