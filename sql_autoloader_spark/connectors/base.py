@@ -19,10 +19,13 @@ from __future__ import annotations
 
 import logging
 from abc import ABC, abstractmethod
+from collections.abc import Callable
+from concurrent.futures import Future, ThreadPoolExecutor
 from typing import Self
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from sql_autoloader_spark.exceptions import (
     CompareMissingRowsError,
@@ -48,6 +51,92 @@ def _insert_failed(table: str, cause: Exception) -> InsertingDataFailedError:
         "database; to update existing rows, run an UPDATE yourself."
     )
     return InsertingDataFailedError(msg)
+
+
+def in_caller_context(spark: SparkSession, fn: Callable) -> Callable:
+    """*fn* wrapped to run on another thread with the calling thread's
+    local properties (job group, description, scheduler pool) and
+    session tags, captured now — so its jobs count, and are cancelled,
+    as the caller's."""
+    wrap = inheritable_thread_target(spark)
+    # without pinned threads PySpark hands the session back: Python
+    # threads then share JVM threads and there is nothing to carry
+    return fn if wrap is spark else wrap(fn)
+
+
+def _check_deferred(rec: dict) -> None:
+    """Run one deferred step's merge invariants (a ``defer_to`` record),
+    raising the error the eager path raises for that step."""
+    try:
+        ops.check_merge_invariants(
+            rec["frame"],
+            rec["alias"],
+            rec["table"],
+            rec["known_count"],
+            sample_frame=rec["joined"],
+        )
+    except MissingKeysAfterMergeError as e:
+        raise _insert_failed(rec["table"], e) from e
+
+
+class _BackgroundChecks:
+    """Deferred merge checks run on one worker thread, in step order,
+    beside the caller's next steps.
+
+    Each check is wrapped with the caller's local properties and session
+    tags at submit time, so its jobs land in the caller's job group.
+    :meth:`wait` raises the first failed check's error.  Leaving the
+    ``with`` block on an exception first awaits every check in step
+    order and raises the first failed check's error in place of that
+    exception (which becomes its ``__context__``), then joins the
+    worker — no thread outlives the block.
+    """
+
+    def __init__(self, spark: SparkSession) -> None:
+        self._spark = spark
+        self._pool: ThreadPoolExecutor | None = None
+        self._futures: list[Future] = []
+
+    def submit(self, rec: dict, *, release: DataFrame | None = None) -> None:
+        """Queue *rec*'s check; unpersist *release* once it finished —
+        the check reads the step's cache, whose lineage runs through
+        the superseded step's, so releasing that earlier would make the
+        check recompute the whole chain."""
+        if self._pool is None:
+            self._pool = ThreadPoolExecutor(
+                max_workers=1, thread_name_prefix="load-check"
+            )
+        future = self._pool.submit(
+            in_caller_context(self._spark, _check_deferred), rec
+        )
+        if release is not None:
+            future.add_done_callback(lambda _: release.unpersist())
+        self._futures.append(future)
+
+    def _first_failure(self) -> BaseException | None:
+        for future in self._futures:
+            if (err := future.exception()) is not None:
+                return err
+        return None
+
+    def wait(self) -> None:
+        if (err := self._first_failure()) is not None:
+            raise err
+
+    def __enter__(self) -> Self:
+        return self
+
+    def __exit__(
+        self, exc_type: object, exc: BaseException | None, tb: object
+    ) -> None:
+        try:
+            if exc is not None:
+                err = self._first_failure()
+                if err is not None and err is not exc:
+                    raise err
+        finally:
+            if self._pool is not None:
+                self._pool.shutdown(wait=True, cancel_futures=True)
 
 
 class BaseConnector(ABC):
@@ -309,10 +398,13 @@ class BaseConnector(ABC):
         fan-out changes the reconstruction's row count — so the happy
         path needs ZERO blocking jobs per table step, and the records
         are re-checked (in step order, preserving each error's
-        per-table identity) only when the compare mismatches.  Requires
-        ``known_count`` (it stays the running bound for later steps;
-        the bound is exact unless a step duplicated rows, which the
-        compare then reports).
+        per-table identity) only when the compare mismatches.  Without
+        that compare (and with duplication disallowed) ``load`` hands
+        each record to a background worker instead, which runs the
+        checks beside the later steps.  Requires ``known_count`` (it
+        stays the running bound for later steps; the bound is exact
+        unless a step duplicated rows, which the compare or the
+        deferred check then reports).
         """
         self.schema.check_schema_not_empty()
         data = ops.preprocess(data, columns, dedup=not deduped)
@@ -578,6 +670,24 @@ class BaseConnector(ABC):
         DataFrame swaps payload columns for foreign keys as it goes), then
         plain inserts, then validates against the original frame.
 
+        Each keyed step's merge invariants (no NULL id, no fan-out) are
+        checked in one of three ways, named by the INFO decision record
+        this call emits (``extra``: ``op="load"``, ``decision``,
+        ``n_steps``):
+
+        - ``deferred`` — the generated exact compare runs: its checksum
+          subsumes every check, which re-runs only on a mismatch;
+        - ``eager`` — ``allow_duplication=True``: each check blocks, as
+          its count may grow and bounds the later steps;
+        - ``background`` — otherwise: each check runs on one worker
+          thread, in step order, beside the next step, and ``load``
+          awaits the verdicts at its end (after the compare).  The first
+          failed check's error wins over any later error of the load.
+          A later step's write may therefore be issued before an
+          earlier step's check fails: inside ``with db:`` the rollback
+          discards it, but a failed load outside a transaction may also
+          leave rows of the steps after the failing one.
+
         Returns the DataFrame with foreign keys materialized.
         """
         self.schema.check_schema_not_empty()
@@ -599,10 +709,10 @@ class BaseConnector(ABC):
         # materialization (the dedup shuffle runs exactly once either
         # way, so the count is near-free), and the exact bound it yields
         # keeps small dimension payloads on the cheap single-partition
-        # surrogate window.  Every subsequent step's count comes back
-        # from its own invariant aggregate, which also materializes that
-        # step's cache — each merge step costs exactly one job beyond
-        # its write.  (Standalone merge_ids/retrieve_ids callers without
+        # surrogate window.  It threads through every step as the bound:
+        # a passing merge check returns it unchanged (an eager
+        # ``allow_duplication`` check returns the grown count).
+        # (Standalone merge_ids/retrieve_ids callers without
         # a known count fuse the input count into the invariant
         # aggregate instead — see ops.check_merge_invariants.  Fusing
         # the first step's count the same way was MEASURED slower here:
@@ -621,7 +731,9 @@ class BaseConnector(ABC):
         # checksum mismatches.  Excluded when duplication is allowed
         # (fan-out makes the checksum mismatch by design) and for custom
         # or filtered compares (their result set is not the full
-        # reconstruction).
+        # reconstruction).  Without the fast compare but with duplication
+        # disallowed, no later work reads a check's result — only its
+        # verdict — so the checks run in the background instead.
         fast_compare = (
             compare
             and exact
@@ -629,83 +741,95 @@ class BaseConnector(ABC):
             and where is None
             and not allow_duplication
         )
+        if allow_duplication:
+            decision = "eager"
+        elif fast_compare:
+            decision = "deferred"
+        else:
+            decision = "background"
+        n_steps = len(plan.insert_and_retrieve)
+        logger.info(
+            "load merge checks=%s n_steps=%d",
+            decision,
+            n_steps,
+            extra={"op": "load", "decision": decision, "n_steps": n_steps},
+        )
         deferred: list[dict] = []
-        running: int | None = None
-        for params in plan.insert_and_retrieve:
-            if running is None:
-                running = data.count()
-            previous = data
-            data, running = self._insert_and_retrieve_counted(
-                data,
-                **params,
-                replace=replace,
-                allow_duplication=allow_duplication,
-                deduped=True,
-                known_count=running,
-                cache_result=True,
-                defer_to=deferred if fast_compare else None,
-            )
-            # the next step's first job materializes the new cache;
-            # release the superseded one (keep the original pinned for
-            # the final compare) — a deep schema must not pin every
-            # intermediate
-            if previous is not orig_data:
-                previous.unpersist()
-
-        # The generated compare reconstructs the flat frame through every
-        # inserted table, so it subsumes each plain insert's subset check:
-        # a row a write dropped (uniqueness conflict, cast mangling) goes
-        # missing from the reconstruction and the compare aggregate reports
-        # it.  Delegating saves one full-table scan per fact/linking table
-        # per load — only valid for the *generated* unfiltered query.
-        compare_covers = compare and compare_query is None and where is None
-        for params in plan.insert:
-            self.insert(
-                data,
-                **params,
-                _deduped=True,
-                _check_covered_by_compare=compare_covers,
-                _known_count=running,
-            )
-
-        if compare:
-            delegated = bool(compare_covers and plan.insert)
-
-            def _run_deferred_checks() -> None:
-                # checksum mismatch: re-verify each deferred step's merge
-                # invariants so a failure keeps its precise per-table
-                # identity (the same errors the eager path raises)
-                for rec in deferred:
-                    try:
-                        ops.check_merge_invariants(
-                            rec["frame"],
-                            rec["alias"],
-                            rec["table"],
-                            rec["known_count"],
-                            allow_duplication=allow_duplication,
-                            sample_frame=rec["joined"],
-                        )
-                    except MissingKeysAfterMergeError as e:
-                        raise _insert_failed(rec["table"], e) from e
-
-            try:
-                self.compare(
-                    orig_data,
-                    query=compare_query,
-                    where=where,
-                    exact=exact,
-                    _deduped=True,
-                    _missing_first=delegated,
-                    _fast=fast_compare,
-                    _on_mismatch=_run_deferred_checks if deferred else None,
+        with _BackgroundChecks(self.spark) as checks:
+            running: int | None = None
+            for params in plan.insert_and_retrieve:
+                if running is None:
+                    running = data.count()
+                previous = data
+                data, running = self._insert_and_retrieve_counted(
+                    data,
+                    **params,
+                    replace=replace,
+                    allow_duplication=allow_duplication,
+                    deduped=True,
+                    known_count=running,
+                    cache_result=True,
+                    defer_to=None if allow_duplication else deferred,
                 )
-            except CompareMissingRowsError as e:
-                if delegated:
-                    # rows missing from the reconstruction of a load that
-                    # just inserted them = rows that never landed
-                    tables = ", ".join(p["table"] for p in plan.insert)
-                    raise _insert_failed(tables, e) from e
-                raise
+                # release the superseded cache once the new one is
+                # materialized (keep the original pinned for the final
+                # compare) — a deep schema must not pin every
+                # intermediate.  An eager check has materialized it; a
+                # background one materializes it when it finishes.
+                release = previous if previous is not orig_data else None
+                if decision == "background":
+                    checks.submit(deferred.pop(), release=release)
+                elif release is not None:
+                    release.unpersist()
+
+            # The generated compare reconstructs the flat frame through
+            # every inserted table, so it subsumes each plain insert's
+            # subset check: a row a write dropped (uniqueness conflict,
+            # cast mangling) goes missing from the reconstruction and the
+            # compare aggregate reports it.  Delegating saves one
+            # full-table scan per fact/linking table per load — only
+            # valid for the *generated* unfiltered query.
+            compare_covers = compare and compare_query is None and where is None
+            for params in plan.insert:
+                self.insert(
+                    data,
+                    **params,
+                    _deduped=True,
+                    _check_covered_by_compare=compare_covers,
+                    _known_count=running,
+                )
+
+            if compare:
+                delegated = bool(compare_covers and plan.insert)
+
+                def _run_deferred_checks() -> None:
+                    # checksum mismatch: re-verify each deferred step's
+                    # merge invariants so a failure keeps its precise
+                    # per-table identity (the same errors the eager path
+                    # raises)
+                    for rec in deferred:
+                        _check_deferred(rec)
+
+                try:
+                    self.compare(
+                        orig_data,
+                        query=compare_query,
+                        where=where,
+                        exact=exact,
+                        _deduped=True,
+                        _missing_first=delegated,
+                        _fast=fast_compare,
+                        _on_mismatch=_run_deferred_checks if deferred else None,
+                    )
+                except CompareMissingRowsError as e:
+                    if delegated:
+                        # rows missing from the reconstruction of a load
+                        # that just inserted them = rows that never landed
+                        tables = ", ".join(p["table"] for p in plan.insert)
+                        raise _insert_failed(tables, e) from e
+                    raise
+            # awaited last, so the compare overlaps the last checks
+            checks.wait()
 
         result = ops.postprocess(data, columns)
         if orig_data is not data and orig_data is not self._kept_cache:

@@ -53,6 +53,7 @@ import json
 import threading
 import uuid
 from collections.abc import Callable, Iterable
+from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 from typing import TYPE_CHECKING, Literal
 
@@ -60,7 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from sql_autoloader_spark.connectors.base import BaseConnector
+from sql_autoloader_spark.connectors.base import BaseConnector, in_caller_context
 from sql_autoloader_spark.connectors.ddl import (
     AlterAddColumn,
     DropTable,
@@ -804,12 +805,18 @@ class SparkConnector(BaseConnector):
 
         Rows land tagged with a writer-unique random token — appends
         from concurrent committers never collide, and no read sees an
-        unpublished token.  The durable flip is ONE atomic journal-file
-        rename (:meth:`_CommitJournal.commit`): of two simultaneous
-        committers, each lands under its own commit id — the loser of a
-        commit-id race just retries the rename with the next id, its
-        appended data untouched.  A failure before the flip sweeps only
-        THIS writer's token, leaving concurrent in-flight commits alone.
+        unpublished token.  The pending tables append concurrently, one
+        worker thread per table (at most ``defaultParallelism``); each
+        worker carries the caller's local properties (job group,
+        description, scheduler pool) and session tags.  The durable flip
+        is ONE atomic journal-file rename (:meth:`_CommitJournal.commit`)
+        after every append has landed: of two simultaneous committers,
+        each lands under its own commit id — the loser of a commit-id
+        race just retries the rename with the next id, its appended data
+        untouched.  A failure before the flip waits for every in-flight
+        append, sweeps only THIS writer's token (from every pending
+        table), and raises the first failure in table order, leaving
+        concurrent in-flight commits alone.
         """
         import random
 
@@ -819,41 +826,51 @@ class SparkConnector(BaseConnector):
         # the surgical own-files sweep, never the full-table overwrite
         # (which could clobber a concurrent writer's in-flight files)
         self._token_files.setdefault(token, [])
-        done: list[str] = []
-        manifest_tables: dict[str, dict] = {}
+        # resolve every location before a worker starts: the appends
+        # then only read the location cache
+        roots = {t: self._table_location(t).rstrip("/") for t in pending}
+        workers = min(len(pending), self.spark.sparkContext.defaultParallelism)
         try:
-            for table, appends in pending.items():
-                new_rows = appends[0]
-                for extra in appends[1:]:
-                    new_rows = new_rows.unionByName(extra)
-                start = len(self._token_files.get(token, []))
-                self._append_epoch(table, new_rows, token)
-                if manifest_tables is not None:
-                    root = self._table_location(table).rstrip("/")
-                    rels = [
-                        f[len(root) :].lstrip("/") if f.startswith(root) else None
-                        for f in self._token_files[token][start:]
-                    ]
-                    if None in rels:
-                        # a destination outside the table root (path
-                        # normalization surprise): skip the manifest
-                        # outright — the footer-walk fallback is always
-                        # correct, a wrong manifest never is
-                        manifest_tables = None
-                    else:
-                        manifest_tables[table] = {
-                            "location": root,
-                            "files": rels,
-                        }
-                done.append(table)
+            with ThreadPoolExecutor(
+                max_workers=workers, thread_name_prefix="commit-append"
+            ) as pool:
+                appends = [
+                    pool.submit(
+                        in_caller_context(self.spark, self._append_epoch),
+                        table,
+                        reduce(DataFrame.unionByName, frames),
+                        token,
+                    )
+                    for table, frames in pending.items()
+                ]
+            # leaving the pool joined every append
+            for append in appends:
+                if (err := append.exception()) is not None:
+                    raise err
         except BaseException:
             # best-effort immediate sweep of OWN files (surgical — the
-            # recorded rename destinations, plus the mid-move table's
-            # partial set); open-time recovery covers a crash that
-            # prevents even this
-            failing = [t for t in pending if t not in done]
-            self._sweep_token([*done, *failing[:1]], token)
+            # recorded rename destinations, plus every pending table's
+            # staging leftovers: several may have been mid-move);
+            # open-time recovery covers a crash that prevents even this
+            self._sweep_token(list(pending), token)
             raise
+        # concurrent moves interleave in the token's file record, so
+        # each table's entry is the files under its own root; a file
+        # outside every root (path normalization surprise) skips the
+        # manifest outright — the footer-walk fallback is always
+        # correct, a wrong manifest never is
+        moved = self._token_files[token]
+        manifest_tables: dict[str, dict] | None = {
+            table: {
+                "location": root,
+                "files": [
+                    f[len(root) + 1 :] for f in moved if f.startswith(root + "/")
+                ],
+            }
+            for table, root in roots.items()
+        }
+        if sum(len(e["files"]) for e in manifest_tables.values()) != len(moved):
+            manifest_tables = None
         # record the commit's FILE MANIFEST beside the journal before
         # the claim (the cid is unknown until the claim lands; readers
         # join token -> cid through the commit file).  This is what

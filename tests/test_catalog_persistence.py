@@ -2315,3 +2315,182 @@ def test_mixed_case_table_on_copied_database(spark: SparkSession) -> None:
         "b",
         "c",
     ]
+
+
+#: a five-table snowflake chain: one commit appends all five tables
+SNOWFLAKE_DDL = """
+CREATE TABLE {p}_region (id INTEGER PRIMARY KEY, region TEXT UNIQUE NOT NULL);
+CREATE TABLE {p}_nation (
+    id INTEGER PRIMARY KEY,
+    nation TEXT UNIQUE NOT NULL,
+    region_id INTEGER REFERENCES {p}_region (id)
+);
+CREATE TABLE {p}_customer (
+    id INTEGER PRIMARY KEY,
+    customer TEXT UNIQUE NOT NULL,
+    nation_id INTEGER REFERENCES {p}_nation (id)
+);
+CREATE TABLE {p}_orders (
+    id INTEGER PRIMARY KEY,
+    orderkey TEXT UNIQUE NOT NULL,
+    customer_id INTEGER REFERENCES {p}_customer (id)
+);
+CREATE TABLE {p}_line (
+    id INTEGER PRIMARY KEY,
+    line TEXT UNIQUE NOT NULL,
+    orders_id INTEGER REFERENCES {p}_orders (id)
+);
+"""
+SNOWFLAKE_TABLES = ("region", "nation", "customer", "orders", "line")
+SNOWFLAKE_COLS = (
+    "region string, nation string, customer string, orderkey string, line string"
+)
+
+
+def _snowflake_rows(batch: int) -> list[tuple]:
+    """Six lines of one batch; every key maps to one parent across
+    batches (customer ``i // 2`` → nation ``% 3`` → region ``% 2``)."""
+    return [
+        (
+            f"r{i // 2 % 3 % 2}",
+            f"n{i // 2 % 3}",
+            f"c{batch}{i // 2}",
+            f"o{batch}{i}",
+            f"l{batch}{i}",
+        )
+        for i in range(6)
+    ]
+
+
+def _local(path: str) -> str:
+    for prefix in ("file://", "file:"):
+        path = path.removeprefix(prefix)
+    return path
+
+
+def _walk(root: str, *, data_only: bool) -> set[str]:
+    """Every file under *root*, relative to it; ``data_only`` keeps the
+    files a Spark scan reads (no ``_``/``.``-prefixed path part)."""
+    import os
+
+    found = set()
+    for here, _dirs, files in os.walk(root):
+        for name in files:
+            rel = os.path.relpath(os.path.join(here, name), root)
+            if data_only and any(p.startswith(("_", ".")) for p in rel.split(os.sep)):
+                continue
+            found.add(rel)
+    return found
+
+
+def test_concurrent_commit_manifests_list_exactly_the_walked_files(
+    spark: SparkSession,
+) -> None:
+    """The five tables of a commit append concurrently, interleaving
+    their moves in one token record; each table's manifest entry still
+    lists exactly the files the directory walk finds, and the changes
+    feed served from the manifests equals the fallback walk."""
+    import json
+    import os
+    import sys
+
+    db = SparkConnector(spark, database="ccmanifest")
+    db.execute_ddl(SNOWFLAKE_DDL.format(p="ccm"))
+    tables = [f"ccm_{t}" for t in SNOWFLAKE_TABLES]
+    roots = {t: _local(db._table_location(t)) for t in tables}
+    # the files the DDL wrote (no commit's)
+    created = {t: _walk(root, data_only=True) for t, root in roots.items()}
+    # a short switch interval interleaves the workers' file records
+    # finely: a lost or misfiled move shows in the equalities below
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for batch in (1, 2):
+            with db:
+                db.load(
+                    spark.createDataFrame(_snowflake_rows(batch), SNOWFLAKE_COLS),
+                    exact=False,
+                )
+    finally:
+        sys.setswitchinterval(interval)
+
+    jdir = _local(db._journal._dir)
+    names = sorted(n for n in os.listdir(jdir) if n.endswith(".manifest"))
+    assert len(names) == 2
+    listed: dict[str, list[str]] = {t: [] for t in tables}
+    for name in names:
+        with open(os.path.join(jdir, name)) as fh:
+            entries = json.load(fh)["tables"]
+        assert sorted(entries) == sorted(tables)
+        for table, entry in entries.items():
+            assert entry["location"] == db._table_location(table).rstrip("/")
+            listed[table] += entry["files"]
+    for table, root in roots.items():
+        walked = _walk(root, data_only=True) - created[table]
+        assert len(listed[table]) == len(set(listed[table]))
+        assert set(listed[table]) == walked, table
+
+    def feeds() -> dict[str, list[tuple]]:
+        return {
+            t: sorted(tuple(r) for r in db.table_changes(t, 0).collect())
+            for t in tables
+        }
+
+    served = feeds()
+    assert all(served.values())
+    for name in names:
+        os.unlink(os.path.join(jdir, name))
+    assert feeds() == served
+
+
+def test_failing_first_started_append_leaves_no_trace(
+    spark: SparkSession, monkeypatch: "pytest.MonkeyPatch"
+) -> None:
+    """The first-started append fails only after every other append
+    has landed its files: the commit still leaves no visible row, and
+    no file of its token stays on disk."""
+    import threading
+
+    import pytest
+
+    db = SparkConnector(spark, database="ccfail")
+    db.execute_ddl(SNOWFLAKE_DDL.format(p="ccf"))
+    tables = [f"ccf_{t}" for t in SNOWFLAKE_TABLES]
+    roots = {t: _local(db._table_location(t)) for t in tables}
+    on_disk = {t: _walk(root, data_only=False) for t, root in roots.items()}
+
+    lock = threading.Lock()
+    started: list[str] = []
+    landed: list[str] = []
+    tokens: set[int] = set()
+    others_landed = threading.Event()
+    real = SparkConnector._append_epoch
+
+    def first_started_fails(self, table, new_rows, token):  # noqa: ANN001, ANN202
+        with lock:
+            started.append(table)
+            tokens.add(token)
+            first = len(started) == 1
+        if first:
+            others_landed.wait(300)
+            msg = "simulated failure of the first-started append"
+            raise RuntimeError(msg)
+        real(self, table, new_rows, token)
+        with lock:
+            landed.append(table)
+            if len(landed) == len(tables) - 1:
+                others_landed.set()
+
+    monkeypatch.setattr(SparkConnector, "_append_epoch", first_started_fails)
+    with pytest.raises(RuntimeError, match="first-started append"), db:
+        db.load(spark.createDataFrame(_snowflake_rows(1), SNOWFLAKE_COLS))
+    monkeypatch.undo()
+
+    assert sorted(landed) == sorted(set(tables) - {started[0]})
+    (token,) = tokens
+    assert token not in db._token_files
+    for table, root in roots.items():
+        assert _walk(root, data_only=False) == on_disk[table], table
+    for conn in (db, SparkConnector(spark, database="ccfail")):
+        for table in tables:
+            assert conn._read_table(table).count() == 0, table

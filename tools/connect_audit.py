@@ -119,6 +119,10 @@ CLASSIFICATION: dict[tuple[str, str], tuple[str, str]] = {
         "classic-only",
         "managed-catalog table-metadata JSON sidecar read (warehouse open)",
     ),
+    ("connectors/spark_catalog.py", "SparkConnector._commit_managed"): (
+        "classic-only",
+        "managed-catalog commit caps its append workers at defaultParallelism",
+    ),
     ("connectors/spark_catalog.py", "SparkConnector.compact_table"): (
         "classic-only",
         "maintenance rewrite sizes output by physical partition count",
