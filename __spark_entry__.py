@@ -3136,15 +3136,14 @@ def q_load_events_postgres_copy(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """E5 at fact scale against LIVE PostgreSQL through the distributed
-    COPY path (connectors/postgres.py:_copy_write): the whole events
-    projection auto-loaded into an event-type dim + fact star where the
-    fact payload exceeds ``copy_threshold``, so executors COPY
-    partitions concurrently into an unlogged staging table and ONE
+    COPY landing (connectors/postgres.py:_write_new_rows): the whole
+    events projection auto-loaded into an event-type dim + fact star
+    where the fact payload exceeds ``copy_threshold``, so executors
+    COPY partitions concurrently into an unlogged staging table and ONE
     server-side null-safe anti-join + ``ON CONFLICT DO NOTHING``
     statement merges it — no fact row ever crosses the driver on the
-    write side.  The dim stays on the driver path (COPY over the
-    driver connection), exercising both physical strategies in one
-    load.  Returns
+    write side.  The dim lands over the driver connection, exercising
+    both landings in one load.  Returns
     the PostgreSQL-executed compare-query reconstruction (= the
     distinct input projection)."""
     from sql_autoloader_spark.connectors.pgwire import EmbeddedPostgres

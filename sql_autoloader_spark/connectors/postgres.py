@@ -30,20 +30,17 @@ Postgres path promises runs for real:
 Positioning at scale: the driver's single connection never carries
 table-sized traffic in either direction.
 
-- **Writes**: small known payloads (dimension tables) are COPYed over
-  the driver connection into a typed session-temp table, in the same
-  COPY text the executors send — and BOTH idempotency layers run
-  SERVER-side in the merge statement (a hashable typed ``EXCEPT`` set
-  difference + ``ON CONFLICT DO NOTHING``), so the target is never
-  read back through the driver.  Anything larger — or of unknown size, the
-  scale-safe default — goes through the distributed COPY path:
-  executors ``COPY`` DataFrame partitions concurrently into an
-  unlogged staging table (PostgreSQL's fastest ingest primitive, N
-  parallel streams), and the same one-statement ``EXCEPT`` +
-  ``ON CONFLICT`` merge folds staging into the target.  When a
-  covering UNIQUE/PK constraint guarantees duplicates conflict, the
-  ``EXCEPT`` pre-filter (an O(target) scan per load) is skipped
-  entirely — ``ON CONFLICT`` alone keeps re-loads idempotent.
+- **Writes**: one path, land → merge → drop.  The payload lands as
+  COPY text in a table typed like the target: small known payloads
+  (dimension tables) over the driver connection into a session-temp
+  table; anything larger — or of unknown size, the scale-safe
+  default — through executors that ``COPY`` DataFrame partitions
+  concurrently into an unlogged staging table (N parallel streams).
+  One ``INSERT … ON CONFLICT DO NOTHING`` then merges the landing
+  into the target, with BOTH idempotency layers server-side (see
+  :meth:`PostgresConnector._merge_source`), so the target is never
+  read back through the driver; a ``DROP`` of the landing ends the
+  write.
 - **Validation**: the generated compare's happy path is an in-database
   checksum aggregate — eleven numbers cross the wire.
 - **Reads**: tables above ``read_copy_bytes`` stream out of the server
@@ -69,6 +66,7 @@ from pyspark.sql.types import (
     DateType,
     DecimalType,
     DoubleType,
+    FloatType,
     LongType,
     StringType,
     StructField,
@@ -112,8 +110,8 @@ _MAX_SNAPSHOT_HOLDERS = 8
 
 #: naive timestamp text is interpreted in the connection's TimeZone;
 #: every timestamp this connector sends is rendered JVM-side as its UTC
-#: wall clock (``_render_timestamps``, in the COPY text of both write
-#: paths), so pin the interpretation to match on EVERY connection the
+#: wall clock (``_render_timestamps``, in the COPY text of both
+#: landings), so pin the interpretation to match on EVERY connection the
 #: connector opens.  DateStyle is pinned too: the wire and COPY
 #: decoders parse ISO output only, and a server configured with e.g.
 #: 'German, DMY' would otherwise break every datetime read.
@@ -129,6 +127,10 @@ _TZ_SETUP = "SET TIME ZONE 'UTC'; SET datestyle = ISO"
 #: carry the fact-scale COPY streams, whose legitimate runtime is
 #: unbounded at 100 TB — only lock WAITS are capped.
 _AUX_SESSION_SETUP = f"{_TZ_SETUP}; SET lock_timeout = '30s'"
+
+#: int2, int4 and int8 type OIDs: targets whose input function rejects
+#: a fractional rendering of a whole value (``_render_whole_numbers``)
+_INTEGER_OIDS = frozenset({20, 21, 23})
 
 
 def _dial(conn: dict) -> PGWireClient:
@@ -245,7 +247,7 @@ def _close_quietly(client: PGWireClient) -> None:
 def _copy_chunks(rows, columns: list[str]):  # noqa: ANN001, ANN201
     """COPY text-format lines of *rows* (:func:`copy_text_row`),
     buffered into CopyData-sized chunks — the one payload encoding of
-    both write paths.  An :class:`UnstorableTextError` is re-raised
+    both landings.  An :class:`UnstorableTextError` is re-raised
     naming the column, so the rejection is actionable."""
     buffer = bytearray()
     try:
@@ -335,13 +337,12 @@ class PostgresConnector(BaseConnector):
         to verify-full).  The connector owns whichever
         connection it uses (``close()``).
     copy_threshold:
-        Payload row-count bound at or below which inserts COPY the
+        Payload row-count bound at or below which inserts land the
         collected payload over the driver connection.  Above it — or
-        whenever the payload size is unknown — the write goes through the
-        distributed COPY path (executors COPY partitions concurrently
-        into an unlogged staging table; one server-side null-safe
-        anti-join + ``ON CONFLICT DO NOTHING`` merges it), provided
-        connect parameters were given so executors can dial in.
+        whenever the payload size is unknown — executors COPY
+        partitions concurrently into an unlogged staging table,
+        provided connect parameters were given so they can dial in.
+        Either landing is merged by the same statement.
     copy_connections:
         Cap on concurrent executor COPY connections (partitions are
         coalesced down to this before the write; distributed reads
@@ -358,7 +359,7 @@ class PostgresConnector(BaseConnector):
     _quote = '"'
 
     #: this sink's canonical wall clock is UTC: every connection is
-    #: pinned ``SET TIME ZONE 'UTC'`` and both write paths store a
+    #: pinned ``SET TIME ZONE 'UTC'`` and both landings store a
     #: TimestampType's UTC wall clock into zone-less columns, so the
     #: lifecycle's read-back alignment reads those wall clocks in UTC
     #: whatever the session timezone
@@ -386,18 +387,8 @@ class PostgresConnector(BaseConnector):
         copy_connections: int = 16,
         read_copy_bytes: int = 8 << 20,
         snapshot_exports: int = _MAX_SNAPSHOT_HOLDERS,
-        except_prefilter: str = "auto",
     ) -> None:
         self.spark = spark
-        # pure-parameter validation BEFORE any I/O: raising after the
-        # wire connect would leak a live server connection per bad
-        # construction attempt (round-12 review)
-        if except_prefilter not in ("auto", "always"):
-            msg = (
-                f"except_prefilter={except_prefilter!r}: expected "
-                "'auto' or 'always'"
-            )
-            raise ValueError(msg)
         # executor connect parameters; without them (bare client=) the
         # distributed COPY path is unavailable and all writes stay on
         # the driver connection
@@ -438,17 +429,6 @@ class PostgresConnector(BaseConnector):
         #: connections.  Size it to the number of big-table frames the
         #: application keeps live simultaneously.
         self.snapshot_exports = snapshot_exports
-        #: EXCEPT pre-filter policy — identity-gap mitigation (round 12;
-        #: validated pre-I/O at the top of __init__).
-        #: ``"auto"``: keep the EXCEPT layer whenever the target has a
-        #: NARROW (int2/int4) identity/serial column even when a
-        #: covering constraint would allow skipping it — ON CONFLICT
-        #: consumes sequence values for skipped rows, and a narrow
-        #: sequence can exhaust in weeks under hourly re-loads of a
-        #: large static payload (OPERATIONS.md).  ``"always"``: never
-        #: skip — zero gap growth on any re-load, at the cost of the
-        #: O(target) EXCEPT scan the skip exists to save.
-        self.except_prefilter = except_prefilter
         self._staging: set[str] = set()
         self._in_transaction = False
         #: open snapshot-export connections backing distributed reads
@@ -523,7 +503,7 @@ class PostgresConnector(BaseConnector):
         When true, re-inserting an exactly-present row is guaranteed to
         hit ``ON CONFLICT DO NOTHING``, so the ``EXCEPT SELECT … FROM
         target`` pre-filter — an O(target) scan per load — is provably
-        redundant and the write paths skip it.  Deferrable constraints
+        redundant and the merge skips it.  Deferrable constraints
         are excluded because ON CONFLICT cannot use them as arbiters;
         partial unique INDEXES are not constraints and are (soundly)
         never considered.
@@ -780,122 +760,127 @@ class PostgresConnector(BaseConnector):
         *,
         payload_bound: int | None = None,
     ) -> None:
-        """Idempotent insert, two layers deep (mirrors the SQLite sink):
+        """Idempotent insert (mirrors the SQLite sink): land → merge →
+        drop.
 
-        1. rows already present — all inserted columns equal, NULLs
-           equal — are filtered out, so re-loading identical data never
-           grows constraint-less tables;
-        2. the remainder goes through ``INSERT ... ON CONFLICT DO
-           NOTHING`` so REAL constraints arbitrate genuine conflicts
-           (same key, different payload), exactly like the reference
-           (postgres_connector.py:13-28).
+        The payload lands as COPY text in a table typed like the target
+        (CTAS ``WITH NO DATA`` clones exact typmods), so each value
+        enters through its column type's input function — a value too
+        long for varchar(n) errors where a ``::cast`` would truncate.
+        At or below ``copy_threshold`` known rows, or without connect
+        parameters, it is collected and COPYed over the driver
+        connection into the session-temp ``pg_temp."__al_values"``;
+        otherwise executors COPY partitions into an unlogged staging
+        table (:meth:`_stage_frame`) and nothing reaches the driver.
 
-        Physical strategy by payload size: at or below
-        ``copy_threshold`` known rows, the driver path — the PAYLOAD is
-        collected and COPYed over the driver connection as the same
-        COPY text the executors send (the reference's executemany,
-        postgres_connector.py, in one COPY), but BOTH
-        idempotency layers run server-side in the same statement
-        (a hashable ``EXCEPT`` set difference + ``ON
-        CONFLICT``), so the TARGET table is never read: a 100-row
-        incremental load into a billion-row dimension moves 100 rows,
-        not the dimension.  Server-side comparison is also exact typed
-        equality — no driver-side value normalization can diverge from
-        the database's own semantics.  Above the threshold — or when
-        the size is unknown, the scale-safe default — the distributed
-        COPY path: nothing is ever collected to the driver either.
+        One ``INSERT … ON CONFLICT DO NOTHING`` over
+        :meth:`_merge_source` then runs both idempotency layers
+        server-side — present rows are filtered out, and REAL
+        constraints arbitrate genuine conflicts exactly like the
+        reference (postgres_connector.py:13-28) — so the target is never
+        read back.  The merge and the landing's DROP run on the driver
+        connection and commit or roll back with the ``with`` block;
+        rolled-back staging is swept on ``__exit__``/``close``.  Each
+        merge emits one INFO record naming its landing and source.
         """
+        quoted = ", ".join(f'"{c}"' for c in columns)
         small = (
             payload_bound is not None
             and payload_bound <= self.copy_threshold
         )
         if self._connect is not None and not small:
-            self._copy_write(table, new_rows, columns)
-            return
-        quoted = ", ".join(f'"{c}"' for c in columns)
-        # timestamps cross as the same rendered text the COPY path sends
-        rendered = self._render_timestamps(new_rows.select(*columns))
-        # render the whole payload BEFORE the first statement: a
-        # rejected value (lone surrogate) sends nothing
-        chunks = list(_copy_chunks(rendered.collect(), columns))
-        if not chunks:
-            return
-        # The payload lands first in a SESSION-TEMP table typed like the
-        # target (CTAS WITH NO DATA clones exact typmods), so each value
-        # enters through its column type's input function, exactly as
-        # on the COPY path — a value too long for varchar(n) errors
-        # where an explicit ::cast would silently truncate, and text for
-        # uuid/enum/inet columns resolves to the landing types with no
-        # catalog machinery.  The null-safe already-present filter is
-        # then a type-exact ``EXCEPT``: exact SQL VALUE equality
-        # (numeric 1.5 ≡ 1.50, float -0 ≡ 0, NULLs not distinct —
-        # semantics a rendered-text or driver-side normalization can
-        # only approximate) that PostgreSQL executes as a linear
-        # HashSetOp.  A hand-rolled ``NOT EXISTS`` with ``IS NOT
-        # DISTINCT FROM`` has the same semantics but CANNOT hash — it
-        # plans as a Nested Loop Anti Join, O(payload × table),
-        # measured 239 s where this shape takes ~4 s.  The temp table
-        # is per-connection (each connector owns its driver
-        # connection), joins the surrounding transaction's fate, and is
-        # dropped eagerly on the happy path.
-        tmp = 'pg_temp."__al_values"'
-        self.client.execute(f"DROP TABLE IF EXISTS {tmp}")
-        self.client.execute(
-            f'CREATE TEMP TABLE "__al_values" AS '
-            f'SELECT {quoted} FROM "{table}" WITH NO DATA'
-        )
-        self.client.copy_in(f"COPY {tmp} ({quoted}) FROM STDIN", chunks)
+            landing, stage = self._stage_frame(
+                new_rows,
+                columns,
+                like_sql=f'SELECT {quoted} FROM "{table}"',
+                prefix=f"stage_{table}",
+            )
+        else:
+            payload = self._render_whole_numbers(
+                self.client, f'"{table}"', new_rows.select(*columns)
+            )
+            # encode the whole payload BEFORE the first write: a
+            # rejected value (lone surrogate) writes nothing
+            rows = self._render_timestamps(payload).collect()
+            chunks = list(_copy_chunks(rows, columns))
+            if not chunks:
+                return
+            landing, stage = 'pg_temp."__al_values"', None
+            self.client.execute(f"DROP TABLE IF EXISTS {landing}")
+            self.client.execute(
+                f'CREATE TEMP TABLE "__al_values" AS '
+                f'SELECT {quoted} FROM "{table}" WITH NO DATA'
+            )
+            self.client.copy_in(
+                f"COPY {landing} ({quoted}) FROM STDIN", chunks
+            )
+        source = self._merge_source(table, landing, quoted, columns)
         self.client.execute(
             f'INSERT INTO "{table}" ({quoted}) '
-            f"SELECT {quoted} FROM ("
-            f"{self._merge_source(table, tmp, quoted, columns)}"
-            ") AS __new "
+            f"SELECT {quoted} FROM ({source}) AS __new "
             "ON CONFLICT DO NOTHING"
         )
-        self.client.execute(f"DROP TABLE {tmp}")
+        # transactional: rolls back with the block, in which case the
+        # exit sweep drops an executor landing's orphan
+        self.client.execute(f"DROP TABLE {landing}")
+        if stage is not None and not self._in_transaction:
+            self._staging.discard(stage)
+        decision = "driver" if stage is None else "executor"
+        merge = "distinct" if source.startswith("SELECT DISTINCT") else "except"
+        logger.info(
+            "pg_write table=%s landing=%s merge=%s",
+            table,
+            decision,
+            merge,
+            extra={
+                "op": "pg_write",
+                "decision": decision,
+                "merge": merge,
+                "table": table,
+            },
+        )
 
     def _merge_source(
         self, table: str, staging: str, quoted: str, columns: list[str]
     ) -> str:
-        """The merge statement's row source, shared by both physical
-        write paths.
+        """The merge statement's row source over the landing table.
 
-        Default: ``staging EXCEPT SELECT … FROM target`` — the
-        HASHABLE exact-value null-safe already-present filter (see the
-        comments at the call sites), which both dedups staging and
-        keeps re-loads of identical data from growing CONSTRAINT-LESS
-        tables.  When a covering UNIQUE/PK constraint guarantees that
-        an exactly-present row conflicts (:meth:`_unique_covers`), the
+        Default: ``landing EXCEPT SELECT … FROM target`` — the
+        null-safe already-present filter, which also dedups the landing
+        (executor task retries may duplicate partition rows) and keeps
+        re-loads of identical data from growing CONSTRAINT-LESS tables.
+        ``EXCEPT`` is exact SQL VALUE equality with set semantics
+        (numeric 1.5 ≡ 1.50, float -0 ≡ 0, NULLs not distinct) that
+        PostgreSQL executes as a linear, hashable HashSetOp.  A
+        hand-rolled ``NOT EXISTS`` with ``IS NOT DISTINCT FROM`` has the
+        same semantics but cannot hash: it plans a Nested Loop Anti
+        Join, O(landing × target), measured 239 s where this shape
+        takes ~4 s.
+
+        When a covering UNIQUE/PK constraint guarantees that an
+        exactly-present row conflicts (:meth:`_unique_covers`), the
         EXCEPT's O(target) scan per load is provably redundant — ``ON
         CONFLICT DO NOTHING`` alone already provides both idempotency
-        layers — so the source collapses to ``SELECT DISTINCT`` over
-        staging only: an incremental load into a billion-row
-        constrained fact table then touches the index, not the heap.
+        layers — so the source collapses to ``SELECT DISTINCT`` over the
+        landing only: an incremental load into a billion-row constrained
+        fact table then touches the index, not the heap.
 
-        Documented side effect of the skip (round-11 advice): ``ON
-        CONFLICT DO NOTHING`` evaluates identity/sequence defaults
-        BEFORE arbitration, so re-loading an already-present payload
-        into a covered table with a ``GENERATED ... AS IDENTITY``
-        column consumes sequence values for the skipped rows —
-        surrogate-id GAPS grow by up to the payload size per re-load
-        (the EXCEPT layer used to keep those rows out of the INSERT
-        entirely).  Gaps are semantically harmless (identity columns
-        promise uniqueness, not density) and PostgreSQL sequences hold
-        2^63 values, but a pipeline that re-loads a large static
-        payload hourly into an ``integer`` identity column could
-        exhaust 2^31 in ~weeks.  Mitigation (round 12): the skip is
-        policy-gated by ``except_prefilter`` — ``"auto"`` (default)
-        AUTO-RETAINS the EXCEPT layer when the target carries a narrow
-        (int2/int4) identity or serial column, so the exhaustion
-        scenario never skips; ``"always"`` retains it unconditionally
-        for operators who care about gap growth on wide identities
-        too.  See OPERATIONS.md § Operating the PostgreSQL sink.
+        Side effect of the skip: ``ON CONFLICT DO NOTHING`` evaluates
+        identity/sequence defaults BEFORE arbitration, so re-loading an
+        already-present payload into a covered table with a
+        ``GENERATED ... AS IDENTITY`` column consumes sequence values
+        for the skipped rows — surrogate-id GAPS grow by up to the
+        payload size per re-load.  Gaps are semantically harmless
+        (identity columns promise uniqueness, not density) and a bigint
+        sequence holds 2^63 values, but hourly re-loads of a large
+        static payload could exhaust an ``integer`` identity's 2^31 in
+        weeks, so the EXCEPT layer stays whenever the target carries a
+        narrow (int2/int4) identity or serial column
+        (:meth:`_narrow_identity`).  See OPERATIONS.md § Operating the
+        PostgreSQL sink.
         """
-        if (
-            self.except_prefilter != "always"
-            and self._unique_covers(table, columns)
-            and not self._narrow_identity(table)
-        ):
+        covered = self._unique_covers(table, columns)
+        if covered and not self._narrow_identity(table):
             return f"SELECT DISTINCT {quoted} FROM {staging}"
         return (
             f"SELECT {quoted} FROM {staging} "
@@ -904,10 +889,10 @@ class PostgresConnector(BaseConnector):
 
     def _narrow_identity(self, table: str) -> bool:
         """True when *table* has an int2/int4 identity or serial
-        column — the sequence-exhaustion hazard the ``"auto"`` policy
-        guards (a 2^31 sequence consumed by skipped re-insert rows).
-        Probed fresh per write like :meth:`_unique_covers` (a type
-        change by another session must flip the next load's plan);
+        column — the sequence-exhaustion hazard that keeps the merge's
+        EXCEPT layer (a 2^31 sequence consumed by skipped re-insert
+        rows).  Probed fresh per write like :meth:`_unique_covers` (a
+        type change by another session must flip the next load's plan);
         one indexed catalog lookup per write.
         """
         rows = self._rows(
@@ -923,59 +908,6 @@ class PostgresConnector(BaseConnector):
             "           LIKE 'nextval(%')"
         )
         return bool(rows and rows[0]["n"])
-
-    def _copy_write(
-        self, table: str, new_rows: DataFrame, columns: list[str]
-    ) -> None:
-        """Distributed idempotent insert: executors COPY partitions of
-        *new_rows* concurrently into a fresh unlogged staging table,
-        then ONE server-side statement merges it into *table* —
-
-        ``INSERT … SELECT … FROM (staging EXCEPT SELECT … FROM table)
-        ON CONFLICT DO NOTHING``
-
-        — the same two idempotency layers as the driver path (EXCEPT
-        is the HASHABLE exact-value null-safe spelling of the
-        pre-filter — see the comment at the statement; real
-        constraints still arbitrate genuine conflicts).  No row ever
-        crosses the driver.
-
-        Transactional shape (SURVEY §7.4 stage-validate-swap): staging
-        lives in its own schema, created and COPY'd over autocommit
-        connections so executors can see it even while the driver
-        connection is mid-transaction; the merge and the staging DROP
-        run on the driver connection, so they commit or roll back with
-        the surrounding ``with`` block.  Rolled-back staging leftovers
-        are swept on ``__exit__``/``close``; ``sweep_staging`` clears
-        anything a crashed driver left behind.
-        """
-        quoted = ", ".join(f'"{c}"' for c in columns)
-        qualified, stage = self._stage_frame(
-            new_rows,
-            columns,
-            like_sql=f'SELECT {quoted} FROM "{table}"',
-            prefix=f"stage_{table}",
-        )
-        # The null-safe already-present filter is ``EXCEPT``: exact SQL
-        # VALUE equality with set semantics (it also dedups staging, so
-        # no separate DISTINCT), executed as a linear HashSetOp.  A
-        # hand-rolled ``NOT EXISTS`` with ``IS NOT DISTINCT FROM`` has
-        # the same semantics but CANNOT hash — it plans the merge as a
-        # Nested Loop Anti Join, O(staging × target): a 10,000× plan-
-        # cost blowup already at 100k × 100k (EXPLAIN-verified), i.e.
-        # every incremental fact load would go quadratic.
-        self.client.execute(
-            f'INSERT INTO "{table}" ({quoted}) '
-            f"SELECT {quoted} FROM ("
-            f"{self._merge_source(table, qualified, quoted, columns)}"
-            ") AS __new "
-            "ON CONFLICT DO NOTHING"
-        )
-        # transactional: rolls back with the block, in which case the
-        # exit sweep drops the orphan
-        self.client.execute(f"DROP TABLE {qualified}")
-        if not self._in_transaction:
-            self._staging.discard(stage)
 
     def _stage_frame(
         self,
@@ -993,7 +925,7 @@ class PostgresConnector(BaseConnector):
         AUTOCOMMIT connections so executors can see it even while the
         driver connection is mid-transaction; task retries may duplicate
         partition rows, which every consumer neutralizes (the write
-        merge SELECTs DISTINCT, the compare checksums DISTINCT).
+        merge's EXCEPT or DISTINCT, the compare's DISTINCT checksum).
         Returns ``(qualified_name, stage_name)``; the stage is
         registered for the exit/close sweeps.
         """
@@ -1007,10 +939,13 @@ class PostgresConnector(BaseConnector):
                 f"CREATE UNLOGGED TABLE {qualified} AS {like_sql} "
                 "WITH NO DATA"
             )
+            self._staging.add(stage)
+            out = self._render_whole_numbers(
+                aux, qualified, frame.select(*columns)
+            )
         finally:
             aux.close()
-        self._staging.add(stage)
-        out = self._render_timestamps(frame.select(*columns))
+        out = self._render_timestamps(out)
         if (
             out.rdd.getNumPartitions() > self.copy_connections
         ):  # cap concurrent server connections
@@ -1039,7 +974,7 @@ class PostgresConnector(BaseConnector):
         process timezone enters: every connection this connector opens
         is pinned ``SET TIME ZONE 'UTC'``, so a ``timestamptz`` landing
         stores the exact instant and a ``timestamp`` landing stores the
-        canonical UTC wall clock, and both physical paths land
+        canonical UTC wall clock, and both landings receive
         bit-identical values.  NTZ timestamps are zone-free wall clocks —
         a plain string cast is canonical.
         """
@@ -1053,6 +988,62 @@ class PostgresConnector(BaseConnector):
                 col = ops.to_utc_wall_clock(col)
             if isinstance(fld.dataType, ts):
                 col = col.cast("string").alias(fld.name)
+            exprs.append(col)
+        return frame.select(*exprs)
+
+    @staticmethod
+    def _render_whole_numbers(
+        client: PGWireClient, relation: str, frame: DataFrame
+    ) -> DataFrame:
+        """Render whole-valued fractional cells bound for INTEGER columns
+        of *relation* as integer text JVM-side, so ``3.0`` lands as
+        ``3``.
+
+        COPY text enters through the target type's input function, and
+        PostgreSQL's integer input rejects ``3.0`` and ``2.0``
+        (``22P02``) although the value is exact.  A double/float or
+        decimal(p, s>0) column headed for an int2/int4/int8 column
+        sends a whole value as its integer text; any other value keeps
+        its plain string cast, which the integer input still rejects
+        (``1.5``, ``NaN``), so nothing is rounded.  Columns headed for
+        any other type are untouched.  The column types come from one
+        ``LIMIT 0`` probe of *relation* over *client* (the driver
+        landing probes the target, :meth:`_stage_frame` its freshly
+        created staging table), sent only when the payload has a
+        fractional column.
+        """
+        fractional = [
+            f.name
+            for f in frame.schema.fields
+            if isinstance(f.dataType, (DoubleType, FloatType))
+            or (isinstance(f.dataType, DecimalType) and f.dataType.scale > 0)
+        ]
+        if not fractional:
+            return frame
+        quoted = ", ".join(f'"{c}"' for c in fractional)
+        meta = client.query(f"SELECT {quoted} FROM {relation} LIMIT 0")
+        integral = {
+            name
+            for name, oid in zip(meta.columns, meta.oids, strict=True)
+            if oid in _INTEGER_OIDS
+        }
+        if not integral:
+            return frame
+        exprs = []
+        for fld in frame.schema.fields:
+            col = F.col(fld.name)
+            if fld.name in integral:
+                if isinstance(fld.dataType, DecimalType):
+                    whole = col % 1 == 0
+                    as_int = col.cast(DecimalType(fld.dataType.precision, 0))
+                else:  # a whole double below 2^63 converts exactly
+                    whole = (col % 1 == 0) & (F.abs(col) < F.lit(2.0**63))
+                    as_int = col.cast("long")
+                col = (
+                    F.when(whole, as_int.cast("string"))
+                    .otherwise(col.cast("string"))
+                    .alias(fld.name)
+                )
             exprs.append(col)
         return frame.select(*exprs)
 

@@ -16,19 +16,15 @@ and are re-expressed here:
    re-plans otherwise.
 
 2. **Surrogate keys** (DB autoincrement, read back via
-   sqlite_connector.py:45-61): two strategies —
-   ``key_strategy="row_number"`` (default) computes ``max(existing id) +
-   dense rank ordered by the natural key`` on the *new rows only*.  The
+   sqlite_connector.py:45-61): ``max(existing id) + dense rank ordered
+   by the natural key`` on the *new rows only*.  The
    rank is a single-partition window only when the payload is provably
    small (``load`` threads its input count through as an upper bound);
    large or unknown payloads take a distributed range-partitioned
    ranking with per-partition offsets — identical ids, no single-task
    sort, scales to billion-member first bulk loads.  The max-id scan is
    fused into the write lineage as a broadcast cross-join (no driver
-   round-trip per table).  ``key_strategy="hash64"`` assigns
-   ``xxhash64(natural key)`` — no ordering pass at all, for pipelines
-   that don't need dense sequential ids (collision probability
-   ~n^2/2^65).
+   round-trip per table).
 
 3. **Transactions** (commit/rollback around the ``with`` block,
    sqlite_connector.py:197-204): writes accumulate as *pending appends*
@@ -55,7 +51,7 @@ import uuid
 from collections.abc import Callable, Iterable
 from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
-from typing import TYPE_CHECKING, Literal
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -605,9 +601,6 @@ class SparkConnector(BaseConnector):
         reference sqlite_connector.py:84-147).  When ``None`` (default)
         tables are in-memory DataFrames registered as temp views —
         the ``":memory:"`` analogue.
-    key_strategy:
-        Surrogate-key generation: ``"row_number"`` (exact autoincrement
-        parity) or ``"hash64"`` (fully distributed, for huge tables).
     dtype_adapters:
         The Spark analogue of the reference's custom-dtype passthrough
         (``allow_custom_dtypes`` + sqlite3 adapters/converters,
@@ -621,11 +614,10 @@ class SparkConnector(BaseConnector):
         Broadcast the dimension side of the loader's key-retrieval merge
         instead of letting the static planner pick SortMergeJoin —
         pinned appends carry no size statistics, so without the hint
-        every key merge shuffles the *fact* side.  Default (``None``):
-        on for ``row_number`` strategy (keyed tables are dimension
-        tables in a star load), off for ``hash64`` (which targets entity
-        tables beyond broadcast scale).  Pass an explicit bool to
-        override; with it off, AQE re-plans small joins at runtime.
+        every key merge shuffles the *fact* side.  On by default
+        (keyed tables are dimension tables in a star load); turn it off
+        for dimensions too large to broadcast, and AQE re-plans small
+        joins at runtime.
     partition_by:
         ``{table_name: [column, ...]}`` — physical partitioning for
         managed catalog tables (the 100 TB layout knob the reference's
@@ -658,22 +650,15 @@ class SparkConnector(BaseConnector):
         spark: SparkSession,
         *,
         database: str | None = None,
-        key_strategy: Literal["row_number", "hash64"] = "row_number",
         dtype_adapters: dict[str, tuple] | None = None,
         partition_by: dict[str, list[str]] | None = None,
         bucket_by: dict[str, tuple[int, list[str]]] | None = None,
-        broadcast_dims: bool | None = None,
+        broadcast_dims: bool = True,
         recover: bool = True,
     ) -> None:
         self.spark = spark
         self.database = database
-        self.key_strategy = key_strategy
-        # hash64 signals entity tables beyond dimension scale, where
-        # broadcasting the key fetch would blow the broadcast limit —
-        # default the hint off there and let AQE pick at runtime
-        self._broadcast_dims = (
-            key_strategy != "hash64" if broadcast_dims is None else broadcast_dims
-        )
+        self._broadcast_dims = broadcast_dims
         self.dtype_adapters = dtype_adapters or {}
         self.partition_by = partition_by or {}
         self.bucket_by = bucket_by or {}
@@ -2525,14 +2510,8 @@ class SparkConnector(BaseConnector):
         pk = meta.primary_key
         if not pk or pk in payload.columns:
             return payload
-        if self.key_strategy == "hash64":
-            # deterministic, fully distributed: no window, no max-scan
-            return payload.withColumn(
-                pk, F.xxhash64(*[F.col(f"`{c}`") for c in columns])
-            )
-
-        # row_number strategy: ids are max(existing) + dense rank ordered
-        # by the natural key.  Two physical shapes, identical ids:
+        # ids are max(existing) + dense rank ordered by the natural key.
+        # Two physical shapes, identical ids:
         # - small payloads (bound known and under max_window_rows, the
         #   incremental-dimension-load case): one single-partition window
         #   over just this load's novel members;

@@ -1804,13 +1804,12 @@ def test_except_prefilter_auto_blocks_narrow_identity_gap(
         db.close()
 
 
-def test_except_prefilter_always_blocks_wide_identity_gap(
+def test_wide_identity_keeps_except_skip(
     spark: SparkSession, pg_database: tuple[EmbeddedPostgres, str]
 ) -> None:
-    """On a bigint identity the ``"auto"`` policy keeps the documented
-    skip (gaps are harmless at 2^63) — the gap is observable — while
-    ``except_prefilter="always"`` opts back into the EXCEPT layer for
-    zero sequence consumption."""
+    """On a bigint identity the merge keeps the documented skip (gaps
+    are harmless at 2^63): an all-duplicate re-load of 30 rows into the
+    covered table consumes 30 sequence values."""
     db = _connector(spark, pg_database)
     try:
         db.execute_ddl(
@@ -1831,34 +1830,195 @@ def test_except_prefilter_always_blocks_wide_identity_gap(
             f"SELECT pg_sequence_last_value('{seq}'::regclass)"
         ).rows[0][0]
         base = last()
-        with db:  # auto policy skips the EXCEPT: the gap grows
+        with db:  # the skip: ON CONFLICT alone, the gap grows
             db.load(flat)
-        grown = last()
-        assert grown == base + 30
-        server, name = pg_database
-        strict = PostgresConnector(
+        assert last() == base + 30
+        (n,) = db.client.query("SELECT count(*) FROM gap_wide").rows[0]
+        assert n == 30
+    finally:
+        db.close()
+
+
+def _recorded(db: PostgresConnector, monkeypatch: pytest.MonkeyPatch) -> list:
+    """Record every statement *db* sends on its driver connection as
+    ``(kind, sql)`` (``execute`` sends through ``query``); executor and
+    aux connections are not seen."""
+    sent: list[tuple[str, str]] = []
+    for kind in ("query", "copy_in"):
+        orig = getattr(db.client, kind)
+
+        def call(sql, *args, _kind=kind, _orig=orig):  # noqa: ANN001, ANN202
+            sent.append((_kind, sql))
+            return _orig(sql, *args)
+
+        monkeypatch.setattr(db.client, kind, call)
+    return sent
+
+
+def test_both_landings_send_one_merge_then_drop(
+    spark: SparkSession,
+    pg_database: tuple[EmbeddedPostgres, str],
+    monkeypatch: pytest.MonkeyPatch,
+) -> None:
+    """Each insert, on either landing, sends exactly one ``INSERT INTO
+    "<t>" … ON CONFLICT DO NOTHING`` followed directly by one ``DROP
+    TABLE <landing>``, and the two landings' merge statements differ
+    only by the landing table's name: the merge text is built once."""
+    server, name = pg_database
+    merges: dict[str, tuple[str, str]] = {}
+    for label, threshold in (("driver", 10**9), ("executor", 0)):
+        db = PostgresConnector(
             spark,
             sock_dir=server.sock_dir,
             port=server.port,
             database=name,
-            except_prefilter="always",
+            copy_threshold=threshold,
         )
         try:
-            with strict:
-                strict.load(flat)
-            assert last() == grown  # zero further consumption
-        finally:
-            strict.close()
-        with pytest.raises(ValueError, match="except_prefilter"):
-            PostgresConnector(
-                spark,
-                sock_dir=server.sock_dir,
-                port=server.port,
-                database=name,
-                except_prefilter="never",
+            if label == "driver":
+                db.execute_ddl("CREATE TABLE st (k text, v bigint)")
+            sent = _recorded(db, monkeypatch)
+            frame = spark.createDataFrame(
+                [(f"{label}1", 1), (f"{label}2", None)], "k string, v long"
             )
-    finally:
-        db.close()
+            db.insert(frame, table="st", _known_count=2)
+            staging_left = set(db._staging)
+        finally:
+            db.close()
+        inserts = [
+            i for i, (_, sql) in enumerate(sent) if sql.startswith("INSERT")
+        ]
+        assert len(inserts) == 1, sent
+        (at,) = inserts
+        insert = sent[at][1]
+        assert insert.startswith('INSERT INTO "st" ("k", "v") ')
+        assert insert.endswith(" ON CONFLICT DO NOTHING")
+        kind, drop = sent[at + 1]
+        assert kind == "query" and drop.startswith("DROP TABLE ")
+        landing = drop.removeprefix("DROP TABLE ")
+        assert landing in insert
+        assert not [sql for _, sql in sent if sql == drop][1:]
+        merges[label] = (landing, insert.replace(landing, "<landing>"))
+        if label == "driver":
+            assert landing == 'pg_temp."__al_values"'
+            assert [k for k, _ in sent[:3]] == ["query", "query", "copy_in"]
+            assert sent[0][1] == f"DROP TABLE IF EXISTS {landing}"
+            assert sent[2][1].startswith(f"COPY {landing} ")
+        else:
+            assert landing.startswith('"_al_staging"."stage_st_')
+            assert not [k for k, _ in sent if k == "copy_in"]
+        assert not staging_left  # discarded after the drop
+    assert merges["driver"][1] == merges["executor"][1]
+    assert merges["driver"][0] != merges["executor"][0]
+
+
+def test_pg_write_decision_record(
+    spark: SparkSession,
+    pg_database: tuple[EmbeddedPostgres, str],
+    caplog: pytest.LogCaptureFixture,
+) -> None:
+    """Each write emits one INFO record on the ``sql_autoloader_spark``
+    logger naming its landing (``driver``/``executor``) and merge source
+    (``except``/``distinct``)."""
+    import logging as _logging
+
+    server, name = pg_database
+    seen = []
+    for label, threshold in (("driver", 10**9), ("executor", 0)):
+        db = PostgresConnector(
+            spark,
+            sock_dir=server.sock_dir,
+            port=server.port,
+            database=name,
+            copy_threshold=threshold,
+        )
+        try:
+            db.execute_ddl(
+                f"CREATE TABLE free_{label} (k text, v bigint);"
+                f"CREATE TABLE keyed_{label} ("
+                "  id bigint GENERATED ALWAYS AS IDENTITY PRIMARY KEY,"
+                "  k text UNIQUE NOT NULL, v bigint)"
+            )
+            frame = spark.createDataFrame([("a", 1)], "k string, v long")
+            for table in (f"free_{label}", f"keyed_{label}"):
+                caplog.clear()
+                with caplog.at_level(
+                    _logging.INFO, logger="sql_autoloader_spark"
+                ):
+                    db.insert(frame, table=table, _known_count=1)
+                recs = [
+                    r
+                    for r in caplog.records
+                    if getattr(r, "op", None) == "pg_write"
+                ]
+                assert len(recs) == 1
+                seen.append((recs[0].table, recs[0].decision, recs[0].merge))
+                assert recs[0].levelno == _logging.INFO
+        finally:
+            db.close()
+    assert seen == [
+        ("free_driver", "driver", "except"),
+        ("keyed_driver", "driver", "distinct"),
+        ("free_executor", "executor", "except"),
+        ("keyed_executor", "executor", "distinct"),
+    ]
+
+
+def test_whole_fractional_values_land_in_integer_columns(
+    spark: SparkSession,
+    pg_database: tuple[EmbeddedPostgres, str],
+    caplog: pytest.LogCaptureFixture,
+) -> None:
+    """A double or decimal column holding whole numbers loads into
+    integer columns on both landings (``3.0`` → 3, ``Decimal("2.0")``
+    → 2) and the load's server-side compare stages it without falling
+    back, while ``1.5`` is still refused by the integer input function
+    (``22P02``) with nothing stored; float and numeric targets keep
+    the fraction."""
+    server, name = pg_database
+    for label, threshold in (("driver", 10**9), ("executor", 0)):
+        db = PostgresConnector(
+            spark,
+            sock_dir=server.sock_dir,
+            port=server.port,
+            database=name,
+            copy_threshold=threshold,
+        )
+        try:
+            db.execute_ddl(
+                "DROP TABLE IF EXISTS wi;"
+                "CREATE TABLE wi (i integer, b bigint,"
+                " s smallint, f double precision, n numeric)"
+            )
+            frame = spark.createDataFrame(
+                [
+                    (3.0, Decimal("2.0"), -0.0, 3.0, Decimal("2.0")),
+                    (None, None, None, 0.5, Decimal("0.5")),
+                ],
+                "i double, b decimal(10,1), s double, f double,"
+                " n decimal(10,1)",
+            )
+            caplog.clear()
+            with db:
+                db.load(frame)
+            assert not [r for r in caplog.records if "falling back" in r.message]
+            rows = db.client.query(
+                "SELECT i, b, s, f, n FROM wi ORDER BY f"
+            ).rows
+            assert rows == [
+                (None, None, None, 0.5, Decimal("0.5")),
+                (3, 2, 0, 3.0, Decimal("2.0")),
+            ]
+            for bad in (
+                spark.createDataFrame([(1.5,)], "i double"),
+                spark.createDataFrame([(Decimal("2.5"),)], "b decimal(10,1)"),
+            ):
+                with pytest.raises(Exception, match="22P02"):
+                    db.insert(bad, table="wi", _known_count=1)
+            (n,) = db.client.query("SELECT count(*) FROM wi").rows[0]
+            assert n == 2  # the refused rows stored nothing
+        finally:
+            db.close()
 
 
 def test_start_retries_when_auto_port_bind_race_lost() -> None:

@@ -1,4 +1,5 @@
-"""Every top-level public ``def``/``class`` of the package is reached.
+"""Every top-level public ``def``/``class`` of the package is reached,
+and each connector's constructor options are pinned.
 
 A name counts as reached when it occurs (as a whole word) anywhere in
 the package, ``__spark_entry__.py``, ``bench.py``, ``perfbench/`` or
@@ -10,9 +11,15 @@ lingering as a second implementation to keep in step.
 from __future__ import annotations
 
 import ast
+import inspect
 import re
 from collections import Counter
 from pathlib import Path
+
+from sql_autoloader_spark.connectors.jdbc import JDBCConnector
+from sql_autoloader_spark.connectors.postgres import PostgresConnector
+from sql_autoloader_spark.connectors.spark_catalog import SparkConnector
+from sql_autoloader_spark.connectors.sqlite import SQLiteConnector
 
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "sql_autoloader_spark"
@@ -67,3 +74,56 @@ def test_every_public_definition_is_reached() -> None:
         + "\n".join(unreached)
     )
 
+
+#: every constructor parameter of each connector: a new option (a user
+#: setting that picks a code path) needs a visible edit here
+CONNECTOR_OPTIONS: dict[str, tuple[str, ...]] = {
+    "SparkConnector": (
+        "spark",
+        "database",
+        "dtype_adapters",
+        "partition_by",
+        "bucket_by",
+        "broadcast_dims",
+        "recover",
+    ),
+    "PostgresConnector": (
+        "spark",
+        "client",
+        "sock_dir",
+        "host",
+        "port",
+        "user",
+        "database",
+        "password",
+        "tls",
+        "tls_ca",
+        "tls_verify_hostname",
+        "copy_threshold",
+        "copy_connections",
+        "read_copy_bytes",
+        "snapshot_exports",
+    ),
+    "SQLiteConnector": ("spark", "db_path", "allow_custom_dtypes"),
+    "JDBCConnector": (
+        "spark",
+        "url",
+        "dialect",
+        "properties",
+        "unique_constraints",
+        "num_partitions",
+    ),
+}
+
+
+def test_connector_options_are_pinned() -> None:
+    found = {
+        cls.__name__: tuple(inspect.signature(cls.__init__).parameters)[1:]
+        for cls in (
+            SparkConnector,
+            PostgresConnector,
+            SQLiteConnector,
+            JDBCConnector,
+        )
+    }
+    assert found == CONNECTOR_OPTIONS

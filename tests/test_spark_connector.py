@@ -295,25 +295,6 @@ def test_dtype_adapters_roundtrip(spark: SparkSession) -> None:
     assert decoded == {(1, 2), (3,)}
 
 
-def test_hash64_key_strategy(spark: SparkSession) -> None:
-    """The distributed surrogate-key strategy round-trips the same data."""
-    ddl = """
-    CREATE TABLE a (id INTEGER PRIMARY KEY, a TEXT UNIQUE NOT NULL);
-    CREATE TABLE b (a_id INTEGER REFERENCES a (id), b TEXT UNIQUE NOT NULL);
-    """
-    data = spark.createDataFrame(
-        [("one", "een"), ("two", "twee")], "a string, b string"
-    )
-    db = SparkConnector(spark, key_strategy="hash64")
-    db.execute_ddl(ddl)
-    with db:
-        db.load(data)
-    joined = spark.sql(
-        "SELECT a.a as a, b.b as b FROM a LEFT JOIN b ON b.a_id = a.id"
-    )
-    assert rowset(joined) == rowset(data)
-
-
 def test_failed_insert_and_retrieve_raises(spark: SparkSession) -> None:
     """Uniqueness conflict on a KEYED table (insert-and-retrieve path):
     with the subset check folded into the key merge, the conflict must
