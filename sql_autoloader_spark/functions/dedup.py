@@ -7,16 +7,16 @@ Design rules for 100 TB:
   exact similarity is then verified only on candidates.  The three LSH
   families (MinHash, SimHash, embedding hyperplanes) share one candidate
   generator, :func:`_bucket_pairs`; batch MinHash and the stream admitter
-  share :func:`_signed_shingles` and :func:`_band_keys`.
+  share one front end, :func:`_minhash_front`.
 - **Exact dedup is one keyed shuffle**: ``groupBy(fingerprint)`` compiles
   to partial+final HashAggregate (map-side combined).
-- All hashing uses ``xxhash64`` (JVM-side).  The Python touchpoints are
-  the Arrow-vectorized signature folds
-  (:func:`minhash_signature_vectorized`, :func:`simhash_vectorized`) —
+- All hashing is Spark's ``xxhash64``; token hashes are always taken
+  JVM-side.  The Python touchpoints are Arrow-vectorized numpy passes
+  over them (:func:`_minhash_front`, :func:`simhash_vectorized`) —
   Spark evaluates higher-order-function lambdas interpreted (no
-  codegen), so a numpy matrix fold beats the interpreted per-token
-  array passes by ~10x; the integer math is exact and bit-identical to
-  the JVM expression forms (differential-tested).
+  codegen), so a numpy pass beats the interpreted per-token array
+  passes by ~10x; the integer math is exact and bit-identical to the
+  JVM expression forms (differential-tested).
 - **Pin lifetime**: the fuzzy builders ``persist()`` internal frames
   (signatures, counted buckets) so multi-consumer plans compute them
   once.  Each builder releases the pins of its own PREVIOUS invocation
@@ -31,12 +31,13 @@ from __future__ import annotations
 
 import logging
 import threading
-from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from sql_autoloader_spark.functions.text import (
     bind_once,
@@ -334,7 +335,8 @@ def _gram_keys(text_col: str, ngram_words: int, hashed: bool) -> Column:
     (portable, oracle-checkable) or xxhash64 over windows of per-token
     hashes (8-byte keys, strings never materialized — ~3× cheaper map
     stage; used by the span ops' ``hash_grams`` scale path; MinHash
-    shingles use the same :func:`_hash_windows`)."""
+    shingles are the same hashes, taken in numpy by
+    :func:`_minhash_front`)."""
     if not hashed:
         return word_shingles(F.col(text_col), ngram_words)
     # bind the token-hash array once — element_at in the window lambda
@@ -524,10 +526,8 @@ def minhash_signature_from_hashes(
     hashes: Column, *, num_hashes: int, seed: int = 42
 ) -> Column:
     """Signature from an already-hashed shingle array (values in
-    ``[0, p)``).  Keeping the base-hash array as its own (materialized)
-    column keeps this expression tree small — inlining the xxhash64
-    base into all *num_hashes* permutations makes Catalyst analysis
-    itself a bottleneck on wide signatures."""
+    ``[0, p)``): the JVM expression form of the signature
+    :func:`_minhash_front` folds in numpy, kept as the tests' reference."""
     params = _minhash_params(num_hashes, seed)
     return F.array(
         *[
@@ -554,97 +554,6 @@ def _minhash_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signature_vectorized(
-    hashes: Column, *, num_hashes: int, seed: int = 42
-) -> Column:
-    """Arrow-vectorized MinHash permutations (numpy), bit-identical to
-    :func:`minhash_signature_from_hashes`.
-
-    Spark evaluates higher-order-function lambdas *interpreted* (no
-    codegen), so the pure-JVM signature costs ~num_hashes passes per
-    shingle — the dominant cost of the whole LSH pipeline.  Here the
-    base xxhash64 values stay JVM-side; only the (a*h+b) mod p min-fold
-    runs in numpy: values < 2^31 keep a*h < 2^62, exact in int64, so
-    results match the JVM expression exactly.  This is the 100 TB path:
-    one Arrow batch transfer of int64 arrays, vectorized O(shingles ×
-    num_hashes) per batch.
-
-    HAZARD: pass a column, not an expression windowing a lambda-bound
-    array (:func:`_gram_keys`'s hashed form).  Wherever the input column
-    is projected away (e.g. a recompute after the pins are released)
-    Catalyst inlines the expression, the UDF is never extracted, and the
-    query fails with ``[INTERNAL_ERROR] Cannot evaluate expression:
-    sign(...)``.
-    """
-
-    from pyspark.sql.functions import pandas_udf
-
-    params = _minhash_params(num_hashes, seed)
-    a = np.array([p[0] for p in params], dtype=np.int64)
-    b = np.array([p[1] for p in params], dtype=np.int64)
-
-    @pandas_udf("array<bigint>")
-    def sign(batch: pd.Series) -> pd.Series:
-        # Whole-batch vectorization: concatenate every row's shingle
-        # hashes into ONE flat int64 array, then per permutation run a
-        # single modular-affine pass + np.minimum.reduceat at the row
-        # offsets — num_hashes passes over the batch total instead of
-        # one small (num_hashes × n) matrix per row (per-row numpy
-        # dispatch overhead dominated the old form).  Working set stays
-        # ~2 flat arrays regardless of num_hashes.
-        lengths = np.fromiter(
-            (0 if hs is None else len(hs) for hs in batch),
-            dtype=np.int64,
-            count=len(batch),
-        )
-        nonempty = lengths > 0
-        if not nonempty.any():
-            # bit-parity with the JVM form: array_min over an empty
-            # shingle set yields NULL per permutation (a sentinel
-            # value here would band all empty docs into one bucket
-            # in one engine and not the other)
-            return pd.Series([[None] * num_hashes for _ in batch])
-        flat = np.concatenate(
-            [np.asarray(hs, dtype=np.int64) for hs in batch if hs is not None and len(hs)]
-        )
-        ne_lengths = lengths[nonempty]
-        # (num_hashes, n_nonempty_rows): values < 2^31 keep a*h < 2^62,
-        # exact in int64 — bit-identical to the JVM expression.  Two
-        # regimes (measured): short docs → reduceat streams the whole
-        # batch per permutation (amortizes numpy dispatch, ~2× faster);
-        # long docs → a per-row (num_hashes × n) block stays cache-hot
-        # while reduceat's num_hashes full passes thrash memory (~2×
-        # slower).  Crossover ≈ 1k shingles/doc.
-        if flat.size // max(len(ne_lengths), 1) <= 1024:
-            offsets = np.zeros(len(ne_lengths), dtype=np.int64)
-            np.cumsum(ne_lengths[:-1], out=offsets[1:])
-            mins = np.empty((num_hashes, len(ne_lengths)), dtype=np.int64)
-            for i in range(num_hashes):
-                mins[i] = np.minimum.reduceat(
-                    (a[i] * flat + b[i]) % _MERSENNE31, offsets
-                )
-            sigs = mins.T
-        else:
-            sigs = np.empty((len(ne_lengths), num_hashes), dtype=np.int64)
-            pos = 0
-            for j, n in enumerate(ne_lengths):
-                h = flat[pos : pos + n]
-                pos += n
-                sigs[j] = (
-                    (a[:, None] * h[None, :] + b[:, None]) % _MERSENNE31
-                ).min(axis=1)
-        out, j = [], 0
-        for n in lengths:
-            if n == 0:
-                out.append([None] * num_hashes)
-            else:
-                out.append(sigs[j])
-                j += 1
-        return pd.Series(out)
-
-    return sign(hashes)
-
-
 def _check_minhash_params(
     num_hashes: int, bands: int, shingle_words: int
 ) -> int:
@@ -661,68 +570,140 @@ def _check_minhash_params(
     return num_hashes // bands
 
 
-def _signed_shingles(
+#: Spark's ``XXH64`` primes, for the numpy form of ``xxhash64``
+_XXH_P1, _XXH_P2, _XXH_P3, _XXH_P4, _XXH_P5 = np.array(
+    [0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+     0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5],
+    dtype=np.uint64,
+)  # fmt: skip
+
+
+def _rotl64(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _xxhash64(cols: list[np.ndarray], seed: int = 42) -> np.ndarray:
+    """Spark's ``xxhash64(c1, …, ck)`` over non-null ``bigint`` columns
+    (int64 arrays of one shape): ``XXH64.hashLong`` chained from *seed*
+    through the columns, wrapping in uint64 as the JVM's longs do."""
+    h = np.full(np.shape(cols[0]), seed, dtype=np.uint64)
+    with np.errstate(over="ignore"):
+        for c in cols:
+            x = np.asarray(c, dtype=np.int64).view(np.uint64)
+            h = h + _XXH_P5 + np.uint64(8)
+            h ^= _rotl64(x * _XXH_P2, 31) * _XXH_P1
+            h = _rotl64(h, 27) * _XXH_P1 + _XXH_P4
+            h ^= h >> np.uint64(33)
+            h *= _XXH_P2
+            h ^= h >> np.uint64(29)
+            h *= _XXH_P3
+            h ^= h >> np.uint64(32)
+    return h.view(np.int64)
+
+
+def _minhash_front(
     df: DataFrame,
     id_col: str,
     text_col: str,
+    *,
+    num_hashes: int,
+    bands: int,
     shingle_words: int,
-    sign: Callable[[Column], Column],
+    seed: int = 42,
 ) -> DataFrame:
-    """``(doc, sh, sig)``: each document's distinct hashed word shingles
-    in ``[0, p)`` and their MinHash signature ``sign(sh)``.  Documents
-    too short to form a single shingle are dropped: their empty shingle
-    set would give a degenerate all-null signature that glues them into
-    one giant bucket.
+    """``(doc, sh, bk)``: each document's distinct hashed word shingles
+    ``sh`` in ``[0, p)`` and the *bands* bucket keys ``bk`` of their
+    MinHash signature.  Batch MinHash joins on these keys and the stream
+    admitter stores them, so both build them here.
 
-    Shingle strings are never materialized: building them (slice +
-    concat_ws, both interpreted HOF lambdas) costs ~10x more than
-    everything else in the LSH pipeline combined.  The verify Jaccard
-    therefore runs over hashed shingle *sets* — identical to the
-    string-set Jaccard up to ~n²/2³² hash collisions.  ``th`` is a
-    column, not a bound lambda: see :func:`minhash_signature_vectorized`.
+    The token hashes stay on the JVM (:func:`_token_hashes`, as in
+    every text operator); one ``mapInArrow`` pass takes them to band
+    keys in numpy, bit-identical to the JVM chain :func:`_hash_windows`
+    → ``pmod`` → ``array_distinct`` → :func:`minhash_signature_from_hashes`
+    → per-band ``xxhash64`` (differential-tested), which Spark evaluates
+    as interpreted lambdas and must re-plan on every stream batch.
+    Documents with NULL text or fewer than *shingle_words* tokens emit
+    no row: their empty shingle set would give a degenerate all-null
+    signature that glues them into one giant bucket.  Shingle strings
+    are never materialized: the verify Jaccard runs over hashed shingle
+    sets, identical up to ~n²/2³² hash collisions.
     """
-    return (
-        df.select(
-            F.col(id_col).alias("doc"), _token_hashes(text_col).alias("th")
-        )
-        .where(F.size("th") >= shingle_words)
-        .select(
-            "doc",
-            F.array_distinct(
-                F.transform(
-                    _hash_windows(F.col("th"), shingle_words),
-                    lambda h: F.pmod(h, F.lit(_MERSENNE31)),
-                )
-            ).alias("sh"),
-        )
-        .select("doc", "sh", sign(F.col("sh")).alias("sig"))
+    rows_per_band = _check_minhash_params(num_hashes, bands, shingle_words)
+    params = _minhash_params(num_hashes, seed)
+    a = np.array([p[0] for p in params], dtype=np.int64)
+    b = np.array([p[1] for p in params], dtype=np.int64)
+    src = df.select(
+        F.col(id_col).alias("doc"), _token_hashes(text_col).alias("th")
+    )
+
+    def fuse(batches):  # noqa: ANN001, ANN202
+        for batch in batches:
+            yield _minhash_batch(batch, a, b, shingle_words, rows_per_band)
+
+    longs = ArrayType(LongType(), containsNull=False)
+    return src.mapInArrow(
+        fuse,
+        StructType(
+            [src.schema["doc"], StructField("sh", longs), StructField("bk", longs)]
+        ),
     )
 
 
-def _band_keys(signed: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
-    """``(doc, band, bucket)`` of a :func:`_signed_shingles` frame,
-    bucket = xxhash64 of a band's minhashes.  Batch MinHash joins on
-    these keys and the stream admitter stores them, so both build them
-    here."""
-    return signed.select(
-        "doc",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.element_at("sig", b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
+def _minhash_batch(
+    batch: pa.RecordBatch,
+    a: np.ndarray,
+    b: np.ndarray,
+    shingle_words: int,
+    rows_per_band: int,
+) -> pa.RecordBatch:
+    """One Arrow batch of :func:`_minhash_front`: ``(doc, th)`` →
+    ``(doc, sh, bk)``."""
+    doc, th = batch.column(0), batch.column(1)
+    offsets = th.offsets.to_numpy().astype(np.int64)
+    n_tok = np.diff(offsets)
+    keyed = (n_tok >= shingle_words) & ~th.is_null().to_numpy(
+        zero_copy_only=False
+    )
+    # windows: row k has n_tok - w + 1 shingles, starting at its offset
+    counts = n_tok[keyed] - (shingle_words - 1)
+    row = np.repeat(np.arange(len(counts)), counts)
+    pos = np.repeat(offsets[:-1][keyed] - (np.cumsum(counts) - counts), counts)
+    pos += np.arange(len(pos))
+    values = th.values.to_numpy()
+    sh = _xxhash64([values[pos + w] for w in range(shingle_words)]) % _MERSENNE31
+    # array_distinct: the first occurrence of each (row, shingle), in
+    # order (row < 2^32 and shingle < 2^31 pack into one int64 key)
+    first = np.unique((row << 31) | sh, return_index=True)[1]
+    first.sort()
+    sh, row = sh[first], row[first]
+    sh_offsets = np.zeros(len(counts) + 1, dtype=np.int32)
+    np.cumsum(np.bincount(row, minlength=len(counts)), out=sh_offsets[1:])
+    # Two signature regimes (measured): short docs → reduceat streams
+    # the batch once per permutation (~2× faster); long docs → a per-row
+    # (num_hashes × n) block stays cache-hot where reduceat's passes
+    # thrash memory (~2× slower).  Crossover ≈ 1k shingles/doc.
+    sig = np.empty((len(counts), len(a)), dtype=np.int64)
+    if len(counts) and sh.size // len(counts) <= 1024:
+        for i in range(len(a)):
+            sig[:, i] = np.minimum.reduceat(
+                (a[i] * sh + b[i]) % _MERSENNE31, sh_offsets[:-1]
             )
-        ).alias("bb"),
-    ).select("doc", "bb.band", "bb.bucket")
+    else:
+        for j in range(len(counts)):
+            h = sh[sh_offsets[j] : sh_offsets[j + 1]]
+            block = a[:, None] * h[None, :] + b[:, None]
+            sig[j] = (block % _MERSENNE31).min(axis=1)
+    bands = sig.reshape(len(counts), len(a) // rows_per_band, rows_per_band)
+    bk = _xxhash64([bands[:, :, r] for r in range(rows_per_band)])
+    bk_offsets = np.arange(0, bk.size + 1, bk.shape[1], dtype=np.int32)
+    return pa.RecordBatch.from_arrays(
+        [
+            doc.filter(pa.array(keyed)),
+            pa.ListArray.from_arrays(sh_offsets, sh),
+            pa.ListArray.from_arrays(bk_offsets, bk.ravel()),
+        ],
+        names=["doc", "sh", "bk"],
+    )
 
 
 def _bucket_pairs(
@@ -821,20 +802,17 @@ def minhash_lsh_pairs(
 
     Returns ``(id_a, id_b[, jaccard])``, ``id_a < id_b``.
     """
-    rows_per_band = _check_minhash_params(num_hashes, bands, shingle_words)
-    signed = _signed_shingles(
+    # Pin the front: the band self-join reads it on both sides and the
+    # verify stage twice more.  persist (not localCheckpoint): no job at
+    # build time, and the table is tiny (~8*(bands + shingles) B/doc).
+    signed = _minhash_front(
         spread_for_compute(df),
         id_col,
         text_col,
-        shingle_words,
-        lambda sh: minhash_signature_vectorized(sh, num_hashes=num_hashes),
+        num_hashes=num_hashes,
+        bands=bands,
+        shingle_words=shingle_words,
     )
-    # Pin the signatures: the band self-join references this frame on both
-    # sides and the verify stage twice more — without materialization the
-    # (large) signature expression tree is re-analyzed and re-executed 4x.
-    # persist (not localCheckpoint): no job at build time, lineage stays
-    # inspectable, and the signature table it holds is tiny
-    # (~(8*num_hashes + shingles) bytes per doc).
     pins = _fresh_pins("minhash_lsh_pairs")
     signed = signed.persist()
     pins.append(signed)
@@ -845,11 +823,9 @@ def minhash_lsh_pairs(
     # banded frame crosses the network once instead of once per
     # consumer — ReuseExchange does not deduplicate the self-join's two
     # ensured exchanges on its own (measured x10: 3.7 s → 2.5 s).  The
-    # cache lives one generation like ``signed`` above and is the
-    # smaller of the two (3 numeric cols/row vs full shingle arrays +
-    # signatures).
+    # cache lives one generation like ``signed`` above.
     banded = (
-        _band_keys(signed, bands, rows_per_band)
+        signed.select("doc", F.posexplode("bk").alias("band", "bucket"))
         .repartition(F.col("band"), F.col("bucket"))
         .persist()
     )
@@ -944,7 +920,7 @@ def simhash(col: Column, *, bits: int = 64) -> Column:
 def simhash_vectorized(hashes: Column, *, bits: int = 64) -> Column:
     """Arrow-vectorized SimHash fold, bit-identical to :func:`simhash`.
 
-    Same split as :func:`minhash_signature_vectorized`: the per-token
+    Same split as :func:`_minhash_front`: the per-token
     ``xxhash64`` stays JVM-side (pass ``transform(tokens, xxhash64)``),
     and only the bit-count fold runs in numpy — the pure-expression
     version evaluates 64 interpreted branch expressions per token

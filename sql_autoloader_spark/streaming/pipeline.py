@@ -20,6 +20,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import logging
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
@@ -47,6 +48,8 @@ ROCKSDB_PROVIDER = (
 #: its dropped-id set) into its joins only at or below this many keys;
 #: above it the joins are left to AQE (see the admitter's probe comment)
 PROBE_BROADCAST_MAX_KEYS = 4_000_000
+
+_log = logging.getLogger("sql_autoloader_spark")
 
 
 def autoload_stream(
@@ -362,6 +365,23 @@ def fuzzy_dedup_stream(
     return writer.start()
 
 
+def _log_admit(decision: str, batch_id: int, n_keys: int | None = None) -> None:
+    """The one decision record of an admitter call: ``broadcast`` or
+    ``shuffle`` (:data:`PROBE_BROADCAST_MAX_KEYS`), or ``skip``."""
+    _log.info(
+        "fuzzy_admit decision=%s batch_id=%s n_keys=%s",
+        decision,
+        batch_id,
+        n_keys,
+        extra={
+            "op": "fuzzy_admit",
+            "decision": decision,
+            "batch_id": batch_id,
+            "n_keys": n_keys,
+        },
+    )
+
+
 def _fuzzy_admitter(
     *,
     id_col: str,
@@ -379,37 +399,30 @@ def _fuzzy_admitter(
     real mid-batch crash: tests call the admitter directly, fake partial
     failures (e.g. remove the marker), and re-invoke.
     """
+    import hashlib
+    import uuid
+
+    import pyarrow as pa
     from pyspark.errors import AnalysisException
 
     from sql_autoloader_spark.functions.dedup import (
-        _band_keys,
         _check_minhash_params,
-        _signed_shingles,
-        minhash_signature_from_hashes,
+        _minhash_front,
     )
+    from sql_autoloader_spark.ops.dataframe_ops import local_frame
 
-    rows_per_band = _check_minhash_params(num_hashes, bands, shingle_words)
+    _check_minhash_params(num_hashes, bands, shingle_words)
 
     def band_keys(docs: DataFrame) -> DataFrame:
         """(id, band, bucket) of each doc with at least one shingle;
         shorter docs get no keys and admit unconditionally (nothing to
-        near-dup on).  The JVM signature, not batch MinHash's Arrow UDF:
-        it is the faster of the two at micro-batch sizes."""
-        signed = _signed_shingles(
-            docs,
-            id_col,
-            text_col,
-            shingle_words,
-            lambda sh: minhash_signature_from_hashes(
-                sh, num_hashes=num_hashes
-            ),
-        )
-        return _band_keys(signed, bands, rows_per_band).withColumnRenamed(
-            "doc", id_col
-        )
-
-    import hashlib
-    import uuid
+        near-dup on)."""
+        front = _minhash_front(
+            docs, id_col, text_col,
+            num_hashes=num_hashes, bands=bands, shingle_words=shingle_words,
+        )  # fmt: skip
+        bb = F.posexplode("bk").alias("band", "bucket")
+        return front.select(F.col("doc").alias(id_col), bb)
 
     commits_path = f"{store_path}__commits"
     # stable id of this LOGICAL stream: batch ids are only meaningful
@@ -431,6 +444,7 @@ def _fuzzy_admitter(
         ):
             # fully committed before the restart — at-least-once replay,
             # nothing to redo
+            _log_admit("skip", batch_id)
             return
         committed_tokens = [r["token"] for r in commits]
         batch = batch.localCheckpoint(eager=True)
@@ -465,7 +479,9 @@ def _fuzzy_admitter(
         # dropped-id set below, which is at most one row per key.
         # Compaction (below) keeps the store scan itself cheap: few
         # sorted files, not one per batch.
-        small = keys.count() <= PROBE_BROADCAST_MAX_KEYS
+        n_keys = keys.count()
+        small = n_keys <= PROBE_BROADCAST_MAX_KEYS
+        _log_admit("broadcast" if small else "shuffle", batch_id, n_keys)
 
         def bcast(df: DataFrame) -> DataFrame:
             return F.broadcast(df) if small else df
@@ -531,9 +547,12 @@ def _fuzzy_admitter(
         ).write.mode("append").parquet(store_path)
         # THE commit point: both sinks are in place, one tiny append
         # flips the batch committed and its store keys visible
-        spark.createDataFrame(
-            [(stream_id, int(batch_id), token)],
-            "`stream_id` STRING, `batch_id` BIGINT, `token` STRING",
+        # (a JVM LocalRelation: no Python worker runs to write one row)
+        marker = pa.table(
+            {"stream_id": [stream_id], "batch_id": [int(batch_id)], "token": [token]}
+        )
+        local_frame(
+            spark, marker, "`stream_id` STRING, `batch_id` BIGINT, `token` STRING"
         ).write.mode("append").parquet(commits_path)
 
     return admit_batch

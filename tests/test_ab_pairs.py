@@ -60,3 +60,30 @@ def test_ab_pairs_verdicts() -> None:
     rows = {r["metric"]: r for r in ab_pairs.summarize(bench, pairs)}
     assert rows["dedup_recall"]["change_wins"] == 8
     assert not rows["dedup_recall"]["gain_met"]
+
+
+def test_ab_pairs_parent_dir_needs_no_revision(
+    monkeypatch, tmp_path, capsys
+) -> None:
+    """``--parent-dir`` alone is enough and labels the summary with the
+    directory; with neither ``--parent`` nor ``--parent-dir`` the
+    command line is refused before any run."""
+    import pytest
+
+    runs = []
+
+    def fake_run(tree, workload, seed):  # noqa: ANN001, ANN202
+        runs.append(tree)
+        return {"correct": True, "attempted": 1, "failed": 0, **_run(op_ref_ratio=1.0)}
+
+    monkeypatch.setattr(ab_pairs, "run_once", fake_run)
+    argv = ["ab_pairs.py", "--workload", "corpus_dedup", "--seeds", "1-2"]
+    monkeypatch.setattr(sys, "argv", argv)
+    with pytest.raises(SystemExit) as exc:
+        ab_pairs.main()
+    assert exc.value.code == 2 and not runs
+
+    monkeypatch.setattr(sys, "argv", [*argv, "--parent-dir", str(tmp_path)])
+    assert ab_pairs.main() == 0
+    assert len(runs) == 4 and str(tmp_path) in map(str, runs)
+    assert f"2 pairs, parent {tmp_path}" in capsys.readouterr().out

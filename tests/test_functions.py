@@ -1570,33 +1570,98 @@ def test_pil_decode_path_with_fake_codec(monkeypatch) -> None:
     assert abs(sum(vec2) - 1.0) < 1e-9
 
 
-def test_minhash_vectorized_matches_expression(spark: SparkSession) -> None:
-    """The whole-batch Arrow fold (np.minimum.reduceat over the
-    concatenated shingle hashes) must be bit-identical to the pure-JVM
-    permutation expression — including empty shingle sets (all-NULL
-    signature), single-shingle rows, and mixed batches."""
-    from pyspark.sql import functions as F
-
-    rows = [
-        (0, list(range(100, 300, 7))),
-        (1, [5]),
-        (2, []),                      # empty -> [None] * num_hashes
-        (3, list(range(2**30, 2**30 + 50))),   # near the modulus
-        (4, [0, 2**31 - 2]),  # extremes of the folded-hash domain
-        (5, list(range(1000))),
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_minhash_front_matches_jvm_chain(
+    spark: SparkSession, id_type: str
+) -> None:
+    """The fused Arrow front's ``(doc, sh, bk)`` is bit-identical to the
+    JVM chain it replaces (token hashes → shingle windows → pmod →
+    array_distinct → permutation signature → per-band xxhash64), keys
+    exactly the docs with at least one shingle, and passes the id
+    through with its own type.  The long doc's batch averages over 1024
+    shingles per doc, so the per-row signature regime runs beside the
+    reduceat one."""
+    texts = [
+        None,
+        "",
+        "one",
+        "two words",
+        "exactly three words",
+        "a b a b a b a b c",  # repeated shingles
+        "tab\tseparated\nlines  and   runs of   spaces here",
+        "Σίσυφος İstanbul ÜBER straße Σ İ Ü σ i̇ ü",
+        "the quick brown fox jumps over the lazy dog " * 3,
+        " ".join(f"w{i}" for i in range(12_000)),
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, h array<bigint>")
-    both = docs.select(
-        "doc_id",
-        dedup.minhash_signature_from_hashes(
-            F.col("h"), num_hashes=16
-        ).alias("expr_sig"),
-        dedup.minhash_signature_vectorized(
-            F.col("h"), num_hashes=16
-        ).alias("vec_sig"),
+    rows = [
+        (str(i) if id_type == "string" else i, t) for i, t in enumerate(texts)
+    ]
+    docs = spark.createDataFrame(rows, f"doc_id {id_type}, text string")
+
+    front = dedup._minhash_front(
+        docs, "doc_id", "text", num_hashes=32, bands=8, shingle_words=3
+    )
+    assert front.schema["doc"].dataType == docs.schema["doc_id"].dataType
+    sig = dedup.minhash_signature_from_hashes(F.col("sh"), num_hashes=32)
+    ref = (
+        docs.select(
+            F.col("doc_id").alias("doc"),
+            dedup._token_hashes("text").alias("th"),
+        )
+        .where(F.size("th") >= 3)
+        .select(
+            "doc",
+            F.array_distinct(
+                F.transform(
+                    dedup._hash_windows(F.col("th"), 3),
+                    lambda h: F.pmod(h, F.lit(dedup._MERSENNE31)),
+                )
+            ).alias("sh"),
+        )
+        .select("doc", "sh", sig.alias("sig"))
+        .select(
+            "doc",
+            "sh",
+            F.array(
+                *[
+                    F.xxhash64(
+                        *[F.element_at("sig", b * 4 + r + 1) for r in range(4)]
+                    )
+                    for b in range(8)
+                ]
+            ).alias("bk"),
+        )
+    )
+    got = {r.doc: (r.sh, r.bk) for r in front.collect()}
+    want = {r.doc: (r.sh, r.bk) for r in ref.collect()}
+    assert got == want
+    assert sorted(got, key=int) == [
+        rows[i][0] for i in (4, 5, 6, 7, 8, 9)
+    ]
+    assert len(got[rows[9][0]][0]) > 1024
+
+
+def test_numpy_xxhash64_matches_spark(spark: SparkSession) -> None:
+    """The numpy ``xxhash64`` the MinHash front uses equals Spark's
+    ``xxhash64`` over 1–4 ``bigint`` columns, at the int64 extremes and
+    on seeded random values."""
+    import numpy as np
+
+    edge = [0, 1, -1, 2**63 - 1, -(2**63 - 1), -(2**63)]
+    rng = np.random.default_rng(7)
+    vals = edge + rng.integers(-(2**63), 2**63 - 1, 58, dtype=np.int64).tolist()
+    rows = [tuple(vals[(i + 7 * k) % len(vals)] for k in range(4)) for i in range(len(vals))]
+    cols = ["c0", "c1", "c2", "c3"]
+    got = spark.createDataFrame(
+        rows, ", ".join(f"{c} bigint" for c in cols)
+    ).select(
+        *cols, *[F.xxhash64(*cols[:k]).alias(f"h{k}") for k in range(1, 5)]
     ).collect()
-    for row in both:
-        assert row.expr_sig == row.vec_sig, row
+    for k in range(1, 5):
+        ours = dedup._xxhash64(
+            [np.array([r[c] for r in got], dtype=np.int64) for c in cols[:k]]
+        )
+        assert ours.tolist() == [r[f"h{k}"] for r in got], k
 
 
 def test_simhash_vectorized_matches_expression(spark: SparkSession) -> None:

@@ -633,6 +633,23 @@ def test_minhash_banded_self_join_shares_one_exchange(
     )
 
 
+def test_minhash_tokenizes_each_doc_once(spark: SparkSession) -> None:
+    """MinHash tokenizes and hashes each document once: every
+    ``split(`` of the executed plan feeds the one fused Arrow front
+    (one per ``MapInArrow``; the cached front reprints under each
+    reference), no short-doc ``Filter`` over ``size(transform(…))``
+    is pushed below the token-hash projection to tokenize the doc a
+    second time, and no per-row Arrow UDF runs beside the front."""
+    queries = {**entry_mod.queries(), **entry_mod.scale_path_queries()}
+    df = queries["docs_minhash_pairs"](spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    fronts = plan.count("MapInArrow")
+    assert fronts > 0
+    assert plan.count("split(") == fronts
+    assert not re.search(r"Filter[^\n]*size\(transform\(", plan)
+    assert "ArrowEvalPython" not in plan
+
+
 def test_runtime_bloom_filter_injected_on_selective_nonbroadcast_join(
     spark: SparkSession, tmp_path
 ) -> None:

@@ -423,24 +423,18 @@ def test_minhash_params_rejected_by_batch_and_stream(
 
 
 def test_stream_band_keys_match_batch_minhash(
-    spark: SparkSession, tmp_path: Path, monkeypatch
+    spark: SparkSession, tmp_path: Path
 ) -> None:
-    """The stream admitter's band keys (JVM signature) and batch
-    minhash_lsh_pairs's banded keys (Arrow signature) are the same
-    ``(id, band, bucket)`` set, too-short docs keyed by neither.  The
-    signature store keeps these buckets forever: a drift between the two
-    sides would silently admit near-duplicates of the batch corpus."""
+    """The band keys the stream admitter stores and batch
+    minhash_lsh_pairs's banded keys are the same ``(id, band, bucket)``
+    set, too-short docs keyed by neither.  The signature store keeps
+    these buckets forever: a drift between the two sides would silently
+    admit near-duplicates of the batch corpus.  Each doc is admitted
+    by its own admitter into its own store, so every stored key belongs
+    to that store's one admitted id."""
     from sql_autoloader_spark.functions import dedup
     from sql_autoloader_spark.streaming import pipeline
 
-    built: list[DataFrame] = []
-    real = dedup._band_keys
-
-    def record(*args) -> DataFrame:  # noqa: ANN002
-        built.append(real(*args))
-        return built[-1]
-
-    monkeypatch.setattr(dedup, "_band_keys", record)
     base = "the quick brown fox jumps over the lazy dog again and again " * 3
     docs = spark.createDataFrame(
         [
@@ -455,18 +449,71 @@ def test_stream_band_keys_match_batch_minhash(
         "doc_id long, text string",
     )
     dedup.minhash_lsh_pairs(docs, id_col="doc_id", text_col="text")
-    pipeline._fuzzy_admitter(
+    (banded,) = (
+        f
+        for f in dedup._PIN_REGISTRY["minhash_lsh_pairs"]
+        if f.columns == ["doc", "band", "bucket"]
+    )
+    batch_keys = {tuple(r) for r in banded.collect()}
+
+    stream_keys = set()
+    for (doc_id,) in docs.select("doc_id").collect():
+        root = tmp_path / str(doc_id)
+        pipeline._fuzzy_admitter(
+            id_col="doc_id",
+            text_col="text",
+            store_path=str(root / "store"),
+            out_path=str(root / "out"),
+            checkpoint_dir=str(root / "ckpt"),
+        )(docs.where(F.col("doc_id") == doc_id), 0)
+        admitted = spark.read.parquet(str(root / "out")).select("doc_id")
+        stream_keys |= {
+            tuple(r)
+            for r in admitted.crossJoin(
+                spark.read.parquet(str(root / "store")).select("band", "bucket")
+            ).collect()
+        }
+    assert batch_keys == stream_keys
+    assert {i for i, _, _ in batch_keys} == {1, 2, 3, 7}
+    assert len(batch_keys) == 4 * 8  # 8 bands per keyed doc
+
+
+@pytest.mark.parametrize("gate", [None, 0], ids=["default_gate", "gate_0"])
+def test_fuzzy_admitter_logs_one_decision_record(
+    spark: SparkSession, tmp_path: Path, monkeypatch, caplog, gate
+) -> None:
+    """Each admitter call emits one ``fuzzy_admit`` INFO record naming
+    the broadcast gate's decision with the key count it already took,
+    or ``skip`` (no count) for an already-committed batch."""
+    import logging
+
+    from sql_autoloader_spark.streaming import pipeline
+
+    if gate is not None:
+        monkeypatch.setattr(pipeline, "PROBE_BROADCAST_MAX_KEYS", gate)
+    admit = pipeline._fuzzy_admitter(
         id_col="doc_id",
         text_col="text",
         store_path=str(tmp_path / "store"),
         out_path=str(tmp_path / "out"),
         checkpoint_dir=str(tmp_path / "ckpt"),
-    )(docs, 0)
-    assert len(built) == 2  # one band-key frame per side
-    batch_keys, stream_keys = ({tuple(r) for r in f.collect()} for f in built)
-    assert batch_keys == stream_keys
-    assert {i for i, _, _ in batch_keys} == {1, 2, 3, 7}
-    assert len(batch_keys) == 4 * 8  # 8 bands per keyed doc
+    )
+    batch = spark.createDataFrame(
+        [(1, "one two three four"), (2, "hi")], "doc_id long, text string"
+    )
+    with caplog.at_level(logging.INFO, logger="sql_autoloader_spark"):
+        admit(batch, 5)
+        admit(batch, 5)  # committed -> skip
+    records = [
+        (r.op, r.decision, r.batch_id, r.n_keys)
+        for r in caplog.records
+        if getattr(r, "op", None) == "fuzzy_admit"
+    ]
+    decision = "broadcast" if gate is None else "shuffle"
+    assert records == [
+        ("fuzzy_admit", decision, 5, 8),
+        ("fuzzy_admit", "skip", 5, None),
+    ]
 
 
 def test_signature_store_compaction_preserves_admissions(

@@ -18,7 +18,8 @@ verdicts follow the repository's review rules:
   than the parent's Q3 - Q1.
 
 The parent checkout is a temporary ``git worktree`` of ``--parent``,
-removed at exit; ``--parent-dir`` uses an existing checkout instead.
+removed at exit; ``--parent-dir`` uses an existing checkout instead
+(``--parent`` is then optional, and the summary names the directory).
 Nothing under ``perfbench/`` is edited.
 
     python3 tools/ab_pairs.py --parent HEAD~1 --workload corpus_dedup \\
@@ -51,7 +52,7 @@ def parse_seeds(spec: str) -> list[int]:
 
 
 @contextlib.contextmanager
-def parent_checkout(rev: str, parent_dir: str | None):
+def parent_checkout(rev: str | None, parent_dir: str | None):
     if parent_dir:
         yield Path(parent_dir)
         return
@@ -134,12 +135,14 @@ def summarize(bench: dict, pairs: list[dict]) -> list[dict]:
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--parent", required=True, help="parent revision")
+    ap.add_argument("--parent", help="parent revision (or --parent-dir)")
     ap.add_argument("--parent-dir", help="existing parent checkout to use")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help='e.g. "31-36,41-44"')
     ap.add_argument("--out", help="write every run and the summary as JSON")
     args = ap.parse_args()
+    if not (args.parent or args.parent_dir):
+        ap.error("one of --parent or --parent-dir is required")
 
     bench = json.loads((ROOT / "BENCHMARK.json").read_text())
     pairs = []
@@ -155,7 +158,7 @@ def main() -> int:
             pairs.append(pair)
 
     rows = summarize(bench, pairs)
-    print(f"{args.workload}: {len(pairs)} pairs, parent {args.parent}")
+    print(f"{args.workload}: {len(pairs)} pairs, parent {args.parent_dir or args.parent}")
     for side in ("parent", "change"):
         failed = sum(p[side]["failed"] for p in pairs)
         attempted = sum(p[side]["attempted"] for p in pairs)
